@@ -8,23 +8,11 @@ import org.apache.spark.sql.SparkSession
   * state rather than charging JVM start to whichever query runs first.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", H.scratchDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
-    // Warm-up: scheduler, parquet footers, codegen + shuffle machinery.
-    // Best-effort per table: a missing table is the queries' problem to
-    // report, not a reason to abort the whole benchmark.
+  /** Warm-up: scheduler, parquet footers, codegen + shuffle machinery.
+    * Best-effort per table: a missing table is the queries' problem to
+    * report, not a reason to abort the whole benchmark. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Seq("lineitem", "orders", "customer", "documents", "embeddings")
       .foreach(t => scala.util.Try(H.tbl(spark, sfDir, t).count()))
@@ -53,20 +41,50 @@ object Bench {
         .saveAsTable("bench_warmup.t")
       spark.sql("DROP DATABASE bench_warmup CASCADE")
     }
+  }
 
-    // Machine calibration: a fixed single-thread integer workload whose
-    // wall time rides along in the result line. The sandbox machine has
-    // changed speed between rounds — totals are only comparable across
-    // rounds after normalizing by this (and even then, per-query variance
-    // on this box is large; see README's benchmark environment note).
-    val calibMs = {
-      val t0 = System.nanoTime()
-      var x = 0L; var i = 0
-      while (i < 200000000) { x += (i.toLong * i) ^ (x >>> 31); i += 1 }
-      val ms = (System.nanoTime() - t0) / 1e6
-      System.err.println(f"[bench] calib x=$x ${ms}%.0f ms")
-      ms
-    }
+  /** Machine calibration: a fixed single-thread integer workload whose
+    * wall time (ms) rides along in the result line. The sandbox machine has
+    * changed speed between rounds — totals are only comparable across
+    * rounds after normalizing by this (and even then, per-query variance
+    * on this box is large; see README's benchmark environment note). */
+  def calibMs(): Double = {
+    val t0 = System.nanoTime()
+    var x = 0L; var i = 0
+    while (i < 200000000) { x += (i.toLong * i) ^ (x >>> 31); i += 1 }
+    val ms = (System.nanoTime() - t0) / 1e6
+    System.err.println(f"[bench] calib x=$x ${ms}%.0f ms")
+    ms
+  }
+
+  /** The committed board, `BENCH_FULL.json`, as the fields its readers
+    * use: the retry reference here and Verify's longest-first order. */
+  final case class Board(sf: Option[String], cpus: Option[Int],
+      calibMs: Option[Double], clean: Boolean, queries: Map[String, Double])
+
+  /** None when the file is absent or unreadable. */
+  def committedBoard(): Option[Board] = scala.util.Try {
+    val txt = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("BENCH_FULL.json")), "UTF-8")
+    val body = txt.substring(txt.indexOf("\"queries\":{") + 11)
+    Board(
+      sf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1)),
+      cpus = """"cpus":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt),
+      calibMs = """"calib_ms":(\d+)""".r.findFirstMatchIn(txt)
+        .map(_.group(1).toDouble),
+      clean = txt.contains("\"errors\":[]") &&
+        txt.contains("\"stall_suspect\":[]"),
+      queries = """"([A-Za-z0-9_]+)":([0-9.Ee+-]+)""".r.findAllMatchIn(body)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap)
+  }.toOption
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = Session.defaultCores
+    val spark = Session(cpus)
+    warmUp(spark, sfDir)
+
+    val calibMs = Bench.calibMs()
     // r10 verdict item 2: the single-thread probe missed the drift that
     // actually moved the board (1.32x per-query slide vs +2.8% calib) —
     // multicore contention and I/O stalls are invisible to a scalar loop.
@@ -80,9 +98,9 @@ object Bench {
     //     measures the disk-flush stalls that produce 4x outlier entries.
     val calibParMs = {
       val t0 = System.nanoTime()
-      spark.range(0L, 10000000L, 1L, cpus.toInt)
+      spark.range(0L, 10000000L, 1L, cpus)
         .selectExpr("id", "id % 64 as k")
-        .repartition(2 * cpus.toInt, org.apache.spark.sql.functions.col("k"))
+        .repartition(2 * cpus, org.apache.spark.sql.functions.col("k"))
         .sortWithinPartitions("id")
         .selectExpr("sum(id) as s").collect()
       val ms = (System.nanoTime() - t0) / 1e6
@@ -131,22 +149,16 @@ object Bench {
     val RetryFloorSec = 1.0 // 3x on a sub-second query is timer noise
     // Reference per-query seconds from the last clean committed run,
     // calib-scaled to this host. Absent/degraded file → absolute-only.
-    val reference: Map[String, Double] = scala.util.Try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("BENCH_FULL.json")), "UTF-8")
-      require(txt.contains("\"errors\":[]"), "reference run has errors")
-      require(txt.contains("\"stall_suspect\":[]"), "reference run has stalls")
-      // a reference from a different scale factor would mis-trigger every
-      // retry AND, if this run is clean, get overwritten with wrong-scale
-      // times — only same-sf references are usable
-      require(txt.contains(s""""sf":"$sfDir""""), "reference run is another sf")
-      val refCalib = """"calib_ms":(\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toDouble).getOrElse(calibMs)
-      val scale = calibMs / refCalib
-      val body = txt.substring(txt.indexOf("\"queries\":{") + 11)
-      """"([A-Za-z0-9_]+)":([0-9.Ee+-]+)""".r.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2).toDouble * scale).toMap
-    }.getOrElse(Map.empty)
+    // A reference from a different scale factor would mis-trigger every
+    // retry AND, if this run is clean, get overwritten with wrong-scale
+    // times — only same-sf references are usable.
+    val board = committedBoard()
+    val reference: Map[String, Double] = board
+      .filter(b => b.clean && b.sf.contains(sfDir))
+      .map { b =>
+        val scale = calibMs / b.calibMs.getOrElse(calibMs)
+        b.queries.map { case (k, v) => k -> v * scale }
+      }.getOrElse(Map.empty)
     if (reference.nonEmpty)
       System.err.println(s"[bench] retry reference loaded: ${reference.size} queries")
     // Noise arbitration (r9 hardening; the r8 official record shipped 3
@@ -286,13 +298,8 @@ object Bench {
     // lower-core or legacy (no "cpus" field) reference, so the reference
     // converges to the full-core board instead of deadlocking on
     // whichever core count adopted first.
-    val sameSfAsRef = scala.util.Try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("BENCH_FULL.json")), "UTF-8")
-      val cpusOk = """"cpus":(\d+)""".r.findFirstMatchIn(txt)
-        .forall(m => cpus.toInt >= m.group(1).toInt)
-      txt.contains(s""""sf":"$sfDir"""") && cpusOk
-    }.getOrElse(true)
+    val sameSfAsRef =
+      board.forall(b => b.sf.contains(sfDir) && b.cpus.forall(cpus >= _))
     val fullTarget =
       if (failed.isEmpty && suspects.isEmpty && refRegressionOk && sameSfAsRef)
         "BENCH_FULL.json"

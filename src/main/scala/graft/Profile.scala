@@ -1,32 +1,23 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart, SparkListenerJobEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
 
-/** Empirical profiler for one query (guide §1): splits wall time into
-  * driver-side plan construction / analysis+optimization vs execution, and
-  * prints per-stage task-time/shuffle metrics so the hot stage is visible
-  * without the UI. `runMain graft.Profile <name> [sfDir] [reps]`.
+/** Empirical profiler (guide §1): after Bench's warm-up, runs each listed
+  * query `reps` times through one shared session, splits its wall time into
+  * driver-side plan construction (with any eager work inside the query
+  * function) vs the final count, and prints per-stage task-time/shuffle
+  * metrics so the hot stage is visible without the UI. Ends with the total
+  * over each query's best rep and the JVM's codegen-compiler telemetry;
+  * `reps = 1` over a query list is the A/B mini-bench (codegen cold per
+  * query, as in Bench). `runMain graft.Profile <q1[,q2,...]> [sfDir] [reps]`.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(',').toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", H.scratchDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    Seq("lineitem", "orders", "customer", "documents", "embeddings")
-      .foreach(t => scala.util.Try(H.tbl(spark, sfDir, t).count()))
+    val spark = Session()
+    Bench.warmUp(spark, sfDir)
 
     final case class StageRow(id: Int, name: String, tasks: Int, taskMs: Long,
         gcMs: Long, shRead: Long, shWrite: Long, wallMs: Long)
@@ -34,7 +25,6 @@ object Profile {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = ()
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
         val m = si.taskMetrics
@@ -45,25 +35,37 @@ object Profile {
       }
     }
 
-    (1 to reps).foreach { r =>
-      stages.clear(); jobs.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val t1 = System.nanoTime() // fn() returned: plan built + any eager work inside
-      val n = df.count()
-      val t2 = System.nanoTime()
-      H.freeLocalCheckpoint(df)
-      Thread.sleep(300) // let the listener bus drain
-      spark.sparkContext.removeSparkListener(listener)
-      println(f"[profile] rep $r: total ${(t2 - t0) / 1e9}%.2f s  (fn+eager ${(t1 - t0) / 1e9}%.2f s, count ${(t2 - t1) / 1e9}%.2f s), $n rows, ${jobs.get()} jobs")
-      import scala.jdk.CollectionConverters._
-      val rows = stages.asScala.toSeq.sortBy(-_.wallMs)
-      println(f"[profile]   stages=${rows.size} wallSum=${rows.map(_.wallMs).sum / 1e3}%.2f s taskSum=${rows.map(_.taskMs).sum / 1e3}%.2f s gcSum=${rows.map(_.gcMs).sum / 1e3}%.2f s shRead=${rows.map(_.shRead).sum / 1e6}%.1f MB")
-      rows.take(12).foreach { s =>
-        println(f"[profile]   stage ${s.id}%4d wall=${s.wallMs}%6d ms task=${s.taskMs}%6d ms gc=${s.gcMs}%4d ms tasks=${s.tasks}%3d shR=${s.shRead / 1024}%6d KB shW=${s.shWrite / 1024}%6d KB  ${s.name.take(90)}")
-      }
+    val best = names.map { name =>
+      name -> (1 to reps).map { r =>
+        stages.clear(); jobs.set(0)
+        spark.sparkContext.addSparkListener(listener)
+        val t0 = System.nanoTime()
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val t1 = System.nanoTime() // fn() returned: plan built + any eager work inside
+        val n = df.count()
+        val t2 = System.nanoTime()
+        H.freeLocalCheckpoint(df)
+        Thread.sleep(300) // let the listener bus drain
+        spark.sparkContext.removeSparkListener(listener)
+        println(f"[profile] $name rep $r: total ${(t2 - t0) / 1e9}%.2f s  (fn+eager ${(t1 - t0) / 1e9}%.2f s, count ${(t2 - t1) / 1e9}%.2f s), $n rows, ${jobs.get()} jobs")
+        import scala.jdk.CollectionConverters._
+        val rows = stages.asScala.toSeq.sortBy(-_.wallMs)
+        println(f"[profile]   stages=${rows.size} wallSum=${rows.map(_.wallMs).sum / 1e3}%.2f s taskSum=${rows.map(_.taskMs).sum / 1e3}%.2f s gcSum=${rows.map(_.gcMs).sum / 1e3}%.2f s shRead=${rows.map(_.shRead).sum / 1e6}%.1f MB")
+        rows.take(12).foreach { s =>
+          println(f"[profile]   stage ${s.id}%4d wall=${s.wallMs}%6d ms task=${s.taskMs}%6d ms gc=${s.gcMs}%4d ms tasks=${s.tasks}%3d shR=${s.shRead / 1024}%6d KB shW=${s.shWrite / 1024}%6d KB  ${s.name.take(90)}")
+        }
+        (t2 - t0) / 1e9
+      }.min
     }
+    println(f"[profile] TOTAL ${best.map(_._2).sum}%.2f s over ${names.size} queries")
+    // Codegen-compiler telemetry (drift-free A/B evidence): total janino
+    // compilations and wall ms spent compiling this JVM. The bench runs 742
+    // queries through ONE session, so the global codegen cache's hit rate —
+    // not per-run host luck — decides how much of this is paid repeatedly.
+    val cg = org.apache.spark.metrics.source.CodegenMetrics
+    println(s"[profile] codegen: compiled=${cg.METRIC_COMPILATION_TIME.getCount} " +
+      s"totalMs=${cg.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum} " +
+      s"generatedClasses=${cg.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount}")
     spark.stop()
   }
 }

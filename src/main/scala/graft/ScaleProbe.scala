@@ -36,17 +36,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", H.scratchDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     args.toList match {
       case "gen" :: srcSf :: outDir :: k :: Nil => gen(spark, srcSf, outDir, k.toInt)
       case "run" :: dir1 :: dir2 :: queries :: Nil =>
@@ -170,13 +160,7 @@ object ScaleProbe {
   private def run(spark: SparkSession, dir1: String, dir2: String,
       queries: Seq[String]): Unit = {
     // same calibration workload as Bench, so runs are comparable across boots
-    val calibMs = {
-      val t0 = System.nanoTime()
-      var x = 0L; var i = 0
-      while (i < 200000000) { x += (i.toLong * i) ^ (x >>> 31); i += 1 }
-      System.err.println(s"[probe] calib x=$x")
-      (System.nanoTime() - t0) / 1e6
-    }
+    val calibMs = Bench.calibMs()
     def once(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir).count()

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeUnit.MILLISECONDS
+import scala.concurrent.duration._
+import scala.util.{Failure, Success, Try}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -50,92 +52,83 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    // default to the machine's cores (bounded 32): the driver's budget is
-    // wall-clock, and an un-set env var must not quarter the dump's cores
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", H.scratchDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     // Longest-first scheduling (classic LPT): order by the clean bench
     // reference when present so the streaming heavies launch immediately
     // instead of trailing the makespan. Unknown queries go first (unknown
     // cost is the risk; schedule it early).
-    val refSec: Map[String, Double] = scala.util.Try {
-      val txt = new String(Files.readAllBytes(Paths.get("BENCH_FULL.json")), "UTF-8")
-      val body = txt.substring(txt.indexOf("\"queries\":{") + 11)
-      """"([A-Za-z0-9_]+)":([0-9.Ee+-]+)""".r.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }.getOrElse(Map.empty)
-    val work = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .sortBy { case (name, _) => -refSec.getOrElse(name, 1e9) }
+    val refSec = Bench.committedBoard().map(_.queries).getOrElse(Map.empty)
+    val work = SparkEntry.queries.keys.toSeq
+      .filter(name => only.isEmpty || only(name))
+      .sortBy(name => -refSec.getOrElse(name, 1e9))
 
     val par = math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "6").toInt)
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
-    val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
     val t00 = System.nanoTime()
-    work.foreach { case (name, fn) =>
-      pool.execute { () =>
-        val t0 = System.nanoTime()
-        var df: org.apache.spark.sql.DataFrame = null
-        try {
-          val ss = spark.newSession()
-          df = fn(ss, sfDir)
-          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          // release the result's own localCheckpoint blocks (H.materialized
-          // frees a query's INPUTS; the checkpointed result itself would
-          // otherwise sit in executor storage until GC notices — across ~700
-          // queries that is a steadily rising heap floor, r9 verdict item 5)
-          H.freeLocalCheckpoint(df)
-          val sec = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[verify] $name%-32s ${sec}%7.2f s  (${done.incrementAndGet()}/${work.size}, wall ${(System.nanoTime() - t00) / 1e9}%.0f s)")
-        } catch { case e: Throwable =>
-          // free on the FAILURE path too: a query that dies after its
-          // localCheckpoint materialized would otherwise leak those blocks
-          // across the rest of the run (r10 advice item 3)
-          if (df != null) scala.util.Try(H.freeLocalCheckpoint(df))
-          failed.add(name); done.incrementAndGet()
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-      }
-    }
-    pool.shutdown()
-    pool.awaitTermination(24, java.util.concurrent.TimeUnit.HOURS)
-    // Sequential retry of pool-phase failures: concurrent queries share
-    // the session-wide CacheManager, so two queries caching IDENTICAL
-    // subplans share one InMemoryRelation — the first query's unpersist
-    // can drop it mid-read for the second, whose rebuild then needs a
-    // localCheckpoint that was freed with it ("Block rdd_N does not
-    // exist", observed once in ~6 full boards on the dedup family).
-    // Alone on the session, the retry cannot hit the race.
-    val byName = SparkEntry.queries
-    failed.toArray.map(_.toString).sorted.foreach { name =>
+    def dump(name: String): Unit = {
       val t0 = System.nanoTime()
       var df: org.apache.spark.sql.DataFrame = null
       try {
-        df = byName(name)(spark.newSession(), sfDir)
+        df = SparkEntry.queries(name)(spark.newSession(), sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        // release the result's own localCheckpoint blocks (H.materialized
+        // frees a query's INPUTS; the checkpointed result itself would
+        // otherwise sit in executor storage until GC notices — across ~700
+        // queries that is a steadily rising heap floor, r9 verdict item 5)
         H.freeLocalCheckpoint(df)
-        failed.remove(name)
-        System.err.println(f"[verify] $name%-32s ${(System.nanoTime() - t0) / 1e9}%7.2f s  (sequential retry ok)")
+        val sec = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[verify] $name%-32s ${sec}%7.2f s  (${done.incrementAndGet()}/${work.size}, wall ${(System.nanoTime() - t00) / 1e9}%.0f s)")
       } catch { case e: Throwable =>
-        if (df != null) scala.util.Try(H.freeLocalCheckpoint(df))
-        System.err.println(s"[verify] $name failed on retry: ${e.getMessage}")
+        // free on the FAILURE path too: a query that dies after its
+        // localCheckpoint materialized would otherwise leak those blocks
+        // across the rest of the run (r10 advice item 3)
+        if (df != null) Try(H.freeLocalCheckpoint(df))
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        throw e
       }
     }
+    val failed = pooled(work, par, 24.hours)(dump)
+      .collect { case (name, Failure(_)) => name }.toSeq.sorted
     val wall = (System.nanoTime() - t00) / 1e9
     System.err.println(f"[verify] dump complete: ${work.size - failed.size}/${work.size} ok, wall ${wall}%.1f s, par=$par")
     spark.stop()
-    if (!failed.isEmpty)
-      System.err.println(s"[verify] FAILED: ${failed.toArray.toSeq.map(_.toString).sorted.mkString(", ")}")
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] FAILED: ${failed.mkString(", ")}")
+  }
+
+  /** Runs `run` for every name on a pool of `par` threads, in the given
+    * order, then retries each failure once, alone, in name order: pooled
+    * queries share the session-wide CacheManager, so two queries caching
+    * IDENTICAL subplans share one InMemoryRelation — the first query's
+    * unpersist can drop it mid-read for the second, whose rebuild then
+    * needs a localCheckpoint that was freed with it ("Block rdd_N does not
+    * exist", observed once in ~6 full boards on the dedup family). Alone
+    * on the session, the retry cannot hit the race.
+    *
+    * A pool that misses `deadline` throws, naming the names that did not
+    * finish, rather than returning a partial map. */
+  def pooled[A](names: Seq[String], par: Int, deadline: FiniteDuration)(
+      run: String => A): Map[String, Try[A]] = {
+    def attempt(name: String): Try[A] =
+      try Success(run(name)) catch { case e: Throwable => Failure(e) }
+    val out = new java.util.concurrent.ConcurrentHashMap[String, Try[A]]()
+    // daemon workers: a task stuck past the deadline must not keep the
+    // JVM alive after the throw
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(par, r => {
+      val t = new Thread(r); t.setDaemon(true); t
+    })
+    names.foreach(name => pool.execute(() => { out.put(name, attempt(name)); () }))
+    pool.shutdown()
+    if (!pool.awaitTermination(deadline.toMillis, MILLISECONDS)) {
+      // read before interrupting: an interrupted task records a Failure
+      val unfinished = names.filterNot(out.containsKey).sorted
+      pool.shutdownNow()
+      throw new IllegalStateException(s"pool missed its $deadline deadline; " +
+        s"${unfinished.size} unfinished: ${unfinished.mkString(", ")}")
+    }
+    names.sorted.map { name =>
+      name -> (if (out.get(name).isFailure) attempt(name) else out.get(name))
+    }.toMap
   }
 }

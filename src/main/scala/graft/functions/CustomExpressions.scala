@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types._
@@ -263,31 +262,5 @@ object CustomExpressions {
       "canon_text",
       exprs => { arity("canon_text", 1)(exprs); CanonText(exprs.head) },
       "built-in")
-  }
-}
-
-/** Session-extension wiring for production sessions:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or config
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[CustomExpressions.RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => CustomExpressions.RollingHash(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CustomExpressions.CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CustomExpressions.CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("squared_distance"),
-      new ExpressionInfo(classOf[CustomExpressions.SquaredDistance].getName, "squared_distance"),
-      (exprs: Seq[Expression]) => CustomExpressions.SquaredDistance(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("canon_text"),
-      new ExpressionInfo(classOf[CustomExpressions.CanonText].getName, "canon_text"),
-      (exprs: Seq[Expression]) => CustomExpressions.CanonText(exprs.head)))
-    e.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
-    e.injectOptimizerRule(_ => graft.plans.AsOfJoinFilterPushdown)
   }
 }

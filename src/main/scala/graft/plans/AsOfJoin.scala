@@ -186,9 +186,8 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy for graft's custom logical operators. Production wiring:
-  * `spark.sql.extensions=graft.functions.GraftExtensions`; ad-hoc sessions
-  * use `AsOfJoin.install`. */
+/** Planner strategy for graft's custom logical operators, installed per
+  * session, idempotently, by `AsOfJoin.install`. */
 object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt, tb, tol, fwd) =>

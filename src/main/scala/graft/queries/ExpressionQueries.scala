@@ -15,8 +15,8 @@ object ExpressionQueries extends QueryModule {
 
   def all: Seq[Q] = Seq(
 
-    // Custom scalar Expression through the SQL surface (temp registration —
-    // production sessions use GraftExtensions via spark.sql.extensions).
+    // Custom scalar Expression through the SQL surface (per-session temp
+    // registration, CustomExpressions.registerTemp).
     Q("expr_rolling_hash",
       Some("SELECT doc_id, list_reduce(list_prepend(CAST(7 AS BIGINT), " +
         "list_apply(range(1, length(text) + 1), " +

@@ -478,7 +478,7 @@ object ScaleCorpusQueries extends QueryModule {
       }
 
   /** Centered per-vector arrays + the checkpointed 1-row mean array.
-    * Split out (with [[pcaPass]]) so ExplainCore/PlanGuardsSpec can dump
+    * Split out (with [[pcaPass]]) so graft.Explain/PlanGuardsSpec can dump
     * the iteration's real plan — inside [[pcaFrames]] each pass sits
     * behind a localCheckpoint and explains as an opaque RDD scan. */
   private[graft] def pcaCentered(s: org.apache.spark.sql.SparkSession,

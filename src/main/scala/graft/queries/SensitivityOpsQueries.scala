@@ -23,7 +23,7 @@ import graft.H.tbl
 object SensitivityOpsQueries extends QueryModule {
 
   /** Un-checkpointed (k, doc_id, per-doc shingle SET) grid for
-    * dedup_shingle_grid — split out so ExplainCore can dump the
+    * dedup_shingle_grid — split out so graft.Explain can dump the
     * construction plan (the judged query checkpoints it, which explains
     * as an opaque RDD scan). */
   private[graft] def shingleGridFrame(s: org.apache.spark.sql.SparkSession,

@@ -26,9 +26,10 @@ object StreamingRefresh {
     * storage re-enable it with one conf. */
   def tuneCheckpointConf(spark: SparkSession): Unit = {
     val k = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    // an explicit launch-time setting (spark-submit --conf / builder
-    // .config) wins — only the engine's silent default is overridden
-    if (!spark.sparkContext.getConf.contains(k)) spark.conf.set(k, "false")
+    // an explicit setting wins — launch-time (spark-submit --conf /
+    // builder .config, merged into every session's conf) or session-level
+    // (spark.conf.set); only the engine's silent default is overridden
+    if (!spark.conf.getAll.contains(k)) spark.conf.set(k, "false")
   }
 
   /** File-source stream over a directory of parquet micro-batches.

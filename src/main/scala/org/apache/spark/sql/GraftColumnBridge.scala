@@ -24,8 +24,8 @@ object GraftColumnBridge {
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
 
   /** Idempotent per-session planner-strategy registration (the imperative
-    * twin of SparkSessionExtensions.injectPlannerStrategy, for sessions
-    * built without `spark.sql.extensions`). */
+    * twin of SparkSessionExtensions.injectPlannerStrategy, so it reaches
+    * any session, including ones graft does not build). */
   def installStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]
     if (!cs.experimental.extraStrategies.contains(s))

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{CustomExpressions => CE, GraftExtensions}
+import graft.functions.{CustomExpressions => CE}
 
 class CustomExpressionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -79,11 +78,6 @@ class CustomExpressionsSpec extends AnyFunSuite {
     val viaCol = Seq(21L).toDF("x").select(double_it(col("x"))).collect()(0).getLong(0)
     val viaSql = spark.sql("SELECT double_it(21)").collect()(0).getLong(0)
     assert(viaCol == 42L && viaSql == 42L)
-  }
-
-  test("GraftExtensions registers all three functions without error") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext) // throws on malformed injection
   }
 
   test("canon_text: NFC-composes, strips accents, ASCII fast path is identity") {

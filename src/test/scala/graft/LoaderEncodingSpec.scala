@@ -47,7 +47,7 @@ class LoaderEncodingSpec extends AnyFunSuite {
     val ntzDir = writeFixture(df =>
       df.withColumn("ts", col("ts").cast("timestamp_ntz")))
     // encoding 3: TIMESTAMP(NANOS) surfaces as LongType under
-    // spark.sql.legacy.parquet.nanosAsLong (set in TestSpark) — the r1 shape.
+    // spark.sql.legacy.parquet.nanosAsLong (set by graft.Session) — the r1 shape.
     // Spark can't WRITE nanos parquet, so write the post-read shape directly:
     // a BIGINT nanos column, exactly what H.events receives from the flag.
     val nanosDir = writeFixture(df =>

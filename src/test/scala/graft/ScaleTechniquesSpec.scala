@@ -420,6 +420,23 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     } finally H.freeLocalCheckpoint(pp)
   }
 
+  test("H.globalRank's monotonically_increasing_id layout: pid << 33 | row index") {
+    // globalRank decodes the id as (partition id) << 33 plus the row's
+    // index within its partition; a Spark upgrade that changes that layout
+    // must fail here instead of silently mis-ranking
+    val rows = spark.range(0L, 1000L).repartitionByRange(4, col("id"))
+      .sortWithinPartitions("id")
+      .select(col("id"), monotonically_increasing_id(), spark_partition_id())
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    val parts = rows.groupBy(_._3)
+    assert(parts.size > 1, "needs several partitions")
+    parts.foreach { case (pid, part) =>
+      val inOrder = part.sortBy(_._1).map(_._2) // mids in sort-key order
+      assert(inOrder.forall(_ >>> 33 == pid), inOrder.toSeq)
+      assert(inOrder.map(_ & ((1L << 33) - 1)).toSeq == (0L until part.length).toSeq)
+    }
+  }
+
   test("H.globalCumSum equals the single-window running sum for longs AND decimals") {
     import org.apache.spark.sql.expressions.Window
     val base = H.tbl(spark, sf, "lineitem")

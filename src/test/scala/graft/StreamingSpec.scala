@@ -251,4 +251,18 @@ class StreamingSpec extends AnyFunSuite {
     val v2 = after.filter(col("event_id") === 2).select("value").collect()(0).getDouble(0)
     assert(v2 == 99.0) // cross-batch key update replaced the old version
   }
+
+  test("tuneCheckpointConf keeps a session-level checksum setting") {
+    val k = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    val src = Files.createTempDirectory("stream_conf").toString
+    val schema = org.apache.spark.sql.Encoders.product[Ev].schema
+    val set = spark.newSession()
+    set.conf.set(k, "true")
+    StreamingRefresh.fileStream(set, schema, src)
+    assert(set.conf.get(k) == "true")
+    // a session that set nothing still gets the harness default
+    val unset = spark.newSession()
+    StreamingRefresh.fileStream(unset, schema, src)
+    assert(unset.conf.get(k) == "false")
+  }
 }

@@ -11,7 +11,6 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
   java.base/sun.util.calendar; do ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"; done
 mkdir -p /dev/shm/graft-tmp
 exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Djava.io.tmpdir=/dev/shm/graft-tmp \
   -Xmx${SPARK_DRIVER_MEM:-8g} ${GRAFT_JVM_OPTS:-} \
   -cp "$CP" graft.$MAIN "$@"
