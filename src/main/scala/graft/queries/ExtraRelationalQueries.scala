@@ -17,14 +17,17 @@ object ExtraRelationalQueries extends QueryModule {
 
     // O1+O2 as a real DataSource V2 scan: the watermark predicate, column
     // prune, and row pages flow through the connector's $filter/$select
-    // pushdown (graft.sources.ODataSource) instead of hand-built URLs.
+    // pushdown (graft.sources.ODataHttpSource, every page a GET over the
+    // localhost socket) instead of hand-built URLs. Each o03*/o05b shape
+    // has an HTTP-named twin (o03e-h, o05c) over its own entity.
     Q("o03_dsv2_odata_scan",
       Some("SELECT o_orderkey, o_custkey, o_totalprice FROM orders " +
         "WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00' " +
         "ORDER BY o_orderkey"),
       (s, dir) => {
         graft.sources.ODataTestServer.register(s, "orders", s"$dir/orders.parquet")
-        s.read.format("graft.sources.ODataSource")
+        s.read.format("graft.sources.ODataHttpSource")
+          .options(graft.sources.ODataHttpServer.tenantOptions)
           .option("entity", "orders").option("pageSize", "5000").load()
           .filter(col("o_orderdate") >= to_timestamp(lit("1999-01-01 00:00:00")))
           .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -43,7 +46,8 @@ object ExtraRelationalQueries extends QueryModule {
       (s, dir) => {
         graft.sources.ODataTestServer.register(
           s, "orders_topn", s"$dir/orders.parquet")
-        s.read.format("graft.sources.ODataSource")
+        s.read.format("graft.sources.ODataHttpSource")
+          .options(graft.sources.ODataHttpServer.tenantOptions)
           .option("entity", "orders_topn").option("pageSize", "5000").load()
           .select("o_orderkey", "o_totalprice")
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -81,8 +85,7 @@ object ExtraRelationalQueries extends QueryModule {
         val (u, pw) = (ODataHttpServer.user, ODataHttpServer.pass)
         def schemaOf(e: String) = new ODataHttpSource().inferSchema(
           new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-            Map("endpoint" -> ep, "entity" -> e,
-              "user" -> u, "pass" -> pw).asJava))
+            (ODataHttpServer.tenantOptions + ("entity" -> e)).asJava))
         val aggSpecs = Seq(ODataAgg.CountAll,
           ODataAgg.MinOf("s_acctbal"), ODataAgg.MaxOf("s_acctbal"))
         val resp = ODataBatchClient.pull(ep, u, pw, Seq(
@@ -117,9 +120,7 @@ object ExtraRelationalQueries extends QueryModule {
     // localhost HttpServer (basic auth, OData query options in the URL,
     // JSON bodies, $skiptoken paging), and every page is fetched
     // executor-side with java.net.http.HttpClient. $filter (string +
-    // double comparisons), $select, and paging all cross the wire — the
-    // in-memory scan's one admitted gap (the fake socket) closed with
-    // pure-JDK transport.
+    // double comparisons), $select, and paging all cross the wire.
     Q("o03e_dsv2_http_scan",
       Some("SELECT c_custkey, c_name, c_acctbal FROM customer " +
         "WHERE c_acctbal >= 1000.0 AND c_mktsegment = 'BUILDING' " +
@@ -127,12 +128,9 @@ object ExtraRelationalQueries extends QueryModule {
       (s, dir) => {
         graft.sources.ODataTestServer.register(
           s, "customer_http", s"$dir/customer.parquet")
-        val ep = graft.sources.ODataHttpServer.endpoint
         s.read.format("graft.sources.ODataHttpSource")
-          .option("endpoint", ep).option("entity", "customer_http")
-          .option("user", graft.sources.ODataHttpServer.user)
-          .option("pass", graft.sources.ODataHttpServer.pass)
-          .option("pageSize", "100").load()
+          .options(graft.sources.ODataHttpServer.tenantOptions)
+          .option("entity", "customer_http").option("pageSize", "100").load()
           .filter(col("c_acctbal") >= 1000.0 &&
             col("c_mktsegment") === "BUILDING")
           .select("c_custkey", "c_name", "c_acctbal")
@@ -155,7 +153,8 @@ object ExtraRelationalQueries extends QueryModule {
       (s, dir) => {
         graft.sources.ODataTestServer.register(
           s, "orders_gagg", s"$dir/orders.parquet")
-        s.read.format("graft.sources.ODataSource")
+        s.read.format("graft.sources.ODataHttpSource")
+          .options(graft.sources.ODataHttpServer.tenantOptions)
           .option("entity", "orders_gagg").option("pageSize", "5000").load()
           .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01 00:00:00")))
           .groupBy("o_orderpriority")
@@ -187,7 +186,8 @@ object ExtraRelationalQueries extends QueryModule {
         graft.sources.ODataTestServer.registerDf("orders_stream",
           orders.filter(pmod(col("o_orderkey"), lit(3)) =!= 0))
         def pullOnce(): Unit = {
-          val q = s.readStream.format("graft.sources.ODataSource")
+          val q = s.readStream.format("graft.sources.ODataHttpSource")
+            .options(graft.sources.ODataHttpServer.tenantOptions)
             .option("entity", "orders_stream").option("pageSize", "5000").load()
             .writeStream.format("parquet")
             .option("path", sink).option("checkpointLocation", ckpt)
@@ -219,11 +219,8 @@ object ExtraRelationalQueries extends QueryModule {
         graft.sources.ODataTestServer.register(
           s, "orders_gagg_http", s"$dir/orders.parquet")
         s.read.format("graft.sources.ODataHttpSource")
-          .option("endpoint", graft.sources.ODataHttpServer.endpoint)
-          .option("entity", "orders_gagg_http")
-          .option("user", graft.sources.ODataHttpServer.user)
-          .option("pass", graft.sources.ODataHttpServer.pass)
-          .option("pageSize", "5000").load()
+          .options(graft.sources.ODataHttpServer.tenantOptions)
+          .option("entity", "orders_gagg_http").option("pageSize", "5000").load()
           .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01 00:00:00")))
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n"),
@@ -249,13 +246,10 @@ object ExtraRelationalQueries extends QueryModule {
         val sink = s"$tmp/sink"; val ckpt = s"$tmp/ckpt"
         graft.sources.ODataTestServer.registerDf("orders_http_stream",
           orders.filter(pmod(col("o_orderkey"), lit(3)) =!= 0))
-        val ep = graft.sources.ODataHttpServer.endpoint
         def pullOnce(): Unit = {
           val q = s.readStream.format("graft.sources.ODataHttpSource")
-            .option("endpoint", ep).option("entity", "orders_http_stream")
-            .option("user", graft.sources.ODataHttpServer.user)
-            .option("pass", graft.sources.ODataHttpServer.pass)
-            .option("pageSize", "5000").load()
+            .options(graft.sources.ODataHttpServer.tenantOptions)
+            .option("entity", "orders_http_stream").option("pageSize", "5000").load()
             .writeStream.format("parquet")
             .option("path", sink).option("checkpointLocation", ckpt)
             .trigger(Trigger.AvailableNow()).start()
@@ -336,7 +330,8 @@ object ExtraRelationalQueries extends QueryModule {
           s"$dir/orders.parquet", s"$dir/lineitem.parquet",
           parentKey = "o_orderkey", childKey = "l_orderkey",
           subformName = "lineitems_subform", sortCols = Seq("l_linenumber"))
-        val scan = s.read.format("graft.sources.ODataSource")
+        val scan = s.read.format("graft.sources.ODataHttpSource")
+          .options(graft.sources.ODataHttpServer.tenantOptions)
           .option("entity", "orders_expanded").option("pageSize", "5000").load()
           .filter(col("o_orderdate") >= to_timestamp(lit("1998-01-01 00:00:00")))
         graft.ops.Relational.explodeSubform("lineitems_subform", Seq("o_orderkey"))(scan)
@@ -358,11 +353,8 @@ object ExtraRelationalQueries extends QueryModule {
         graft.sources.ODataTestServer.register(
           s, "orders_topn_http", s"$dir/orders.parquet")
         s.read.format("graft.sources.ODataHttpSource")
-          .option("endpoint", graft.sources.ODataHttpServer.endpoint)
-          .option("entity", "orders_topn_http")
-          .option("user", graft.sources.ODataHttpServer.user)
-          .option("pass", graft.sources.ODataHttpServer.pass)
-          .option("pageSize", "5000").load()
+          .options(graft.sources.ODataHttpServer.tenantOptions)
+          .option("entity", "orders_topn_http").option("pageSize", "5000").load()
           .select("o_orderkey", "o_totalprice")
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
           .limit(25)
@@ -385,11 +377,8 @@ object ExtraRelationalQueries extends QueryModule {
           parentKey = "o_orderkey", childKey = "l_orderkey",
           subformName = "lineitems_subform", sortCols = Seq("l_linenumber"))
         val scan = s.read.format("graft.sources.ODataHttpSource")
-          .option("endpoint", graft.sources.ODataHttpServer.endpoint)
-          .option("entity", "orders_expanded_http")
-          .option("user", graft.sources.ODataHttpServer.user)
-          .option("pass", graft.sources.ODataHttpServer.pass)
-          .option("pageSize", "2000").load()
+          .options(graft.sources.ODataHttpServer.tenantOptions)
+          .option("entity", "orders_expanded_http").option("pageSize", "2000").load()
           .filter(col("o_orderdate") >= to_timestamp(lit("1998-01-01 00:00:00")))
         graft.ops.Relational.explodeSubform("lineitems_subform", Seq("o_orderkey"))(scan)
           .select(col("o_orderkey"), col("l_linenumber"), col("l_partkey"),

@@ -120,13 +120,14 @@ object PipelineQueries extends QueryModule {
         // query-unique registry names: generic names ('customer'/'orders')
         // are shared with other queries and specs in the same session, and
         // re-registering a name invalidates any scan planned against its
-        // previous generation (ODataTestServer.fetchPage fails stale refs)
+        // previous generation (the server answers its page GETs 409)
         val entities = Seq("probe_customer" -> "customer", "probe_orders" -> "orders")
         entities.foreach { case (name, table) =>
           graft.sources.ODataTestServer.register(s, name, s"$dir/$table.parquet") }
         entities.map { case (name, _) =>
           val n = scala.util.Try(
-            s.read.format("graft.sources.ODataSource")
+            s.read.format("graft.sources.ODataHttpSource")
+              .options(graft.sources.ODataHttpServer.tenantOptions)
               .option("entity", name).load().limit(1).count()).getOrElse(-1L)
           (name, if (n == 1L) "ok" else "fail", n.toInt)
         }.toDF("entity", "status", "n_rows").orderBy("entity")

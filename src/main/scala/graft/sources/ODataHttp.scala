@@ -14,38 +14,40 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
-/** REAL HTTP transport for the OData connector.
-  *
-  * The DSv2 connector in [[ODataSource]] implements the full pushdown
-  * surface against an in-process registry — its one admitted gap was the
-  * socket: pages were served by a method call, not a network request
-  * (reference transport: HTTPS GETs with basic auth and OData query
-  * options, resources/priorityDataSource.py:246-256,639-746). This module
-  * closes that gap with pure-JDK machinery:
+/** The OData connector, over HTTP — the reference's one transport
+  * (HTTPS GETs with basic auth and OData query options,
+  * resources/priorityDataSource.py:246-256,639-746), in pure-JDK machinery:
   *
   *   - [[ODataHttpServer]]: an actual `com.sun.net.httpserver.HttpServer`
-  *     bound to 127.0.0.1 on an ephemeral port, fronting the same entity
-  *     registry. Speaks OData-shaped JSON: `value` row arrays,
-  *     `@odata.nextLink` continuation with `$skiptoken`, basic-auth 401
-  *     challenges, and `$select/$filter/$top` query options parsed
-  *     server-side from the URL.
-  *   - [[ODataHttpSource]]: a DataSource V2 provider whose scan planning
-  *     does an HTTP preflight (page count + registry generation) and whose
-  *     readers fetch their page with `java.net.http.HttpClient` —
-  *     EXECUTOR-side, over a real TCP socket, with auth headers.
+  *     bound to 127.0.0.1 on an ephemeral port, fronting the
+  *     [[ODataTestServer]] entity registry. Speaks OData-shaped JSON:
+  *     `value` row arrays, `@odata.nextLink` continuation with
+  *     `$skiptoken`, basic-auth 401 challenges, `$select/$filter/$orderby/
+  *     $top/$apply` query options parsed server-side from the URL, and
+  *     4xx for requests it refuses.
+  *   - [[ODataHttpSource]]: the DataSource V2 provider. Catalyst pushdowns
+  *     (`$filter`, `$select`, `$top`, complete top-N, complete `$apply`
+  *     aggregates) become query options; scan planning does an HTTP
+  *     preflight (page count + registry generation) and readers fetch
+  *     their page with `java.net.http.HttpClient` — EXECUTOR-side, over a
+  *     real TCP socket, with auth headers. The same provider is a
+  *     Structured Streaming source (row-cursor offsets, `$skip/$top`).
   *
   * What stays simulated: the dataset behind the server (a demo tenant in
-  * this JVM's memory — the same boundary as before). The schema channel is
-  * the real contract end-to-end: `GET $metadata` serves EDMX (entity
-  * Properties + Key refs + NavigationProperty subforms), and
-  * [[ODataHttpSource.inferSchema]] walks that wire document with
-  * [[graft.schema.MetadataXml]] — the reference's discovery loop
-  * (priorityDataSource.py:347-458) over an actual socket.
+  * this JVM's memory). The schema channel is the real contract
+  * end-to-end: `GET $metadata` serves EDMX (entity Properties + Key refs +
+  * NavigationProperty subforms), and [[ODataHttpSource.inferSchema]] walks
+  * that wire document with [[graft.schema.MetadataXml]] — the reference's
+  * discovery loop (priorityDataSource.py:347-458) over an actual socket.
   */
 object ODataJson {
 
@@ -165,7 +167,7 @@ object ODataFilterSyntax {
 
   private def lit(v: Any): String = v match {
     case s: String => "'" + s.replace("'", "''") + "'"
-    case s: org.apache.spark.unsafe.types.UTF8String =>
+    case s: UTF8String =>
       "'" + s.toString.replace("'", "''") + "'"
     case t: java.sql.Timestamp => s"datetime'${t.toInstant}'"
     case i: java.time.Instant => s"datetime'$i'"
@@ -235,7 +237,7 @@ object ODataFilterSyntax {
 
   /** Result schema of a pushed aggregate: group keys first, aggregates
     * after — the contract both the server's serialization and the
-    * client's parse share (mirrors ODataAggScan.readSchema). */
+    * client's parse share (`ODataHttpAggScan.readSchema`). */
   def aggSchema(full: StructType, specs: Seq[ODataAgg],
       groupCols: Seq[String]): StructType = StructType(
     groupCols.map(c => full(c)) ++ specs.zipWithIndex.map {
@@ -290,11 +292,13 @@ object ODataFilterSyntax {
   }
 }
 
-/** The tenant's OData endpoint as an ACTUAL localhost HTTP service: same
-  * registry and query evaluator as [[ODataTestServer]], but every page now
-  * crosses a real TCP socket with basic auth, URL-encoded OData query
-  * options, JSON bodies, and `@odata.nextLink` continuation. One instance
-  * per JVM on an ephemeral port (no fixed-port collisions across
+/** The tenant's OData endpoint as an ACTUAL localhost HTTP service in
+  * front of the [[ODataTestServer]] registry and query evaluator: every
+  * page crosses a real TCP socket with basic auth, URL-encoded OData query
+  * options, JSON bodies, and `@odata.nextLink` continuation. A request it
+  * refuses is answered 4xx (404 unknown entity, 400 bad query option, 409
+  * page of a re-registered entity); only its own failures are 500. One
+  * instance per JVM on an ephemeral port (no fixed-port collisions across
   * concurrently-forked test/bench JVMs). */
 object ODataHttpServer {
 
@@ -344,6 +348,11 @@ object ODataHttpServer {
 
   def endpoint: String =
     s"http://127.0.0.1:${running.getAddress.getPort}/odata"
+
+  /** Reader options that point [[ODataHttpSource]] at this in-JVM tenant:
+    * endpoint and credentials. Callers add `entity` and `pageSize`. */
+  def tenantOptions: Map[String, String] =
+    Map("endpoint" -> endpoint, "user" -> user, "pass" -> pass)
 
   private def respond(x: HttpExchange, code: Int, body: Array[Byte],
       headers: (String, String)*): Unit = {
@@ -414,7 +423,8 @@ object ODataHttpServer {
       // batch; failures are per-sub-request (status in the response
       // envelope), never the whole batch.
       if (entity == "$batch") {
-        require(x.getRequestMethod == "POST", "odata-http: $batch is POST-only")
+        if (x.getRequestMethod != "POST")
+          throw new ODataRequestError(405, "odata-http: $batch is POST-only")
         val req = mapper.readTree(x.getRequestBody)
         val out = mapper.createObjectNode()
         val arr = out.putArray("responses")
@@ -434,7 +444,7 @@ object ODataHttpServer {
               mapper.readTree(serveEntity(ent, parseQuery(rawQ), rawQ)))
           } catch {
             case e: Throwable =>
-              node.put("status", 500)
+              node.put("status", statusOf(e))
               node.set[ObjectNode]("body", mapper.createObjectNode()
                 .put("error", String.valueOf(e.getMessage)))
           }
@@ -454,31 +464,50 @@ object ODataHttpServer {
         // error still lands in the request log instead of being replaced
         // by an IllegalStateException and a dropped connection
         logRequest(s"ERROR ${x.getRequestURI}: ${String.valueOf(e.getMessage)}")
-        try respond(x, 500,
+        try respond(x, statusOf(e),
           mapper.writeValueAsBytes(
             mapper.createObjectNode().put("error", String.valueOf(e.getMessage))),
           "Content-Type" -> "application/json")
         catch { case _: Throwable => () }
     }
 
+  /** A refused request keeps its own status; anything else is the
+    * server's failure (500, which the client retries as transient). */
+  private def statusOf(e: Throwable): Int = e match {
+    case r: ODataRequestError => r.status
+    case _ => 500
+  }
+
+  /** Parse a client-supplied query part; a failure is the client's (400). */
+  private def bad[T](what: String)(parse: => T): T =
+    try parse catch {
+      case scala.util.control.NonFatal(e) =>
+        throw new ODataRequestError(400, s"odata-http: bad $what: ${e.getMessage}")
+    }
+
   /** Serve one entity request (shared by the GET path and `$batch`
     * sub-requests): returns the JSON body bytes, throws on bad input. */
   private def serveEntity(entity: String, p: Map[String, String],
       rawQuery: String): Array[Byte] = {
+      def opt[T](name: String)(parse: String => T): Option[T] =
+        p.get(name).map(v => bad(s"$name '$v'")(parse(v)))
+      // a page planned against an older registration is refused (409)
+      // before any option is resolved against the new schema
+      val planned = opt("$generation")(_.toLong)
+      planned.foreach(ODataTestServer.requireGeneration(entity, _))
       val full = ODataTestServer.schemaOf(entity)
       // an EMPTY $select is a pruned-to-zero-columns scan (a bare count():
       // Spark prunes every column and only row existence matters)
-      def selected(): StructType = p.get("$select") match {
-        case Some("") => StructType(Seq.empty[StructField])
-        case Some(cols) => StructType(cols.split(',').map(full(_)))
-        case None => full
-      }
+      def selected(): StructType = opt("$select") {
+        case "" => StructType(Seq.empty[StructField])
+        case cols => StructType(cols.split(',').map(full(_)))
+      }.getOrElse(full)
       // $skip + $top: the streaming row-cursor read — a half-open row range
       // of the entity in registry order, full schema or $select projection,
       // no filters (Spark applies its own filters downstream of a stream)
       if (p.contains("$skip")) {
-        val from = p("$skip").toLong
-        val until = from + p.getOrElse("$top", "1000").toLong
+        val from = opt("$skip")(_.toLong).get
+        val until = from + opt("$top")(_.toLong).getOrElse(1000L)
         val required = selected()
         val body = mapper.createObjectNode()
         body.put("@graft.rowcount", ODataTestServer.rowCount(entity))
@@ -487,40 +516,39 @@ object ODataHttpServer {
           .foreach(r => arr.add(ODataJson.seqToJson(mapper, required, r)))
         return mapper.writeValueAsBytes(body)
       }
+      val filters = opt("$filter")(ODataFilterSyntax.parse(_, full))
+        .getOrElse(Array.empty[Filter])
       // pushed aggregation: the service computes the whole aggregate and
       // answers |groups| rows (group keys first, aggregates after)
       if (p.contains("$applyaggs")) {
-        val specs = ODataFilterSyntax.parseAggs(p("$applyaggs"))
-        val groups = p.get("$applygroups").filter(_.nonEmpty)
-          .map(_.split(',').toSeq).getOrElse(Seq.empty)
-        val afilters = p.get("$filter")
-          .map(ODataFilterSyntax.parse(_, full)).getOrElse(Array.empty[Filter])
-        val schema = ODataFilterSyntax.aggSchema(full, specs, groups)
+        val specs = opt("$applyaggs")(ODataFilterSyntax.parseAggs).get
+        val groups = opt("$applygroups")(_.split(',').toSeq.filter(_.nonEmpty))
+          .getOrElse(Seq.empty)
+        val schema = bad("$apply")(ODataFilterSyntax.aggSchema(full, specs, groups))
         val body = mapper.createObjectNode()
         body.put("@graft.generation", ODataTestServer.generationOf(entity))
         if (!p.contains("$preflight")) {
-          val rows = ODataTestServer.aggregate(entity, afilters, specs, groups)
+          val rows = ODataTestServer.aggregate(entity, filters, specs, groups)
           val arr = body.putArray("value")
           rows.foreach(r => arr.add(ODataJson.seqToJson(mapper, schema, r)))
         }
         return mapper.writeValueAsBytes(body)
       }
       val required = selected()
-      val filters = p.get("$filter")
-        .map(ODataFilterSyntax.parse(_, full)).getOrElse(Array.empty[Filter])
-      val top = p.get("$top").map(_.toInt)
-      val orderBy = p.get("$orderby")
-        .map(ODataFilterSyntax.parseOrderBy).getOrElse(Seq.empty)
-      val pageSize = p.getOrElse("$pagesize", "1000").toInt
-      val skiptoken = p.getOrElse("$skiptoken", "0").toLong
-      require(skiptoken % pageSize == 0,
-        s"$$skiptoken=$skiptoken is not a page boundary for $$pagesize=$pageSize")
+      val top = opt("$top")(_.toInt)
+      val orderBy = opt("$orderby")(ODataFilterSyntax.parseOrderBy)
+        .getOrElse(Seq.empty)
+      val pageSize = opt("$pagesize")(_.toInt).getOrElse(1000)
+      val skiptoken = opt("$skiptoken") { v =>
+        val t = v.toLong
+        require(t % pageSize == 0, s"not a page boundary for $$pagesize=$pageSize")
+        t
+      }.getOrElse(0L)
       val pageNo = (skiptoken / pageSize).toInt
       val body = mapper.createObjectNode()
       if (p.contains("$preflight")) {
         // planner path: one O(rows) count to size the scan's partitions
-        val (nPages, gen) =
-          ODataTestServer.preflight(entity, required, filters, top, pageSize, orderBy)
+        val (nPages, gen) = ODataTestServer.preflight(entity, filters, top, pageSize)
         body.put("@graft.generation", gen)
         body.put("@graft.pages", nPages)
         body.put("@graft.rowcount", ODataTestServer.rowCount(entity))
@@ -529,8 +557,7 @@ object ODataHttpServer {
         // planner already paid the preflight once; a full page implies a
         // nextLink (worst case one trailing empty page on an exact
         // multiple, which returns no link and ends the walk)
-        val gen = ODataTestServer.generationOf(entity)
-        body.put("@graft.generation", gen)
+        val gen = planned.getOrElse(ODataTestServer.generationOf(entity))
         body.put("@graft.rowcount", ODataTestServer.rowCount(entity))
         val rows = ODataTestServer.fetchPage(
           ODataPageRef(entity, required, filters, top, pageNo, pageSize, gen, orderBy))
@@ -652,49 +679,29 @@ object ODataHttpServer {
     * page re-GET after a short backoff instead of a whole Spark task retry
     * (which would re-fetch the page anyway — with scheduler latency and,
     * at default task-retry limits, query death on the 4th blip). 4xx is
-    * never retried: an auth or grammar error is deterministic and must
-    * surface immediately. */
+    * never retried: an auth, grammar, unknown-entity or stale-generation
+    * error is deterministic and must surface immediately. */
   private val MaxAttempts = 3
 
-  def getRaw(url: String, user: String, pass: String): Array[Byte] = {
-    val req = HttpRequest.newBuilder(java.net.URI.create(url))
-      .header("Authorization", "Basic " + Base64.getEncoder
-        .encodeToString(s"$user:$pass".getBytes(UTF_8)))
-      .GET().build()
-    var attempt = 1
-    while (true) {
-      val failure: String =
-        try {
-          val resp = client.send(req, HttpResponse.BodyHandlers.ofByteArray())
-          val code = resp.statusCode()
-          if (code == 200) return resp.body()
-          val detail = s"HTTP $code: " + new String(resp.body(), UTF_8).take(200)
-          if (code < 500) sys.error(s"odata-http GET $url -> $detail")
-          detail // 5xx: transient until proven otherwise
-        } catch {
-          case e: java.io.IOException => // connect reset / refused / EOF
-            s"${e.getClass.getSimpleName}: ${e.getMessage}"
-        }
-      if (attempt >= MaxAttempts)
-        sys.error(s"odata-http GET $url failed after $MaxAttempts attempts " +
-          s"(last: $failure)")
-      Thread.sleep(50L << (attempt - 1)) // 50 ms, 100 ms
-      attempt += 1
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  def getRaw(url: String, user: String, pass: String): Array[Byte] =
+    send(request(url, user, pass).GET().build())
 
   def get(url: String, user: String, pass: String): JsonNode =
     mapper.readTree(getRaw(url, user, pass))
 
   /** POST with a JSON body and the same retry discipline as [[getRaw]]. */
   def postRaw(url: String, user: String, pass: String,
-      payload: Array[Byte]): Array[Byte] = {
-    def req = HttpRequest.newBuilder(java.net.URI.create(url))
+      payload: Array[Byte]): Array[Byte] =
+    send(request(url, user, pass).header("Content-Type", "application/json")
+      .POST(HttpRequest.BodyPublishers.ofByteArray(payload)).build())
+
+  private def request(url: String, user: String, pass: String): HttpRequest.Builder =
+    HttpRequest.newBuilder(java.net.URI.create(url))
       .header("Authorization", "Basic " + Base64.getEncoder
         .encodeToString(s"$user:$pass".getBytes(UTF_8)))
-      .header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.ofByteArray(payload)).build()
+
+  private def send(req: HttpRequest): Array[Byte] = {
+    val what = s"odata-http ${req.method} ${req.uri}"
     var attempt = 1
     while (true) {
       val failure: String =
@@ -703,16 +710,15 @@ object ODataHttpServer {
           val code = resp.statusCode()
           if (code == 200) return resp.body()
           val detail = s"HTTP $code: " + new String(resp.body(), UTF_8).take(200)
-          if (code < 500) sys.error(s"odata-http POST $url -> $detail")
-          detail
+          if (code < 500) sys.error(s"$what -> $detail")
+          detail // 5xx: transient until proven otherwise
         } catch {
-          case e: java.io.IOException =>
+          case e: java.io.IOException => // connect reset / refused / EOF
             s"${e.getClass.getSimpleName}: ${e.getMessage}"
         }
       if (attempt >= MaxAttempts)
-        sys.error(s"odata-http POST $url failed after $MaxAttempts attempts " +
-          s"(last: $failure)")
-      Thread.sleep(50L << (attempt - 1))
+        sys.error(s"$what failed after $MaxAttempts attempts (last: $failure)")
+      Thread.sleep(50L << (attempt - 1)) // 50 ms, 100 ms
       attempt += 1
     }
     throw new IllegalStateException("unreachable")
@@ -721,11 +727,21 @@ object ODataHttpServer {
   def enc(s: String): String = URLEncoder.encode(s, UTF_8)
 }
 
-/** DataSource V2 provider for the HTTP transport. Options: `endpoint`
+/** DataSource V2 provider for the OData service. Options: `endpoint`
   * (http://host:port/odata), `entity`, `user`, `pass`, `pageSize`.
-  * Pushdown surface: `$select` (column prune), `$filter` (comparison
-  * conjunctions), `$top` (limit); pages become input partitions fetched
-  * executor-side over the socket. */
+  * Pushdown surface: `$select` (column prune; a subform column is its
+  * `$expand`), `$filter` (comparison conjunctions), `$top` (limit),
+  * `$orderby` + `$top` (complete top-N), `$apply` (complete aggregates,
+  * grouped or not); pages become input partitions fetched executor-side
+  * over the socket.
+  *
+  * Usage, against the in-JVM tenant:
+  * {{{
+  *   spark.read.format("graft.sources.ODataHttpSource")
+  *     .options(ODataHttpServer.tenantOptions)
+  *     .option("entity", "customer").option("pageSize", "1000").load()
+  * }}}
+  */
 class ODataHttpSource extends TableProvider {
 
   private def opt(o: CaseInsensitiveStringMap, k: String): String =
@@ -890,9 +906,12 @@ final class ODataHttpScanBuilder(endpoint: String, entity: String,
     if (aggs.nonEmpty) false // a limit over a pushed aggregate must run in Spark
     else { limit = Some(n); true }
 
-  /** ORDER BY + LIMIT → `$orderby=...&$top=n` over the wire, complete
-    * (no Spark sort), accepted only when the top-N fits one page — same
-    * contract as the in-memory twin. */
+  /** ORDER BY + LIMIT → `$orderby=...&$top=n` over the wire, COMPLETELY
+    * pushed (isPartiallyPushed=false): accepted only when the top-N fits
+    * one page, so the single resulting partition serves the exact sorted
+    * prefix and Spark plans no Sort at all. Larger top-Ns or sorts on
+    * non-comparable / nested columns fall back to Spark's own
+    * TakeOrderedAndProject over the paged scan. */
   override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
     if (aggs.nonEmpty) return false // see pushLimit
     val keys = orders.toSeq.map { so =>
@@ -946,7 +965,7 @@ final class ODataHttpAggScan(endpoint: String, entity: String,
 
   override def toBatch: Batch = this
 
-  private def aggUrl(preflight: Boolean): String = {
+  private def aggUrl(tail: String): String = {
     import ODataHttpServer.enc
     val qs = Seq(
       Some(s"%24applyaggs=${enc(ODataFilterSyntax.renderAggs(specs))}"),
@@ -954,14 +973,14 @@ final class ODataHttpAggScan(endpoint: String, entity: String,
       else Some(s"%24applygroups=${enc(groupCols.mkString(","))}"),
       if (filters.isEmpty) None
       else Some(s"%24filter=${enc(ODataFilterSyntax.render(filters.toSeq))}"),
-      if (preflight) Some("%24preflight=true") else None).flatten
+      Some(tail)).flatten
     s"$endpoint/$entity?${qs.mkString("&")}"
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val node = ODataHttpServer.get(aggUrl(preflight = true), user, pass)
+    val node = ODataHttpServer.get(aggUrl("%24preflight=true"), user, pass)
     val gen = node.get("@graft.generation").asLong
-    Array(ODataHttpPageRef(aggUrl(preflight = false), readSchema(), gen,
+    Array(ODataHttpPageRef(aggUrl(s"%24generation=$gen"), readSchema(),
       user, pass))
   }
 
@@ -981,8 +1000,7 @@ final class ODataHttpScan(endpoint: String, entity: String,
     * micro-batch fetches its `$skip/$top` row ranges by HTTP GET —
     * checkpointed cursor + the registry's append-preserves-prefix contract
     * make the pull exactly-once across restarts. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     // Spark's current pushdown rules never push filters/limit/orderBy into
     // a streaming scan (it applies them downstream of the source) — but if
     // that ever changes, streaming the FULL entity here would silently
@@ -1006,7 +1024,7 @@ final class ODataHttpScan(endpoint: String, entity: String,
 
   override def toBatch: Batch = this
 
-  private def pageUrl(pageNo: Int, preflight: Boolean): String = {
+  private def pageUrl(pageNo: Int, tail: String): String = {
     import ODataHttpServer.enc
     val qs = Seq(
       Some(s"%24select=${enc(required.fieldNames.mkString(","))}"),
@@ -1017,18 +1035,20 @@ final class ODataHttpScan(endpoint: String, entity: String,
       limit.map(n => s"%24top=$n"),
       Some(s"%24pagesize=$pageSize"),
       Some(s"%24skiptoken=${pageNo.toLong * pageSize}"),
-      if (preflight) Some("%24preflight=true") else None).flatten
+      Some(tail)).flatten
     s"$endpoint/$entity?${qs.mkString("&")}"
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // HTTP preflight: page count + registry generation, no rows
-    val node = ODataHttpServer.get(pageUrl(0, preflight = true), user, pass)
+    // HTTP preflight: page count + registry generation, no rows. Every
+    // page GET carries the generation its boundaries were counted
+    // against; the server refuses it (409) once the entity is re-registered
+    val node = ODataHttpServer.get(pageUrl(0, "%24preflight=true"), user, pass)
     val nPages = node.get("@graft.pages").asInt
     val gen = node.get("@graft.generation").asLong
     (0 until nPages)
-      .map(i => ODataHttpPageRef(pageUrl(i, preflight = false), required,
-        gen, user, pass): InputPartition)
+      .map(i => ODataHttpPageRef(pageUrl(i, s"%24generation=$gen"), required,
+        user, pass): InputPartition)
       .toArray
   }
 
@@ -1036,24 +1056,23 @@ final class ODataHttpScan(endpoint: String, entity: String,
     ODataHttpPageRef.readerFactory
 }
 
-/** One page fetch, shipped to the executor: the URL (with `$skiptoken`),
-  * the projected schema, auth, and the planned-against generation. */
+/** One fetch, shipped to the executor: the URL (a `$skiptoken` page with
+  * its planned generation, an `$apply` result, or a streaming `$skip/$top`
+  * row range), the schema the rows parse by, and auth. A row range
+  * carries no generation: the registry's append contract keeps row
+  * indexes below the committed cursor stable, which is exactly what the
+  * cursor offset relies on. */
 final case class ODataHttpPageRef(url: String, required: StructType,
-    generation: Long, user: String, pass: String) extends InputPartition
+    user: String, pass: String) extends InputPartition
 
 object ODataHttpPageRef {
-  /** Executor-side page fetch shared by row scans and aggregate scans:
-    * GET the ref's URL over the socket, verify the registry generation
-    * still matches the planned one, parse the rows by the ref's schema. */
+  /** Executor-side fetch shared by row scans, aggregate scans and stream
+    * ranges: GET the ref's URL over the socket, parse `value` by the ref's
+    * schema. */
   val readerFactory: PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
       val ref = p.asInstanceOf[ODataHttpPageRef]
       val node = ODataHttpServer.get(ref.url, ref.user, ref.pass)
-      val gen = node.get("@graft.generation").asLong
-      if (gen != ref.generation)
-        sys.error(s"odata-http: entity re-registered (generation $gen) " +
-          s"after this scan was planned (generation ${ref.generation}); " +
-          "page boundaries are stale — re-plan the scan")
       import scala.jdk.CollectionConverters._
       val rows = node.get("value").elements().asScala
         .map(ODataJson.jsonToSeq(ref.required, _))
@@ -1062,17 +1081,14 @@ object ODataHttpPageRef {
   }
 }
 
-/** A half-open `$skip/$top` row range, fetched executor-side over HTTP —
-  * the streaming twin of [[ODataHttpPageRef]]. No generation guard: the
-  * registry's append contract keeps row indexes below the committed
-  * cursor stable, which is exactly what the cursor offset relies on. */
-final case class ODataHttpRangeRef(url: String, required: StructType,
-    user: String, pass: String) extends InputPartition
+/** Row-cursor offset: how many entity rows the stream has consumed. */
+final case class ODataOffset(rowIdx: Long) extends Offset {
+  override def json(): String = "{\"rowIdx\":" + rowIdx + "}"
+}
 
 final class ODataHttpMicroBatchStream(endpoint: String, entity: String,
     required: StructType, user: String, pass: String, pageSize: Int)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
+    extends MicroBatchStream {
 
   override def initialOffset(): Offset = ODataOffset(0L)
 
@@ -1099,7 +1115,7 @@ final class ODataHttpMicroBatchStream(endpoint: String, entity: String,
     (from until until by pageSize.toLong)
       .map { lo =>
         val hi = math.min(lo + pageSize, until)
-        ODataHttpRangeRef(
+        ODataHttpPageRef(
           s"$endpoint/$entity?%24select=${enc(required.fieldNames.mkString(","))}" +
             s"&%24skip=$lo&%24top=${hi - lo}",
           required, user, pass): InputPartition
@@ -1107,19 +1123,64 @@ final class ODataHttpMicroBatchStream(endpoint: String, entity: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-        val ref = p.asInstanceOf[ODataHttpRangeRef]
-        val node = ODataHttpServer.get(ref.url, ref.user, ref.pass)
-        import scala.jdk.CollectionConverters._
-        val rows = node.get("value").elements().asScala
-          .map(ODataJson.jsonToSeq(ref.required, _))
-        new ODataRowsReader(rows, ref.required)
-      }
-    }
+    ODataHttpPageRef.readerFactory
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+}
+
+final class ODataRowsReader(it: Iterator[Seq[Any]], schema: StructType)
+    extends PartitionReader[InternalRow] {
+  private var current: InternalRow = _
+
+  override def next(): Boolean =
+    if (it.hasNext) { current = toInternal(it.next()); true } else false
+
+  override def get(): InternalRow = current
+  override def close(): Unit = ()
+
+  private def toInternal(row: Seq[Any]): InternalRow =
+    new GenericInternalRow(
+      schema.fields.zip(row).map { case (f, v) => convert(f.dataType, v) }
+        .toArray[Any])
+
+  /** External JVM value → Catalyst internal value, recursing through the
+    * `$expand` array-of-struct payloads. */
+  private def convert(dt: DataType, v: Any): Any = (dt, v) match {
+    case (_, null) => null
+    case (StringType, v) => UTF8String.fromString(v.toString)
+    case (TimestampType, v: java.sql.Timestamp) =>
+      DateTimeUtils.fromJavaTimestamp(v)
+    case (TimestampType, v: java.time.Instant) =>
+      DateTimeUtils.instantToMicros(v)
+    case (TimestampNTZType, v: java.time.LocalDateTime) =>
+      DateTimeUtils.localDateTimeToMicros(v)
+    case (DateType, v: java.sql.Date) => DateTimeUtils.fromJavaDate(v)
+    case (DateType, v: java.time.LocalDate) => DateTimeUtils.localDateToDays(v)
+    case (dt: DecimalType, v: java.math.BigDecimal) =>
+      org.apache.spark.sql.types.Decimal(v, dt.precision, dt.scale)
+    case (ArrayType(et, _), v: scala.collection.Seq[_]) =>
+      new GenericArrayData(v.map(convert(et, _)).toArray[Any])
+    case (st: StructType, v: Row) =>
+      new GenericInternalRow(
+        st.fields.zipWithIndex
+          .map { case (f, i) => convert(f.dataType, v.get(i)) }.toArray[Any])
+    case (dt, v) if isPassthrough(dt, v) => v
+    case (dt, v) =>
+      sys.error(s"odata reader: unsupported $dt value ${v.getClass}")
+  }
+
+  private def isPassthrough(dt: DataType, v: Any): Boolean = (dt, v) match {
+    case (LongType, _: java.lang.Long) => true
+    case (IntegerType, _: java.lang.Integer) => true
+    case (DoubleType, _: java.lang.Double) => true
+    case (FloatType, _: java.lang.Float) => true
+    case (BooleanType, _: java.lang.Boolean) => true
+    case (ShortType, _: java.lang.Short) => true
+    case (ByteType, _: java.lang.Byte) => true
+    case (BinaryType, _: Array[Byte]) => true
+    case _ => false
+  }
 }
 
 /** OData v4.01 JSON-batch client: N entity requests in ONE HTTP round-trip
@@ -1153,8 +1214,9 @@ object ODataBatchClient {
     import scala.jdk.CollectionConverters._
     resp.get("responses").elements().asScala.map { r =>
       val id = r.get("id").asText()
-      require(r.get("status").asInt() == 200,
-        s"odata-http $$batch sub-request '$id' failed: ${r.get("body")}")
+      val status = r.get("status").asInt()
+      require(status == 200,
+        s"odata-http $$batch sub-request '$id' failed: HTTP $status ${r.get("body")}")
       val body = r.get("body")
       // the server still paginates at $pagesize inside a $batch
       // sub-response; silently returning the first page would hand back

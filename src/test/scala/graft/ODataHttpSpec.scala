@@ -55,10 +55,8 @@ class ODataHttpSpec extends AnyFunSuite {
       H.tbl(spark, sf, "nation").schema.fieldNames.toSeq)
     // and the DSv2 source's inferSchema resolves the NATIVE types from it
     val viaSource = spark.read.format("graft.sources.ODataHttpSource")
-      .option("endpoint", ODataHttpServer.endpoint)
-      .option("entity", "nation_http_schema")
-      .option("user", ODataHttpServer.user)
-      .option("pass", ODataHttpServer.pass).load().schema
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", "nation_http_schema").load().schema
     assert(viaSource.map(f => (f.name, f.dataType)) ==
       H.tbl(spark, sf, "nation").schema.map(f => (f.name, f.dataType)))
   }
@@ -88,10 +86,8 @@ class ODataHttpSpec extends AnyFunSuite {
       .find(_.entityName == "orders_pk_http").get
     assert(m.entityPk == Seq("ordname", "line")) // composite <Key> survives
     val got = spark.read.format("graft.sources.ODataHttpSource")
-      .option("endpoint", ODataHttpServer.endpoint)
-      .option("entity", "orders_pk_http")
-      .option("user", ODataHttpServer.user)
-      .option("pass", ODataHttpServer.pass).load()
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", "orders_pk_http").load()
     assert(got.schema("qprice").dataType ==
       org.apache.spark.sql.types.DecimalType(38, 3)) // facets round-trip
     // field ORDER survives the wire (the reference preserves declaration
@@ -115,10 +111,8 @@ class ODataHttpSpec extends AnyFunSuite {
     // and continue on non-200, priorityDataSource.py:185-195)
     ODataHttpServer.failNext = 2
     val got = spark.read.format("graft.sources.ODataHttpSource")
-      .option("endpoint", ODataHttpServer.endpoint)
-      .option("entity", "nation_http_retry")
-      .option("user", ODataHttpServer.user)
-      .option("pass", ODataHttpServer.pass).load().count()
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", "nation_http_retry").load().count()
     assert(got == 25)
     assert(ODataHttpServer.failNext == 0) // the injected failures were served
     // a deterministic 4xx still fails fast (wrong-credentials test covers
@@ -144,11 +138,11 @@ class ODataHttpSpec extends AnyFunSuite {
   }
 
   test("paging parity: HTTP transport and in-memory registry serve identical pages for one $skiptoken walk") {
-    // Pins the simulation-boundary claim (ODataSource.scala:460-471): "a
-    // production deployment replaces fetchPage/preflight with paged HTTP
-    // and inherits the same executor-side fetch shape". The two transports
-    // must agree page-BY-page — same page count, same rows per page, same
-    // in-page order — not merely row-set-wise, under a walk that exercises
+    // Pins the simulation boundary (the ODataTestServer scaladoc): the
+    // server answers every page GET from the registry's preflight/
+    // fetchPage, so the HTTP walk and the registry's own pages must agree
+    // page-BY-page — same page count, same rows per page, same in-page
+    // order — not merely row-set-wise, under a walk that exercises
     // projection + filter + $orderby + a partial final page.
     import graft.sources.{ODataFilterSyntax, ODataJson, ODataPageRef, ODataSortKey}
     import org.apache.spark.sql.sources.GreaterThanOrEqual
@@ -161,9 +155,9 @@ class ODataHttpSpec extends AnyFunSuite {
       Array(GreaterThanOrEqual("n_nationkey", 3L))
     val orderBy = Seq(ODataSortKey("n_name", asc = true, nullsFirst = true))
     val pageSize = 7 // 22 matching rows -> pages of 7,7,7,1
-    // transport 1: the in-memory registry, exactly as ODataSource scans do
+    // transport 1: the in-memory registry, called directly
     val (nPages, gen) = ODataTestServer.preflight(
-      "nation_parity", required, filters, None, pageSize, orderBy)
+      "nation_parity", filters, None, pageSize)
     val direct = (0 until nPages).map { pn =>
       ODataTestServer.fetchPage(ODataPageRef("nation_parity", required,
         filters, None, pn, pageSize, gen, orderBy)).toVector
@@ -199,9 +193,8 @@ class ODataHttpSpec extends AnyFunSuite {
     ODataTestServer.register(spark, "nation_http_scan", s"$sf/nation.parquet")
     ODataHttpServer.requestLog.clear()
     val df = spark.read.format("graft.sources.ODataHttpSource")
-      .option("endpoint", ODataHttpServer.endpoint)
+      .options(ODataHttpServer.tenantOptions)
       .option("entity", "nation_http_scan")
-      .option("user", ODataHttpServer.user).option("pass", ODataHttpServer.pass)
       .option("pageSize", "5").load()
       .filter(col("n_regionkey") >= 2L && col("n_name") > "B")
       .select("n_nationkey", "n_name")
@@ -231,9 +224,8 @@ class ODataHttpSpec extends AnyFunSuite {
   test("pages become parallel input partitions; bare count() survives full pruning") {
     ODataTestServer.register(spark, "nation_http_part", s"$sf/nation.parquet")
     val df = spark.read.format("graft.sources.ODataHttpSource")
-      .option("endpoint", ODataHttpServer.endpoint)
+      .options(ODataHttpServer.tenantOptions)
       .option("entity", "nation_http_part")
-      .option("user", ODataHttpServer.user).option("pass", ODataHttpServer.pass)
       .option("pageSize", "7").load()
     // 25 rows at 7/page → 4 pages → 4 concurrent page GETs
     assert(df.rdd.getNumPartitions == 4, df.rdd.getNumPartitions.toString)
@@ -290,9 +282,8 @@ class ODataHttpSpec extends AnyFunSuite {
     ODataHttpServer.requestLog.clear()
     def pull(): Unit = {
       val q = spark.readStream.format("graft.sources.ODataHttpSource")
-        .option("endpoint", ODataHttpServer.endpoint)
+        .options(ODataHttpServer.tenantOptions)
         .option("entity", "stream_http_spec")
-        .option("user", ODataHttpServer.user).option("pass", ODataHttpServer.pass)
         .option("pageSize", "10").load()
         .writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
@@ -317,9 +308,8 @@ class ODataHttpSpec extends AnyFunSuite {
     ODataTestServer.register(spark, "nation_http_topn", s"$sf/nation.parquet")
     ODataHttpServer.requestLog.clear()
     val df = spark.read.format("graft.sources.ODataHttpSource")
-      .option("endpoint", ODataHttpServer.endpoint)
+      .options(ODataHttpServer.tenantOptions)
       .option("entity", "nation_http_topn")
-      .option("user", ODataHttpServer.user).option("pass", ODataHttpServer.pass)
       .option("pageSize", "100").load()
       .select("n_nationkey", "n_name")
       .orderBy(col("n_name").desc).limit(3)
@@ -343,9 +333,8 @@ class ODataHttpSpec extends AnyFunSuite {
     ODataTestServer.register(spark, "nation_http_agg", s"$sf/nation.parquet")
     ODataHttpServer.requestLog.clear()
     val df = spark.read.format("graft.sources.ODataHttpSource")
-      .option("endpoint", ODataHttpServer.endpoint)
+      .options(ODataHttpServer.tenantOptions)
       .option("entity", "nation_http_agg")
-      .option("user", ODataHttpServer.user).option("pass", ODataHttpServer.pass)
       .load()
       .groupBy("n_regionkey")
       .agg(count(lit(1)).as("n"), max(col("n_name")).as("max_name"))
@@ -372,9 +361,8 @@ class ODataHttpSpec extends AnyFunSuite {
   test("zero-aggregate groupby (pushed DISTINCT) works over the wire") {
     ODataTestServer.register(spark, "nation_http_distinct", s"$sf/nation.parquet")
     val df = spark.read.format("graft.sources.ODataHttpSource")
-      .option("endpoint", ODataHttpServer.endpoint)
+      .options(ODataHttpServer.tenantOptions)
       .option("entity", "nation_http_distinct")
-      .option("user", ODataHttpServer.user).option("pass", ODataHttpServer.pass)
       .load()
       .select("n_regionkey").distinct()
     assert(df.count() == 5) // the count() shape that pushes groupby-with-no-aggs
@@ -406,9 +394,8 @@ class ODataHttpSpec extends AnyFunSuite {
       .withColumn("amount", col("amount").cast("decimal(12,3)"))
     ODataTestServer.registerDf("typed_http", df)
     val back = spark.read.format("graft.sources.ODataHttpSource")
-      .option("endpoint", ODataHttpServer.endpoint)
+      .options(ODataHttpServer.tenantOptions)
       .option("entity", "typed_http")
-      .option("user", ODataHttpServer.user).option("pass", ODataHttpServer.pass)
       .load().orderBy("id").collect()
     assert(back(0).getTimestamp(1) == java.sql.Timestamp.valueOf("2024-03-01 10:30:00.123456"))
     assert(back(0).getDecimal(2) == new java.math.BigDecimal("12345.678"))
@@ -440,7 +427,7 @@ class ODataHttpSpec extends AnyFunSuite {
     // $select projected inside the batch
     val first = resp("n").get("value").elements().next()
     assert(first.has("n_nationkey") && first.has("n_name") && !first.has("n_comment"))
-    // a bad sub-request fails ITS slot with a 500 envelope, not the batch:
+    // a bad sub-request fails ITS slot with a 404 envelope, not the batch:
     // the client surfaces it as an error naming the sub-request id
     val e = intercept[RuntimeException] {
       ODataBatchClient.pull(ODataHttpServer.endpoint,
@@ -448,7 +435,46 @@ class ODataHttpSpec extends AnyFunSuite {
           ODataBatchClient.SubRequest("ok", "batch_region"),
           ODataBatchClient.SubRequest("bad", "no_such_entity")))
     }
-    assert(e.getMessage.contains("'bad'"), e.getMessage)
+    assert(e.getMessage.contains("'bad'") && e.getMessage.contains("404"),
+      e.getMessage)
+  }
+
+  test("$batch: the POST retries an injected 503 like a page GET does") {
+    import graft.sources.ODataBatchClient
+    import scala.jdk.CollectionConverters._
+    ODataTestServer.register(spark, "batch_retry", s"$sf/region.parquet")
+    ODataHttpServer.requestLog.clear()
+    ODataHttpServer.failNext = 1
+    val resp = ODataBatchClient.pull(ODataHttpServer.endpoint,
+      ODataHttpServer.user, ODataHttpServer.pass,
+      Seq(ODataBatchClient.SubRequest("r", "batch_retry")))
+    assert(ODataHttpServer.failNext == 0) // the injected failure was served
+    assert(resp("r").get("value").size() == 5)
+    val served = ODataHttpServer.requestLog.asScala.toList
+    assert(served.count(_.startsWith("POST /odata/$batch")) == 2, served)
+  }
+
+  test("refused requests answer 4xx once and are not retried") {
+    import scala.jdk.CollectionConverters._
+    val url = register("nation_http_refused")
+    def refused(u: String): (String, List[String]) = {
+      ODataHttpServer.requestLog.clear()
+      val e = intercept[RuntimeException](
+        ODataHttpServer.getRaw(u, ODataHttpServer.user, ODataHttpServer.pass))
+      val path = u.stripPrefix(ODataHttpServer.endpoint.stripSuffix("/odata"))
+      (e.getMessage, ODataHttpServer.requestLog.asScala.toList.filter(_.contains(path)))
+    }
+    // a $filter the grammar cannot parse, and one naming an unknown column
+    for (f <- Seq("n_name+is+%27x%27", "no_such_col+eq+1")) {
+      val (msg, log) = refused(s"$url?%24filter=$f")
+      assert(msg.contains("HTTP 400") && !msg.contains("attempts"), msg)
+      assert(log.count(_.startsWith("GET ")) == 1, log)
+      // the server still logs the error line the benchmark harness fails on
+      assert(log.count(_.startsWith("ERROR ")) == 1, log)
+    }
+    val (msg, log) = refused(s"${ODataHttpServer.endpoint}/no_such_entity")
+    assert(msg.contains("HTTP 404"), msg)
+    assert(log.count(_.startsWith("GET ")) == 1, log)
   }
 
   test("$batch: a paginated sub-response fails loudly instead of returning one page as complete") {

@@ -3,16 +3,29 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.ODataTestServer
+import graft.sources.{ODataHttpServer, ODataTestServer}
 
+/** The connector's pushdown surface, read back from the requests the
+  * server logged. */
 class ODataSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
+  private def read(entity: String, pageSize: Int = 1000) =
+    spark.read.format("graft.sources.ODataHttpSource")
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", entity).option("pageSize", pageSize.toString).load()
+
   private def load() = {
     ODataTestServer.register(spark, "customer", s"$sf/customer.parquet")
-    spark.read.format("graft.sources.ODataSource")
-      .option("entity", "customer").option("pageSize", "200").load()
+    read("customer", 200)
+  }
+
+  /** Entity GETs served since the log was last cleared. */
+  private def served(entity: String): List[String] = {
+    import scala.jdk.CollectionConverters._
+    ODataHttpServer.requestLog.asScala.toList
+      .filter(_.startsWith(s"GET /odata/$entity?"))
   }
 
   test("DSv2 scan returns the same rows as a direct parquet read") {
@@ -26,27 +39,32 @@ class ODataSourceSpec extends AnyFunSuite {
     val df = load()
       .filter(col("c_acctbal") >= 1000.0)
       .select("c_custkey", "c_name")
-    val n = df.count()
+    ODataHttpServer.requestLog.clear()
+    val n = df.collect().length
     assert(n == H.tbl(spark, sf, "customer")
       .filter(col("c_acctbal") >= 1000.0).count())
-    assert(ODataTestServer.lastRequest.contains("$filter="), ODataTestServer.lastRequest)
-    assert(ODataTestServer.lastRequest.contains("GreaterThanOrEqual(c_acctbal,1000.0)"))
-    // $select pruned to the needed columns (+ filter column)
-    assert(!ODataTestServer.lastRequest.contains("c_mktsegment"))
+    val log = served("customer")
+    assert(log.exists(r => r.contains("%24filter=") &&
+      r.contains("c_acctbal+ge+1000.0")), log.mkString("\n"))
+    // $select pruned to the needed columns
+    assert(log.nonEmpty && log.forall(r =>
+      r.contains("%24select=c_custkey%2Cc_name") && !r.contains("c_mktsegment")),
+      log.mkString("\n"))
     // and the plan shows the pushdown
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ODataScan"), plan)
+    assert(plan.contains("ODataHttpScan"), plan)
   }
 
   test("limit pushdown reaches the service ($top) and pages partition the read") {
     val df = load().limit(7)
+    ODataHttpServer.requestLog.clear()
     assert(df.count() == 7)
-    assert(ODataTestServer.lastRequest.contains("$top=7"), ODataTestServer.lastRequest)
+    assert(served("customer").exists(_.contains("%24top=7")),
+      served("customer").mkString("\n"))
 
     // paging: full scan of 150 rows at pageSize 200 → 1 partition; pageSize 40 → 4
     ODataTestServer.register(spark, "customer", s"$sf/customer.parquet")
-    val paged = spark.read.format("graft.sources.ODataSource")
-      .option("entity", "customer").option("pageSize", "40").load()
+    val paged = read("customer", 40)
     assert(paged.rdd.getNumPartitions >= 3, paged.rdd.getNumPartitions.toString)
   }
 
@@ -55,10 +73,12 @@ class ODataSourceSpec extends AnyFunSuite {
       .select("c_custkey", "c_acctbal")
       .orderBy(col("c_acctbal").desc, col("c_custkey"))
       .limit(5)
+    ODataHttpServer.requestLog.clear()
     val rows = df.collect()
-    assert(ODataTestServer.lastRequest.contains("$orderby=c_acctbal desc,c_custkey asc"),
-      ODataTestServer.lastRequest)
-    assert(ODataTestServer.lastRequest.contains("$top=5"), ODataTestServer.lastRequest)
+    val log = served("customer")
+    assert(log.exists(r => r.contains(
+      "%24orderby=c_acctbal+desc+nullslast%2Cc_custkey+asc+nullsfirst") &&
+      r.contains("%24top=5")), log.mkString("\n"))
     // completely pushed: the physical plan contains no sort operator
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("sort"), plan)
@@ -85,19 +105,22 @@ class ODataSourceSpec extends AnyFunSuite {
     val df = load()
     val agg = df.agg(count(lit(1)).as("n"), min(col("c_acctbal")).as("lo"),
       max(col("c_acctbal")).as("hi"))
+    ODataHttpServer.requestLog.clear()
     val row = agg.collect()(0)
-    assert(ODataTestServer.lastRequest.contains("$apply=aggregate("),
-      ODataTestServer.lastRequest)
+    assert(served("customer").exists(r => r.contains("%24applyaggs=") &&
+      !r.contains("%24applygroups")), served("customer").mkString("\n"))
     val direct = H.tbl(spark, sf, "customer")
       .agg(count(lit(1)), min(col("c_acctbal")), max(col("c_acctbal"))).collect()(0)
     assert(row.getLong(0) == direct.getLong(0))
     assert(row.getDouble(1) == direct.getDouble(1))
     assert(row.getDouble(2) == direct.getDouble(2))
     // filtered aggregate: filter is pushed along with the aggregation
-    val n = load().filter(col("c_acctbal") >= 1000.0).agg(count(lit(1))).collect()(0).getLong(0)
+    val filtered = load().filter(col("c_acctbal") >= 1000.0).agg(count(lit(1)))
+    ODataHttpServer.requestLog.clear()
+    val n = filtered.collect()(0).getLong(0)
     assert(n == H.tbl(spark, sf, "customer").filter(col("c_acctbal") >= 1000.0).count())
-    assert(ODataTestServer.lastRequest.contains("$filter="))
-
+    assert(served("customer").exists(r => r.contains("%24applyaggs=") &&
+      r.contains("%24filter=")), served("customer").mkString("\n"))
   }
 
   test("grouped aggregate pushdown: $apply=groupby answers per-group rows, no Spark agg") {
@@ -105,9 +128,10 @@ class ODataSourceSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), sum(col("c_custkey")).as("sc"))
     val direct = H.tbl(spark, sf, "customer").groupBy("c_nationkey")
       .agg(count(lit(1)).as("n"), sum(col("c_custkey")).as("sc"))
+    ODataHttpServer.requestLog.clear()
     assert(grouped.exceptAll(direct).isEmpty && direct.exceptAll(grouped).isEmpty)
-    assert(ODataTestServer.lastRequest.contains("$apply=groupby((c_nationkey)"),
-      ODataTestServer.lastRequest)
+    assert(served("customer").exists(_.contains("%24applygroups=c_nationkey")),
+      served("customer").mkString("\n"))
     grouped.collect()
     val plan = grouped.queryExecution.executedPlan.toString
     assert(!plan.contains("HashAggregate") && !plan.contains("SortAggregate"),
@@ -121,14 +145,15 @@ class ODataSourceSpec extends AnyFunSuite {
   }
 
   test("limit/top-N pushdown refuses once an aggregate is pushed") {
-    // ODataAggScan ignores limit/topSort, and isPartiallyPushed=false makes
-    // Spark delete its own Sort/Limit on acceptance — so the builder must
-    // refuse the claim when an aggregate owns the scan (ADVICE r03).
+    // ODataHttpAggScan ignores limit/topSort, and isPartiallyPushed=false
+    // makes Spark delete its own Sort/Limit on acceptance — so the builder
+    // must refuse the claim when an aggregate owns the scan (ADVICE r03).
     import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
     import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, NullOrdering}
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("k", LongType)))
-    def builder = new graft.sources.ODataScanBuilder("customer", schema, 200)
+    def builder = new graft.sources.ODataHttpScanBuilder(ODataHttpServer.endpoint,
+      "customer", schema, ODataHttpServer.user, ODataHttpServer.pass, 200)
     val countAll = new Aggregation(Array(new CountStar), Array.empty)
     val sort = Array(Expressions.sort(Expressions.column("k"),
       SortDirection.ASCENDING, NullOrdering.NULLS_FIRST))
@@ -143,16 +168,13 @@ class ODataSourceSpec extends AnyFunSuite {
   }
 
   test("reader converts decimal and date columns (not just strings/timestamps)") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("odata_dec").toString + "/t"
     spark.sql("SELECT 1L AS id, CAST(12.345 AS DECIMAL(10,3)) AS amount, " +
         "DATE '2024-06-01' AS d " +
         "UNION ALL SELECT 2L, CAST(0.001 AS DECIMAL(10,3)), DATE '2024-06-02'")
       .write.mode("overwrite").parquet(dir)
     ODataTestServer.register(spark, "typed", dir)
-    val got = spark.read.format("graft.sources.ODataSource")
-      .option("entity", "typed").load()
-      .orderBy("id").collect()
+    val got = read("typed").orderBy("id").collect()
     assert(got(0).getDecimal(1).toPlainString == "12.345")
     assert(got(1).getDate(2).toString == "2024-06-02")
   }
@@ -162,15 +184,15 @@ class ODataSourceSpec extends AnyFunSuite {
       s"$sf/orders.parquet", s"$sf/lineitem.parquet",
       parentKey = "o_orderkey", childKey = "l_orderkey",
       subformName = "lineitems_subform", sortCols = Seq("l_linenumber"))
-    val scan = spark.read.format("graft.sources.ODataSource")
-      .option("entity", "orders_x").option("pageSize", "200").load()
+    val scan = read("orders_x", 200)
 
     // expanded read: nested children match the flat child table
     val exploded = graft.ops.Relational
       .explodeSubform("lineitems_subform", Seq("o_orderkey"))(scan)
+    ODataHttpServer.requestLog.clear()
     assert(exploded.count() == H.tbl(spark, sf, "lineitem").count())
-    assert(ODataTestServer.lastRequest.contains("$expand=lineitems_subform"),
-      ODataTestServer.lastRequest)
+    assert(served("orders_x").exists(_.contains("lineitems_subform")),
+      served("orders_x").mkString("\n"))
 
     // nested values are correct, not just counted
     // (l_linenumber is not unique per order in the synthetic data, so sort
@@ -186,46 +208,49 @@ class ODataSourceSpec extends AnyFunSuite {
       .collect().toSeq
     assert(viaExpand == direct)
 
-    // parent-only projection drops the $expand from the request
+    // parent-only projection drops the subform from the request's $select
+    ODataHttpServer.requestLog.clear()
     scan.select("o_orderkey", "o_totalprice").collect()
-    assert(!ODataTestServer.lastRequest.contains("$expand"),
-      ODataTestServer.lastRequest)
+    val log = served("orders_x")
+    assert(log.nonEmpty && log.forall(r =>
+      r.contains("%24select=") && !r.contains("lineitems_subform")), log.mkString("\n"))
   }
 
   test("scan partitions carry page refs, not rows") {
     ODataTestServer.register(spark, "customer", s"$sf/customer.parquet")
-    val df = spark.read.format("graft.sources.ODataSource")
-      .option("entity", "customer").option("pageSize", "40").load()
+    val df = read("customer", 40)
     val parts = df.queryExecution.executedPlan.collectLeaves().flatMap {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
         b.partitions.flatten
       case _ => Nil
     }
     assert(parts.nonEmpty)
-    assert(parts.forall(_.isInstanceOf[graft.sources.ODataPageRef]), parts.map(_.getClass).toString)
+    assert(parts.forall(_.isInstanceOf[graft.sources.ODataHttpPageRef]),
+      parts.map(_.getClass).toString)
   }
 
   test("re-registering an entity after planning fails the fetch instead of shifting pages") {
     ODataTestServer.register(spark, "gen_probe", s"$sf/customer.parquet")
-    val df = spark.read.format("graft.sources.ODataSource")
-      .option("entity", "gen_probe").option("pageSize", "40").load()
+    val df = read("gen_probe", 40)
     assert(df.count() == 150) // same generation: pages serve fine
     // new registration between planning and execution: page boundaries
     // counted against the old generation must not silently apply
-    val preSwap = spark.read.format("graft.sources.ODataSource")
-      .option("entity", "gen_probe").option("pageSize", "40").load()
-      .queryExecution.executedPlan.execute()
+    val preSwap = read("gen_probe", 40).queryExecution.executedPlan.execute()
     preSwap.partitions // forces planInputPartitions → preflight snapshots the generation
     ODataTestServer.register(spark, "gen_probe", s"$sf/nation.parquet")
     val ex = intercept[org.apache.spark.SparkException](preSwap.count())
     assert(ex.getMessage.contains("re-registered"), ex.getMessage)
+    assert(ex.getMessage.contains("HTTP 409"), ex.getMessage)
   }
 
   test("unsupported predicates stay residual and results remain correct") {
     val df = load().filter(col("c_name").contains("42")) // StringContains: not pushed
     val expected = H.tbl(spark, sf, "customer")
       .filter(col("c_name").contains("42")).count()
+    ODataHttpServer.requestLog.clear()
     assert(df.count() == expected)
-    assert(!ODataTestServer.lastRequest.contains("StringContains"))
+    val log = served("customer")
+    val pushed = log.flatMap(_.split('&').filter(_.contains("%24filter=")))
+    assert(log.nonEmpty && !pushed.exists(_.contains("42")), log.mkString("\n"))
   }
 }

@@ -4,13 +4,26 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.ODataTestServer
+import graft.sources.{ODataHttpServer, ODataTestServer}
 
 /** The connector's MICRO_BATCH_READ face: row-cursor offsets, checkpointed
   * resume, delta-only fetches, exactly-once across runs. */
 class ODataStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private def stream(entity: String) =
+    spark.readStream.format("graft.sources.ODataHttpSource")
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", entity).option("pageSize", "4").load()
+
+  /** The `$skip/$top` row-range GETs served since the log was last cleared. */
+  private def ranges(entity: String): List[String] = {
+    import scala.jdk.CollectionConverters._
+    ODataHttpServer.requestLog.asScala.toList
+      .filter(r => r.startsWith(s"GET /odata/$entity?") && r.contains("%24skip="))
+      .map(_.replaceAll(".*%24skip=", "%24skip="))
+  }
 
   test("incremental pull: run 2 fetches only the rows appended after run 1") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_odstream").toString
@@ -19,8 +32,8 @@ class ODataStreamSpec extends AnyFunSuite {
       spark.range(0L, 10L).select($"id", ($"id" * 2).as("v")))
 
     def pull(): Unit = {
-      val q = spark.readStream.format("graft.sources.ODataSource")
-        .option("entity", "stream_ent").option("pageSize", "4").load()
+      ODataHttpServer.requestLog.clear()
+      val q = stream("stream_ent")
         .writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -29,15 +42,17 @@ class ODataStreamSpec extends AnyFunSuite {
 
     pull()
     assert(spark.read.parquet(sink).count() === 10L)
-    assert(ODataTestServer.lastRequest.contains("$skiptoken="),
-      ODataTestServer.lastRequest)
+    assert(ranges("stream_ent").sorted == List(
+      "%24skip=0&%24top=4", "%24skip=4&%24top=4", "%24skip=8&%24top=2"),
+      ranges("stream_ent"))
 
     ODataTestServer.appendRows("stream_ent",
       spark.range(10L, 15L).select($"id", ($"id" * 2).as("v")))
     pull()
-    // delta fetch started exactly at the committed cursor...
-    assert(ODataTestServer.lastRequest.contains("$skiptoken=10&$top=5"),
-      ODataTestServer.lastRequest)
+    // delta fetch started exactly at the committed cursor and read only
+    // the 5 appended rows, one range per page...
+    assert(ranges("stream_ent").sorted == List(
+      "%24skip=10&%24top=4", "%24skip=14&%24top=1"), ranges("stream_ent"))
     // ...and the sink holds every row exactly once
     val rows = spark.read.parquet(sink)
     assert(rows.count() === 15L)
@@ -47,14 +62,14 @@ class ODataStreamSpec extends AnyFunSuite {
     // idle run: nothing new, nothing re-read
     pull()
     assert(spark.read.parquet(sink).count() === 15L)
+    assert(ranges("stream_ent").isEmpty, ranges("stream_ent"))
   }
 
   test("pages split a micro-batch into multiple partitions") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_odstream2").toString
     ODataTestServer.registerDf("stream_ent2",
       spark.range(0L, 9L).select($"id"))
-    val q = spark.readStream.format("graft.sources.ODataSource")
-      .option("entity", "stream_ent2").option("pageSize", "4").load()
+    val q = stream("stream_ent2")
       .writeStream.format("parquet")
       .option("path", s"$tmp/sink").option("checkpointLocation", s"$tmp/ckpt")
       .trigger(Trigger.AvailableNow()).start()

@@ -4,8 +4,9 @@ import scala.concurrent.duration._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** graft builds its Spark session in one place (graft.Session) and runs
-  * query pools in one place (Verify.pooled); these pin both. */
+/** graft builds its Spark session in one place (graft.Session), runs
+  * query pools in one place (Verify.pooled) and reads OData through one
+  * connector (ODataHttpSource); these pin all three. */
 class SessionSpec extends AnyFunSuite {
 
   test("the test session carries every entry of graft.Session's conf table") {
@@ -26,6 +27,15 @@ class SessionSpec extends AnyFunSuite {
         java.nio.file.Files.readString(p).contains(needle))
       .map(p => src.toPath.relativize(p).toString).toSeq
     assert(hits == Seq("main/scala/graft/Session.scala"), hits)
+  }
+
+  test("exactly one TableProvider under graft.sources") {
+    val dir = new java.io.File("src/main/scala/graft/sources")
+    assert(dir.isDirectory, dir.getAbsolutePath)
+    val providers = dir.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+      .flatMap(f => "(extends|with)\\s+TableProvider\\b".r
+        .findAllMatchIn(java.nio.file.Files.readString(f.toPath)).map(_ => f.getName))
+    assert(providers == Seq("ODataHttp.scala"), providers)
   }
 
   test("a pool that misses its deadline throws, naming the unfinished work") {
