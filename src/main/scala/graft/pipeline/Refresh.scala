@@ -1,11 +1,15 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.concurrent.{ExecutionException, FutureTask}
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.storage.StorageLevel
 import graft.model.{EntityConfig, ExtractionConfig}
 import graft.ops.Relational._
+import graft.sources.ODataHttpTable
 
 /** Watermark state store — the reference keeps per-entity `lastRun` inside
   * the Mongo config document (updateLastRun, priorityDataSource.py:594-633).
@@ -84,7 +88,11 @@ object Refresh {
     * to one run's files.) The advance target is max(observed)+1µs:
     * everything <= max is in the sink, so the next `>= lastRun`
     * incremental doesn't re-extract the boundary rows forever.
-    * `subforms` maps nested array-of-struct column → child table name. */
+    * `subforms` maps nested array-of-struct column → child table name.
+    *
+    * An OData entity with subforms is extracted ONCE, like the reference's
+    * one `$expand` GET per entity (priorityDataSource.py:639-746), and its
+    * child writes run alongside the parent write: see [[sharesExtraction]]. */
   def refreshEntity(
       entity: EntityConfig,
       incremental: Boolean,
@@ -100,47 +108,95 @@ object Refresh {
     import org.apache.spark.sql.functions._
 
     val filtered = watermarkFilter(entity, incremental)(source)
-    val stage = (df: DataFrame) =>
-      stampLineage(runId, runTs)(lowercaseAll(df))
-    val mode = if (incremental) SaveMode.Append else SaveMode.Overwrite
+    // one scan feeds the parent and child writes; released whatever the
+    // writes' outcome
+    val shared = sharesExtraction(filtered, subforms)
+    if (shared) filtered.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val stage = (df: DataFrame) =>
+        stampLineage(runId, runTs)(lowercaseAll(df))
+      val mode = if (incremental) SaveMode.Append else SaveMode.Overwrite
 
-    val wantMax =
-      needEventTimeMax && entity.filterFlag && entity.filterField.nonEmpty
+      val wantMax =
+        needEventTimeMax && entity.filterFlag && entity.filterField.nonEmpty
 
-    val parentObs = Observation()
-    val parent0 = stage(parentProjection(subforms.keys.toSeq)(filtered))
-    val parent =
-      if (wantMax)
-        parent0.observe(parentObs, count(lit(1)).as("rows"),
-          // formatted IN the job (session tz semantics), not driver-side
-          date_format(
-            max(col(entity.filterField.toLowerCase)) + expr("INTERVAL 1 MICROSECOND"),
-            "yyyy-MM-dd HH:mm:ss.SSSSSS").as("maxev"))
-      else parent0.observe(parentObs, count(lit(1)).as("rows"))
-    val parentTable = s"stg_${entity.entityId.toLowerCase}"
-    Sinks.writeStaged(parent, s"$sinkDir/$parentTable", mode)
-    val parentMetrics = parentObs.get
-    val parentN = parentMetrics("rows").asInstanceOf[Long]
+      val parentObs = Observation()
+      val parent0 = stage(parentProjection(subforms.keys.toSeq)(filtered))
+      val parent =
+        if (wantMax)
+          parent0.observe(parentObs, count(lit(1)).as("rows"),
+            // formatted IN the job (session tz semantics), not afterwards in Scala
+            date_format(
+              max(col(entity.filterField.toLowerCase)) + expr("INTERVAL 1 MICROSECOND"),
+              "yyyy-MM-dd HH:mm:ss.SSSSSS").as("maxev"))
+        else parent0.observe(parentObs, count(lit(1)).as("rows"))
+      val parentTable = s"stg_${entity.entityId.toLowerCase}"
 
-    val childReports = subforms.toSeq.map { case (colName, childName) =>
-      val obs = Observation()
-      val child = stage(explodeSubform(colName, parentPk)(filtered))
-        .observe(obs, count(lit(1)).as("rows"))
-      val childTable = s"stg_${childName.toLowerCase}"
-      Sinks.writeStaged(child, s"$sinkDir/$childTable", mode)
-      EntityReport(s"${entity.entityId}_${childName}_SUBFORM".toLowerCase,
-        childTable, obs.get("rows").asInstanceOf[Long], "success")
-    }
+      val writeParent = () => {
+        Sinks.writeStaged(parent, s"$sinkDir/$parentTable", mode)
+        parentObs.get
+      }
+      val childWrites = subforms.toSeq.map { case (colName, childName) => () =>
+        val obs = Observation()
+        val child = stage(explodeSubform(colName, parentPk)(filtered))
+          .observe(obs, count(lit(1)).as("rows"))
+        val childTable = s"stg_${childName.toLowerCase}"
+        Sinks.writeStaged(child, s"$sinkDir/$childTable", mode)
+        EntityReport(s"${entity.entityId}_${childName}_SUBFORM".toLowerCase,
+          childTable, obs.get("rows").asInstanceOf[Long], "success")
+      }
+      val (parentMetrics, childReports) =
+        if (shared) {
+          // the child writes run alongside the parent write: whichever task
+          // reaches a page first caches it and the other waits for that
+          // block, not for the other job's commit
+          val children = childWrites.map(w => forked(w()))
+          val p = Try(writeParent())
+          val cs = children.map(joined) // all ended before a failure leaves
+          (p.get, cs.map(_.get))
+        } else {
+          val p = writeParent()
+          (p, childWrites.map(_()))
+        }
+      val parentN = parentMetrics("rows").asInstanceOf[Long]
 
-    val maxEventTime =
-      if (wantMax) Option(parentMetrics("maxev")).map(_.asInstanceOf[String])
-      else None
+      val maxEventTime =
+        if (wantMax) Option(parentMetrics("maxev")).map(_.asInstanceOf[String])
+        else None
 
-    EntityResult(
-      EntityReport(entity.entityId.toLowerCase, parentTable, parentN, "success") +:
-        childReports,
-      maxEventTime)
+      EntityResult(
+        EntityReport(entity.entityId.toLowerCase, parentTable, parentN, "success") +:
+          childReports,
+        maxEventTime)
+    } finally if (shared) filtered.unpersist(blocking = true)
   }
+
+  /** Runs `body` on a fresh daemon thread, which inherits this thread's
+    * Spark local properties and active session (a pooled thread would
+    * carry those of whichever thread created it). */
+  private def forked[T](body: => T): FutureTask[T] = {
+    val task = new FutureTask[T](() => body)
+    val t = new Thread(task, "graft-refresh-subform")
+    t.setDaemon(true)
+    t.start()
+    task
+  }
+
+  private def joined[T](task: FutureTask[T]): Try[T] =
+    Try(task.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }
+
+  /** Whether one refresh persists `filtered` so its parent and child writes
+    * share one scan: only for an entity with subforms read through the
+    * OData connector, where each recomputation is a second round of HTTP
+    * page GETs. A relational source (e.g. a `nestChild` over parquet)
+    * keeps recomputing the nest per write: persisting it measured no
+    * faster and costs one more Spark job. */
+  private[graft] def sharesExtraction(
+      filtered: DataFrame, subforms: Map[String, String]): Boolean =
+    subforms.nonEmpty && filtered.queryExecution.analyzed.exists {
+      case r: DataSourceV2Relation => r.table.isInstanceOf[ODataHttpTable]
+      case _ => false
+    }
 
   /** All entities with per-entity failure isolation and write-then-advance
     * watermark ordering: the watermark moves only AFTER a successful load,
@@ -187,11 +243,11 @@ object Refresh {
   * typed DDL at sqlDwh.py:320-390). */
 object Sinks {
 
-  /** Parquet write, optionally hive-partitioned. Run-report counts come
-    * from re-reading the sink filtered by lineage id (see
-    * Refresh.refreshEntity) so they reflect what was actually persisted;
-    * partitioning staged tables by `extractionid` makes that filter a
-    * partition-pruned read of the run's own files. */
+  /** Parquet write, optionally hive-partitioned. Run-report counts never
+    * re-read the sink: `Dataset.observe` collects them during the write
+    * job itself (see Refresh.refreshEntity), so they count exactly the rows
+    * persisted. Staged tables are partitioned by `extractionid`, so a later
+    * lineage-filtered read prunes to one run's files. */
   def writeParquet(
       df: DataFrame,
       path: String,

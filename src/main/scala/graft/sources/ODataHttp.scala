@@ -48,6 +48,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * NavigationProperty subforms), and [[ODataHttpSource.inferSchema]] walks
   * that wire document with [[graft.schema.MetadataXml]] — the reference's
   * discovery loop (priorityDataSource.py:347-458) over an actual socket.
+  * The document carries the registry's schema version as its ETag, and a
+  * schema the connector read before is revalidated with a body-less 304.
   */
 object ODataJson {
 
@@ -211,7 +213,7 @@ object ODataFilterSyntax {
           case "lt" => LessThan(col, v)
           case "le" => LessThanOrEqual(col, v)
         }
-      case other => sys.error(s"odata-http: bad \\$$filter term '$other'")
+      case other => sys.error(s"odata-http: bad $$filter term '$other'")
     }.toArray
 
   /** `$apply` aggregate wire form: "count" | "min:col" | "max:col" |
@@ -357,7 +359,8 @@ object ODataHttpServer {
   private def respond(x: HttpExchange, code: Int, body: Array[Byte],
       headers: (String, String)*): Unit = {
     headers.foreach { case (k, v) => x.getResponseHeaders.set(k, v) }
-    x.sendResponseHeaders(code, body.length)
+    // a 304 carries no body: length -1 tells the exchange so
+    x.sendResponseHeaders(code, if (code == 304) -1 else body.length)
     val os = x.getResponseBody
     try os.write(body) finally os.close()
   }
@@ -410,8 +413,16 @@ object ODataHttpServer {
       val parts = x.getRequestURI.getPath.stripPrefix("/odata/").split('/')
       val entity = parts(0)
       if (entity == "$metadata") {
-        respond(x, 200, renderMetadataEdmx().getBytes(UTF_8),
-          "Content-Type" -> "application/xml")
+        // conditional GET: a client holding the current registry's document
+        // revalidates with a body-less 304 and nothing is rendered. The
+        // version is read BEFORE rendering, so a registration racing the
+        // render can only make the tag older than the document.
+        val etag = s""""${ODataTestServer.schemaVersion}""""
+        if (Option(x.getRequestHeaders.getFirst("If-None-Match")).contains(etag))
+          respond(x, 304, Array.emptyByteArray, "ETag" -> etag)
+        else
+          respond(x, 200, renderMetadataEdmx().getBytes(UTF_8),
+            "Content-Type" -> "application/xml", "ETag" -> etag)
         return
       }
       // OData v4.01 JSON batch (POST /odata/$batch): N sub-requests, ONE
@@ -684,7 +695,18 @@ object ODataHttpServer {
   private val MaxAttempts = 3
 
   def getRaw(url: String, user: String, pass: String): Array[Byte] =
-    send(request(url, user, pass).GET().build())
+    send(request(url, user, pass).GET().build()).body()
+
+  /** GET that revalidates a copy tagged `etag`: `None` when the server
+    * answers 304 Not Modified, else the fresh body with its ETag. */
+  def getIfChanged(url: String, user: String, pass: String,
+      etag: Option[String]): Option[(Array[Byte], Option[String])] = {
+    val req = request(url, user, pass).GET()
+    etag.foreach(req.header("If-None-Match", _))
+    val resp = send(req.build())
+    if (resp.statusCode == 304) None
+    else Some((resp.body(), Option(resp.headers().firstValue("ETag").orElse(null))))
+  }
 
   def get(url: String, user: String, pass: String): JsonNode =
     mapper.readTree(getRaw(url, user, pass))
@@ -693,14 +715,16 @@ object ODataHttpServer {
   def postRaw(url: String, user: String, pass: String,
       payload: Array[Byte]): Array[Byte] =
     send(request(url, user, pass).header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.ofByteArray(payload)).build())
+      .POST(HttpRequest.BodyPublishers.ofByteArray(payload)).build()).body()
 
   private def request(url: String, user: String, pass: String): HttpRequest.Builder =
     HttpRequest.newBuilder(java.net.URI.create(url))
       .header("Authorization", "Basic " + Base64.getEncoder
         .encodeToString(s"$user:$pass".getBytes(UTF_8)))
 
-  private def send(req: HttpRequest): Array[Byte] = {
+  /** One request with the retry discipline above. 200 and 304 (an answer
+    * to a conditional GET) are results; any other 4xx throws. */
+  private def send(req: HttpRequest): HttpResponse[Array[Byte]] = {
     val what = s"odata-http ${req.method} ${req.uri}"
     var attempt = 1
     while (true) {
@@ -708,7 +732,7 @@ object ODataHttpServer {
         try {
           val resp = client.send(req, HttpResponse.BodyHandlers.ofByteArray())
           val code = resp.statusCode()
-          if (code == 200) return resp.body()
+          if (code == 200 || code == 304) return resp
           val detail = s"HTTP $code: " + new String(resp.body(), UTF_8).take(200)
           if (code < 500) sys.error(s"$what -> $detail")
           detail // 5xx: transient until proven otherwise
@@ -753,16 +777,50 @@ class ODataHttpSource extends TableProvider {
     * priorityDataSource.py:347-458), then rebuild the NATIVE Spark schema:
     * scalar Properties via [[EdmTypes.nativeSpark]] (Decimal re-bounded
     * from the wire's Precision/Scale), NavigationProperty subforms as
-    * array-of-struct columns resolved against their own EntityType. */
+    * array-of-struct columns resolved against their own EntityType.
+    *
+    * A schema read before is revalidated, not re-read: the GET carries the
+    * ETag of the document it came from, and a 304 reuses it. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val xml = new String(ODataHttpServer.getRaw(
-      s"${opt(options, "endpoint")}/$$metadata",
-      opt(options, "user"), opt(options, "pass")), java.nio.charset.StandardCharsets.UTF_8)
+    val endpoint = opt(options, "endpoint")
     val entity = opt(options, "entity")
+    val key = (endpoint, entity)
+    val cached = Option(ODataHttpSource.schemas.get(key))
+    ODataHttpServer.getIfChanged(s"$endpoint/$$metadata",
+        opt(options, "user"), opt(options, "pass"), cached.map(_._1)) match {
+      case None => cached.get._2 // 304 answers only an If-None-Match we sent
+      case Some((body, etag)) =>
+        val schema = ODataHttpSource.schemaFrom(new String(body, UTF_8), entity)
+        etag.foreach(t => ODataHttpSource.schemas.put(key, (t, schema)))
+        schema
+    }
+  }
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table = {
+    val o = new CaseInsensitiveStringMap(properties)
+    new ODataHttpTable(opt(o, "endpoint"), opt(o, "entity"), schema,
+      opt(o, "user"), opt(o, "pass"),
+      Option(o.get("pageSize")).map(_.toInt).getOrElse(1000))
+  }
+
+  override def supportsExternalMetadata(): Boolean = true
+}
+
+object ODataHttpSource {
+
+  /** Schemas read from `$metadata` by (endpoint, entity), each with the
+    * ETag of its document: only the entities asked for, never the parsed
+    * document. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, StructType)]()
+
+  /** One entity's native Spark schema out of an EDMX document. */
+  private def schemaFrom(xml: String, entity: String): StructType = {
     val all = graft.schema.MetadataXml.parse(xml, "priority")
     val byName = all.map(e => e.entityName -> e).toMap
     val meta = byName.getOrElse(entity,
-      sys.error(s"odata-http: entity '$entity' absent from \\$$metadata"))
+      sys.error(s"odata-http: entity '$entity' absent from $$metadata"))
     def scalarFields(m: graft.model.EntityMeta): Seq[StructField] =
       m.fields.map { f =>
         val dt = (f.sourceDataType, f.precision, f.scale) match {
@@ -785,16 +843,6 @@ class ODataHttpSource extends TableProvider {
     }
     StructType(scalarFields(meta) ++ navFields)
   }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val o = new CaseInsensitiveStringMap(properties)
-    new ODataHttpTable(opt(o, "endpoint"), opt(o, "entity"), schema,
-      opt(o, "user"), opt(o, "pass"),
-      Option(o.get("pageSize")).map(_.toInt).getOrElse(1000))
-  }
-
-  override def supportsExternalMetadata(): Boolean = true
 }
 
 final class ODataHttpTable(endpoint: String, entity: String,
@@ -977,12 +1025,16 @@ final class ODataHttpAggScan(endpoint: String, entity: String,
     s"$endpoint/$entity?${qs.mkString("&")}"
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** Planned once per scan: Spark asks again from every copy of the
+    * physical scan node, and each ask would be another preflight GET. */
+  private lazy val partitions: Array[InputPartition] = {
     val node = ODataHttpServer.get(aggUrl("%24preflight=true"), user, pass)
     val gen = node.get("@graft.generation").asLong
     Array(ODataHttpPageRef(aggUrl(s"%24generation=$gen"), readSchema(),
       user, pass))
   }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     ODataHttpPageRef.readerFactory
@@ -1039,10 +1091,11 @@ final class ODataHttpScan(endpoint: String, entity: String,
     s"$endpoint/$entity?${qs.mkString("&")}"
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // HTTP preflight: page count + registry generation, no rows. Every
-    // page GET carries the generation its boundaries were counted
-    // against; the server refuses it (409) once the entity is re-registered
+  /** HTTP preflight: page count + registry generation, no rows. Every
+    * page GET carries the generation its boundaries were counted against;
+    * the server refuses it (409) once the entity is re-registered. Planned
+    * once per scan, like [[ODataHttpAggScan]]'s. */
+  private lazy val partitions: Array[InputPartition] = {
     val node = ODataHttpServer.get(pageUrl(0, "%24preflight=true"), user, pass)
     val nPages = node.get("@graft.pages").asInt
     val gen = node.get("@graft.generation").asLong
@@ -1051,6 +1104,8 @@ final class ODataHttpScan(endpoint: String, entity: String,
         user, pass): InputPartition)
       .toArray
   }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     ODataHttpPageRef.readerFactory

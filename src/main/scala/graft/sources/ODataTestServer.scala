@@ -71,25 +71,37 @@ object ODataTestServer {
 
   private val entities = new ConcurrentHashMap[String, Entry]()
   private val generation = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val schemas = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Version of the registry's schemas, the `$metadata` document's ETag:
+    * every registration bumps it, an append (same schema) does not. */
+  def schemaVersion: Long = schemas.get
+
+  /** Installs a registration, then bumps [[schemaVersion]]: a `$metadata`
+    * render that reads the version first can only tag a document OLDER
+    * than its content, never newer, so a client never revalidates a stale
+    * schema. */
+  private def put(entity: String, df: DataFrame): Unit = {
+    entities.put(entity,
+      new Entry(df.schema, () => collectRows(df), generation.incrementAndGet()))
+    schemas.incrementAndGet()
+  }
 
   /** Register an entity from a parquet table. Schema-only at call time; the
     * "tenant data" materializes on the first scan's preflight. */
-  def register(spark: SparkSession, entity: String, path: String): Unit = {
-    val df = spark.read.parquet(path)
-    entities.put(entity,
-      new Entry(df.schema, () => collectRows(df), generation.incrementAndGet()))
-  }
+  def register(spark: SparkSession, entity: String, path: String): Unit =
+    put(entity, spark.read.parquet(path))
 
   /** Register directly from a frame (harness-side row injection). */
-  def registerDf(entity: String, df: DataFrame): Unit =
-    entities.put(entity,
-      new Entry(df.schema, () => collectRows(df), generation.incrementAndGet()))
+  def registerDf(entity: String, df: DataFrame): Unit = put(entity, df)
 
   /** Append rows to a registered entity, PRESERVING the existing row
     * prefix (the already-materialized rows stay at their indexes, new rows
     * land after) — the property a streaming row-cursor offset depends on:
     * rows [0, oldCount) mean the same thing before and after the append,
-    * so a checkpointed cursor resumes exactly where it stopped. */
+    * so a checkpointed cursor resumes exactly where it stopped. The schema
+    * stays, so [[schemaVersion]] does too; the generation moves, because
+    * page boundaries do. */
   def appendRows(entity: String, df: DataFrame): Unit = {
     val old = entry(entity)
     val oldRows = old.rows // force materialization NOW, then capture
@@ -130,8 +142,7 @@ object ODataTestServer {
     val nested = graft.ops.Relational.nestChild(
       spark.read.parquet(parentPath), spark.read.parquet(childPath),
       parentKey, childKey, subformName, sortCols)
-    entities.put(entity,
-      new Entry(nested.schema, () => collectRows(nested), generation.incrementAndGet()))
+    put(entity, nested)
   }
 
   private def entry(entity: String): Entry =

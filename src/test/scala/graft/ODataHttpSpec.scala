@@ -19,13 +19,19 @@ class ODataHttpSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
   private lazy val http = HttpClient.newHttpClient()
 
-  private def rawGet(url: String, auth: Option[(String, String)]): (Int, String) = {
+  private def rawResponse(url: String, auth: Option[(String, String)],
+      headers: (String, String)*): HttpResponse[String] = {
     val b = HttpRequest.newBuilder(java.net.URI.create(url)).GET()
     auth.foreach { case (u, p) =>
       b.header("Authorization", "Basic " + java.util.Base64.getEncoder
         .encodeToString(s"$u:$p".getBytes(UTF_8)))
     }
-    val r = http.send(b.build(), HttpResponse.BodyHandlers.ofString())
+    headers.foreach { case (k, v) => b.header(k, v) }
+    http.send(b.build(), HttpResponse.BodyHandlers.ofString())
+  }
+
+  private def rawGet(url: String, auth: Option[(String, String)]): (Int, String) = {
+    val r = rawResponse(url, auth)
     (r.statusCode(), r.body())
   }
 
@@ -101,6 +107,96 @@ class ODataHttpSpec extends AnyFunSuite {
       .map(_.name).toSeq == Seq("ordname", "line"))
     assert(got.orderBy("ordname", "line").collect().map(_.toSeq).toSeq ==
       rows.orderBy("ordname", "line").collect().map(_.toSeq).toSeq)
+  }
+
+  /** The `$metadata` response code and ETag for an optional If-None-Match. */
+  private def metadataGet(ifNoneMatch: Option[String]): (Int, String, Option[String]) = {
+    val r = rawResponse(s"${ODataHttpServer.endpoint}/$$metadata",
+      Some((ODataHttpServer.user, ODataHttpServer.pass)),
+      ifNoneMatch.map("If-None-Match" -> _).toSeq: _*)
+    (r.statusCode(), r.body(), Option(r.headers().firstValue("ETag").orElse(null)))
+  }
+
+  private def inferSchema(entity: String): org.apache.spark.sql.types.StructType = {
+    import scala.jdk.CollectionConverters._
+    new graft.sources.ODataHttpSource().inferSchema(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        (ODataHttpServer.tenantOptions + ("entity" -> entity)).asJava))
+  }
+
+  test("$metadata ETag: a matching If-None-Match gets a body-less 304, any other a full 200") {
+    register("nation_http_etag_wire")
+    val (code, body, etag) = metadataGet(None)
+    assert(code == 200 && body.contains("nation_http_etag_wire") && etag.nonEmpty)
+    assert(metadataGet(etag) == ((304, "", etag)))
+    val (stale, staleBody, _) = metadataGet(Some("\"not-the-tag\""))
+    assert(stale == 200 && staleBody == body)
+  }
+
+  test("$metadata ETag: a second load revalidates with one conditional GET and reuses the schema") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.MetadataBuilder
+    val key = new MetadataBuilder().putBoolean("keyFlag", true).build()
+    val nation = H.tbl(spark, sf, "nation")
+    ODataTestServer.registerDf("nation_http_etag",
+      nation.select(nation.columns.toIndexedSeq.map(c =>
+        if (c == "n_nationkey") col(c).as(c, key) else col(c)): _*))
+    val first = inferSchema("nation_http_etag")
+    ODataHttpServer.requestLog.clear()
+    val second = inferSchema("nation_http_etag")
+    val meta = ODataHttpServer.requestLog.asScala.toList.filter(_.contains("$metadata"))
+    assert(meta.size == 1, meta)
+    // the very schema object read the first time: the GET was answered 304
+    assert(second eq first)
+    val loaded = spark.read.format("graft.sources.ODataHttpSource")
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", "nation_http_etag").load().schema
+    assert(loaded == first)
+    assert(loaded("n_nationkey").metadata.getBoolean("keyFlag"))
+    assert(!loaded("n_name").metadata.getBoolean("keyFlag"))
+  }
+
+  test("$metadata ETag: re-registration changes it and the next load sees the new column; appendRows keeps it") {
+    register("nation_http_etag_v2")
+    assert(!inferSchema("nation_http_etag_v2").fieldNames.contains("n_extra"))
+    val before = metadataGet(None)._3
+    val wider = H.tbl(spark, sf, "nation").withColumn("n_extra", lit(7L))
+    ODataTestServer.registerDf("nation_http_etag_v2", wider)
+    val after = metadataGet(None)._3
+    assert(after != before)
+    assert(inferSchema("nation_http_etag_v2").fieldNames.contains("n_extra"))
+    ODataTestServer.appendRows("nation_http_etag_v2", wider.limit(1))
+    assert(metadataGet(None)._3 == after)
+    assert(metadataGet(after)._1 == 304)
+  }
+
+  test("an entity absent from $metadata fails the load with a plain message") {
+    val e = intercept[RuntimeException](
+      spark.read.format("graft.sources.ODataHttpSource")
+        .options(ODataHttpServer.tenantOptions)
+        .option("entity", "nation_http_never_registered").load())
+    assert(e.getMessage ==
+      "odata-http: entity 'nation_http_never_registered' absent from $metadata")
+  }
+
+  test("a scan preflights once: one collect() and one pushed aggregate each send one $preflight GET") {
+    import scala.jdk.CollectionConverters._
+    register("nation_http_preflight")
+    def preflights(action: => Unit): List[String] = {
+      ODataHttpServer.requestLog.clear()
+      action
+      ODataHttpServer.requestLog.asScala.toList
+        .filter(l => l.contains("nation_http_preflight") && l.contains("%24preflight=true"))
+    }
+    val scan = spark.read.format("graft.sources.ODataHttpSource")
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", "nation_http_preflight").option("pageSize", "7").load()
+    val paged = preflights(assert(scan.collect().length == 25))
+    assert(paged.size == 1, paged)
+    val agg = scan.agg(max(col("n_name")))
+    val pushed = preflights(assert(agg.collect().length == 1))
+    assert(pushed.size == 1 && pushed.head.contains("%24applyaggs="), pushed)
+    assert(agg.queryExecution.executedPlan.toString.contains("ODataHttpAggScan"))
   }
 
   test("transient 503s are absorbed by reader retry, not task failure") {

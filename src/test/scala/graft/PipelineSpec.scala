@@ -185,17 +185,97 @@ class PipelineSpec extends AnyFunSuite {
       .filter(_.startsWith("GET /odata/orders_pipeline?"))
     assert(served.exists(r => r.contains("lineitems_subform") &&
       r.contains("%24filter=")), served.mkString("\n"))
-    // staged parent and child match a direct relational computation
-    val expectedParents = H.tbl(spark, sf, "orders")
-      .filter(col("o_orderdate") >= to_timestamp(lit("1998-01-01 00:00:00"))).count()
-    val expectedChildren = H.tbl(spark, sf, "lineitem")
-      .join(H.tbl(spark, sf, "orders")
-          .filter(col("o_orderdate") >= to_timestamp(lit("1998-01-01 00:00:00"))),
-        col("l_orderkey") === col("o_orderkey"), "left_semi").count()
-    assert(spark.read.parquet(s"$dir/stg_orders").count() == expectedParents)
-    assert(spark.read.parquet(s"$dir/stg_lineitems").count() == expectedChildren)
+    // ONE extraction feeds both tables: one preflight, each page once
+    val (preflights, pages) = served.partition(_.contains("preflight"))
+    assert(preflights.size == 1, served.mkString("\n"))
+    assert(pages.nonEmpty && pages.distinct == pages, served.mkString("\n"))
+    // staged parent and child rows match a direct relational computation
+    def asText(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.select(cols.map(c => col(c).cast("string")): _*)
+    def sameRows(got: org.apache.spark.sql.DataFrame,
+        want: org.apache.spark.sql.DataFrame): Unit = {
+      assert(got.count() == want.count())
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
+    val parents = H.tbl(spark, sf, "orders")
+      .filter(col("o_orderdate") >= to_timestamp(lit("1998-01-01 00:00:00")))
+    val children = H.tbl(spark, sf, "lineitem")
+      .join(parents, col("l_orderkey") === col("o_orderkey"), "left_semi")
+    sameRows(asText(spark.read.parquet(s"$dir/stg_orders"), parents.columns.toSeq),
+      asText(parents, parents.columns.toSeq))
+    val childCols = children.columns.toSeq.filterNot(_ == "l_orderkey")
+    sameRows(
+      asText(spark.read.parquet(s"$dir/stg_lineitems")
+        .withColumnRenamed("o_orderkey", "l_orderkey"), "l_orderkey" +: childCols),
+      asText(children, "l_orderkey" +: childCols))
     // watermark advanced past the max observed o_orderdate
     assert(st.get("ORDERS").isDefined)
+  }
+
+  /** Refreshes an OData entity with a subform whose `plainFile` sink path
+    * is a plain file, so that table's write fails; returns the reports, the
+    * sink directory and the state store. */
+  private def refreshWithBrokenSink(plainFile: String) = {
+    import graft.sources.{ODataHttpServer, ODataTestServer}
+    val dir = Files.createTempDirectory("shared_fail").toString
+    val st = new StateStore(s"$dir/state.json")
+    ODataTestServer.registerExpanded(spark, "orders_pipeline_fail",
+      s"$sf/orders.parquet", s"$sf/lineitem.parquet",
+      parentKey = "o_orderkey", childKey = "l_orderkey",
+      subformName = "lineitems_subform", sortCols = Seq("l_linenumber"))
+    val source = spark.read.format("graft.sources.ODataHttpSource")
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", "orders_pipeline_fail").option("pageSize", "500").load()
+    Files.write(java.nio.file.Paths.get(s"$dir/$plainFile"), Array[Byte](1))
+    val e = EntityConfig("ORDERS", filterFlag = true, filterField = "o_orderdate",
+      expand = Seq("LINEITEMS"),
+      lastRun = Some("1998-01-01 00:00:00"), dataStartDate = None)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val reports = Refresh.refreshAll(
+      cfg(e), incremental = true,
+      sources = _ => source,
+      subformsOf = _ => Map("lineitems_subform" -> "LINEITEMS"),
+      pkOf = _ => Seq("o_orderkey"),
+      sinkDir = dir, state = st,
+      runId = "RUNF", runTs = "2026-01-01 00:00:00")
+    // the shared extraction is released whatever failed
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(persisted).isEmpty)
+    assert(reports.size == 1 && reports.head.status.startsWith("error:"),
+      reports.toString)
+    (dir, st)
+  }
+
+  test("a failed child write releases the shared extraction and keeps the watermark") {
+    val (dir, st) = refreshWithBrokenSink("stg_lineitems")
+    assert(spark.read.parquet(s"$dir/stg_orders").count() > 0) // parent landed
+    assert(st.get("ORDERS").isEmpty)
+  }
+
+  test("a failed parent write returns only after its concurrent child write has ended") {
+    val (dir, st) = refreshWithBrokenSink("stg_orders")
+    // the child write ran alongside and was joined before the error report
+    assert(spark.read.parquet(s"$dir/stg_lineitems").count() > 0)
+    assert(st.get("ORDERS").isEmpty)
+  }
+
+  test("only an OData subform entity shares its extraction; a relational nest is recomputed") {
+    import graft.sources.{ODataHttpServer, ODataTestServer}
+    ODataTestServer.registerExpanded(spark, "orders_pipeline_shared",
+      s"$sf/orders.parquet", s"$sf/lineitem.parquet",
+      parentKey = "o_orderkey", childKey = "l_orderkey",
+      subformName = "lineitems_subform", sortCols = Seq("l_linenumber"))
+    val odata = spark.read.format("graft.sources.ODataHttpSource")
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", "orders_pipeline_shared").load()
+      .filter(col("o_orderdate") >= to_timestamp(lit("1998-01-01 00:00:00")))
+    val nested = nestChild(
+      parent = H.tbl(spark, sf, "orders"), child = H.tbl(spark, sf, "lineitem"),
+      parentKey = "o_orderkey", childKey = "l_orderkey",
+      subformName = "lineitems_subform", sortCols = Seq("l_linenumber"))
+    val subforms = Map("lineitems_subform" -> "LINEITEMS")
+    assert(Refresh.sharesExtraction(odata, subforms))
+    assert(!Refresh.sharesExtraction(odata, Map.empty))
+    assert(!Refresh.sharesExtraction(nested, subforms))
   }
 
   test("jdbc writer options carry typed columns and batching") {
