@@ -175,26 +175,16 @@ object Bench {
     final case class Attempt(sec: Double, ok: Boolean)
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Attempt = {
       val t0 = System.nanoTime()
-      // hoisted so the failure path can free too: a query dying AFTER its
-      // localCheckpoint materialized would otherwise leak those blocks
-      // across the rest of the run and its retries (r10 advice item 3)
-      var df: org.apache.spark.sql.DataFrame = null
-      try {
-        df = fn(spark, sfDir)
+      // the result's checkpoint blocks are freed once counted (left in
+      // executor storage they raised the heap floor across a 697-query
+      // run — 13.4 GB tail in r9 — and turned host pauses into 4x stall
+      // entries). Timed BEFORE the free: block release is bookkeeping,
+      // not query cost.
+      try H.actThenFree(fn(spark, sfDir)) { df =>
         df.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // free the result's own localCheckpoint blocks once counted:
-        // H.materialized releases a query's INPUTS, but the checkpointed
-        // result frame itself otherwise lingers in executor storage until
-        // GC reaches the RDD reference — across a 697-query run that is
-        // the rising heap floor (13.4 GB tail in r9) that turns host
-        // pauses into 4x stall entries (r9 verdict item 5). Timed BEFORE
-        // the free: block release is bookkeeping, not query cost.
-        H.freeLocalCheckpoint(df)
-        Attempt(sec, ok = true)
+        Attempt((System.nanoTime() - t0) / 1e9, ok = true)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        if (df != null) scala.util.Try(H.freeLocalCheckpoint(df))
         Attempt((System.nanoTime() - t0) / 1e9, ok = false)
       }
     }

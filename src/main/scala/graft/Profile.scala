@@ -42,9 +42,7 @@ object Profile {
         val t0 = System.nanoTime()
         val df = SparkEntry.queries(name)(spark, sfDir)
         val t1 = System.nanoTime() // fn() returned: plan built + any eager work inside
-        val n = df.count()
-        val t2 = System.nanoTime()
-        H.freeLocalCheckpoint(df)
+        val (n, t2) = H.actThenFree(df)(d => (d.count(), System.nanoTime()))
         Thread.sleep(300) // let the listener bus drain
         spark.sparkContext.removeSparkListener(listener)
         println(f"[profile] $name rep $r: total ${(t2 - t0) / 1e9}%.2f s  (fn+eager ${(t1 - t0) / 1e9}%.2f s, count ${(t2 - t1) / 1e9}%.2f s), $n rows, ${jobs.get()} jobs")

@@ -49,6 +49,28 @@ object H {
   /** Exact decimal sum emitted as a plain double (see determinism rules). */
   def sumMoney(c: Column): Column = sum(dec2(c)).cast("double")
 
+  /** The first `n` hex digits of md5(e) as a BIGINT — the deterministic
+    * bucket/priority hash both engines agree on, with no RNG state.
+    * n ≤ 15 keeps the value below 2^60, inside a signed BIGINT.
+    * DuckDB twin: [[md5PrefixSql]]. */
+  def md5Prefix(e: Column, n: Int): Column = md5Digits(e, n).cast("long")
+
+  /** [[md5Prefix]] before its cast: the base-10 digit string, for the
+    * sites that compare it as text or cast it to another integer type. */
+  def md5Digits(e: Column, n: Int): Column = {
+    require(1 <= n && n <= 15, s"an md5 prefix of $n hex digits overflows BIGINT")
+    conv(substring(md5(e), 1, n), 16, 10)
+  }
+
+  /** DuckDB twin of [[md5Prefix]] over a SQL expression `e`. */
+  def md5PrefixSql(e: String, n: Int): String = {
+    require(1 <= n && n <= 15, s"an md5 prefix of $n hex digits overflows BIGINT")
+    hexSql(s"substr(md5($e), 1, $n)")
+  }
+
+  /** DuckDB: a ready hex-string expression (≤ 15 digits) as a BIGINT. */
+  def hexSql(hex: String): String = s"CAST('0x' || $hex AS BIGINT)"
+
   def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
     canonicalTypes(spark.read.parquet(s"$dir/$name.parquet"))
 
@@ -261,6 +283,15 @@ object H {
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
+
+  /** Run `act` on a query's result, then free the result's own
+    * localCheckpoint blocks, also when `act` throws: a query that dies
+    * after its checkpoint materialized would otherwise leave those blocks
+    * in executor storage for the rest of the run. (H.materialized frees a
+    * query's INPUTS; the checkpointed result itself is the caller's.) A
+    * failing free never hides the action's own failure. */
+  def actThenFree[A](df: DataFrame)(act: DataFrame => A): A =
+    scala.util.Using.resource(df)(act)(freeLocalCheckpoint(_))
 
   /** The events table's `ts` column has shipped in two different physical
     * encodings across driver provisions: TIMESTAMP(NANOS) (readable only via

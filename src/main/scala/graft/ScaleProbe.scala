@@ -163,7 +163,7 @@ object ScaleProbe {
     val calibMs = Bench.calibMs()
     def once(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).count()
+      H.actThenFree(SparkEntry.queries(name)(spark, dir))(_.count())
       (System.nanoTime() - t0) / 1e9
     }
     val rows = queries.map { q =>

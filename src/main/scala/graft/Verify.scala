@@ -68,22 +68,13 @@ object Verify {
     val t00 = System.nanoTime()
     def dump(name: String): Unit = {
       val t0 = System.nanoTime()
-      var df: org.apache.spark.sql.DataFrame = null
       try {
-        df = SparkEntry.queries(name)(spark.newSession(), sfDir)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // release the result's own localCheckpoint blocks (H.materialized
-        // frees a query's INPUTS; the checkpointed result itself would
-        // otherwise sit in executor storage until GC notices — across ~700
-        // queries that is a steadily rising heap floor, r9 verdict item 5)
-        H.freeLocalCheckpoint(df)
+        H.actThenFree(SparkEntry.queries(name)(spark.newSession(), sfDir)) {
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
         val sec = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[verify] $name%-32s ${sec}%7.2f s  (${done.incrementAndGet()}/${work.size}, wall ${(System.nanoTime() - t00) / 1e9}%.0f s)")
       } catch { case e: Throwable =>
-        // free on the FAILURE path too: a query that dies after its
-        // localCheckpoint materialized would otherwise leak those blocks
-        // across the rest of the run (r10 advice item 3)
-        if (df != null) Try(H.freeLocalCheckpoint(df))
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         throw e
       }

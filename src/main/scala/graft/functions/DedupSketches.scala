@@ -311,7 +311,7 @@ object DedupSketches {
     * shift normally and are OR-free-summable (disjoint bit positions). */
   def simhashSql: String = {
     val digits = (1 to 16)
-      .map(k => s"strpos('0123456789abcdef', substr(h, $k, 1)) - 1 AS d$k")
+      .map(k => s"${graft.H.hexSql(s"substr(h, $k, 1)")} AS d$k")
       .mkString(", ")
     val sums = (0 until 64).map { j =>
       val digit = j / 4 + 1

@@ -15,17 +15,6 @@ import graft.H.tbl
   */
 object BootstrapOpsQueries extends QueryModule {
 
-  /** 60-bit seeded hash of an integer key, identical in both engines:
-    * Spark `conv(substring(md5(k),1,15),16,10)`, DuckDB a nibble fold. */
-  private def duckHash(key: String): String = {
-    def nib(i: Int) =
-      s"(strpos('0123456789abcdef', substr(md5(CAST($key AS VARCHAR)), $i, 1)) - 1)"
-    (2 to 15).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-  }
-  private def sparkHash(key: String) =
-    conv(substring(md5(expr(key).cast("string")), 1, 15), 16, 10)
-      .cast("long")
-
   // Poisson(1) cumulative pmf in micro (published constants as exact
   // scaled integers); the hash residue walks this ladder to a weight
   private val PoisCum = Seq(367879L, 735759L, 919699L, 981012L,
@@ -41,7 +30,7 @@ object BootstrapOpsQueries extends QueryModule {
     // aggregation over the exploded coordinates — linear in vectors.
     Q("emb_jl_projection",
       Some {
-        val h = duckHash("r.range")
+        val h = H.md5PrefixSql("CAST(r.range AS VARCHAR)", 15)
         s"""WITH sgn AS (SELECT CAST(r.range // 16 AS BIGINT) AS j,
            |  CAST(r.range % 16 AS BIGINT) AS k,
            |  CASE WHEN ($h) & 1 = 1 THEN 1 ELSE -1 END AS s
@@ -85,7 +74,7 @@ object BootstrapOpsQueries extends QueryModule {
         val emb = tbl(s, dir, "embeddings")
         val sgn = s.range(1024)
           .select(expr("id div 16").as("j"), expr("id % 16").as("k"),
-            when(sparkHash("id").bitwiseAND(1) === 1, 1L)
+            when(H.md5Prefix(col("id").cast("string"), 15).bitwiseAND(1) === 1, 1L)
               .otherwise(-1L).as("s"))
         val q = emb.select(col("vec_id"),
             posexplode(col("embedding")).as(Seq("j", "x")))
@@ -142,7 +131,7 @@ object BootstrapOpsQueries extends QueryModule {
     // raw rows, reproducible on any executor layout.
     Q("stats_poisson_bootstrap",
       Some {
-        val h = duckHash("d.doc_id * 1000 + r.range")
+        val h = H.md5PrefixSql("CAST(d.doc_id * 1000 + r.range AS VARCHAR)", 15)
         val ladder = PoisCum.zipWithIndex
           .map { case (c, i) => s"WHEN ($h) % 1000000 < $c THEN $i" }
           .mkString(" ")
@@ -174,7 +163,7 @@ object BootstrapOpsQueries extends QueryModule {
         val w = docs.select(col("doc_id"), col("n_chars"))
           .crossJoin(s.range(200).select(col("id").as("rep")))
           .withColumn("hmod",
-            sparkHash("doc_id * 1000 + rep") % 1000000)
+            H.md5Prefix(expr("doc_id * 1000 + rep").cast("string"), 15) % 1000000)
           .withColumn("wt", expr(s"CASE $ladder ELSE 9 END"))
         val reps = w.groupBy("rep")
           .agg((sum(col("wt") * col("n_chars")) * 1000000).as("num"),

@@ -182,9 +182,7 @@ object CanaryOpsQueries extends QueryModule {
     // the oracle compact while pinning the exact selection.
     Q("sample_balanced_classes",
       Some {
-        def nib(i: Int) =
-          s"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), $i, 1)) - 1)"
-        val h = (2 to 15).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
+        val h = H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 15)
         s"""WITH d AS (SELECT doc_id, lang, ($h) AS hk FROM documents),
            |mn AS (SELECT min(cnt) AS m FROM
            |  (SELECT lang, count(*) AS cnt FROM d GROUP BY 1)),
@@ -203,8 +201,7 @@ object CanaryOpsQueries extends QueryModule {
       (s, dir) => {
         val d = tbl(s, dir, "documents")
           .select(col("doc_id"), col("lang"),
-            conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-              .cast("long").as("hk"))
+            H.md5Prefix(col("doc_id").cast("string"), 15).as("hk"))
           .localCheckpoint() // hashed corpus feeds rank + summary
         val mn = d.groupBy("lang").agg(count(lit(1)).as("cnt"))
           .agg(min("cnt").as("m"))

@@ -20,14 +20,6 @@ import graft.H.tbl
   */
 object CardinalityOpsQueries extends QueryModule {
 
-  /** DuckDB fold of the first 12 md5 hex digits to BIGINT. */
-  private def hexFoldSql(e: String): String = {
-    val h = s"md5($e)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to 12).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
   def all: Seq[Q] = Seq(
 
     // Join-cardinality estimation error: the exact size of the
@@ -98,7 +90,7 @@ object CardinalityOpsQueries extends QueryModule {
     Q("dq_hash_uniformity",
       Some {
         s"""WITH f AS (SELECT
-           |  ((${hexFoldSql("CAST(doc_id AS VARCHAR)")}) % 64 + 64)
+           |  ((${H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 12)}) % 64 + 64)
            |    % 64 AS bkt FROM documents),
            |c AS (SELECT bkt, CAST(count(*) AS BIGINT) AS o FROM f
            |  GROUP BY 1),
@@ -119,8 +111,8 @@ object CardinalityOpsQueries extends QueryModule {
       },
       (s, dir) => {
         val f = tbl(s, dir, "documents")
-          .select(((conv(substring(md5(col("doc_id").cast("string")),
-            1, 12), 16, 10).cast("long") % 64) + 64) % 64 as "bkt")
+          .select(((H.md5Prefix(col("doc_id").cast("string"), 12) % 64) + 64)
+            % 64 as "bkt")
         val c = f.groupBy("bkt").agg(count(lit(1)).cast("long").as("o"))
         val t = c.agg(sum(col("o")).cast("long").as("n"),
           count(lit(1)).cast("long").as("k"))

@@ -21,14 +21,6 @@ import graft.H.tbl
   */
 object CentroidSyncOpsQueries extends QueryModule {
 
-  /** DuckDB fold of the first 12 md5 hex digits to BIGINT. */
-  private def hexFoldSql(e: String): String = {
-    val h = s"md5($e)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to 12).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
   def all: Seq[Q] = Seq(
 
     // Label-centroid cosine matrix: per-label mean embedding direction,
@@ -101,13 +93,13 @@ object CentroidSyncOpsQueries extends QueryModule {
           "strftime(o_orderdate, '%Y-%m-%d'), o_orderpriority)"
         s"""WITH a AS (SELECT o_orderkey // 400 AS chunk,
            |  CAST(count(*) AS BIGINT) AS n,
-           |  sum(CAST(${hexFoldSql(row)} AS HUGEINT)) AS cs
+           |  sum(CAST(${H.md5PrefixSql(row, 12)} AS HUGEINT)) AS cs
            |  FROM orders WHERE o_orderkey <= (SELECT max(o_orderkey) * 9
            |    // 10 FROM orders) AND o_orderkey % 997 <> 0
            |  GROUP BY 1),
            |b AS (SELECT o_orderkey // 400 AS chunk,
            |  CAST(count(*) AS BIGINT) AS n,
-           |  sum(CAST(${hexFoldSql(row)} AS HUGEINT)) AS cs
+           |  sum(CAST(${H.md5PrefixSql(row, 12)} AS HUGEINT)) AS cs
            |  FROM orders GROUP BY 1),
            |d AS (SELECT b.chunk, b.n AS nb,
            |  CASE WHEN a.chunk IS NULL THEN 'added'
@@ -122,12 +114,11 @@ object CentroidSyncOpsQueries extends QueryModule {
       (s, dir) => {
         def snap(df: org.apache.spark.sql.DataFrame) = df
           .select(expr("o_orderkey div 400").as("chunk"),
-            conv(substring(md5(concat_ws("|", col("o_orderkey"),
+            H.md5Prefix(concat_ws("|", col("o_orderkey"),
               col("o_custkey"), col("o_orderstatus"),
               floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"),
               date_format(col("o_orderdate"), "yyyy-MM-dd"),
-              col("o_orderpriority"))), 1, 12), 16, 10).cast("long")
-              .as("w"))
+              col("o_orderpriority")), 12).as("w"))
           .groupBy("chunk")
           .agg(count(lit(1)).cast("long").as("n"),
             sum(col("w").cast("decimal(38,0)")).cast("decimal(38,0)")

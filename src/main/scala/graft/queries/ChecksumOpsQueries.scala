@@ -24,16 +24,6 @@ import graft.H.tbl
   */
 object ChecksumOpsQueries extends QueryModule {
 
-  /** DuckDB-side fold of the first `k` md5 hex digits to a BIGINT
-    * (Spark uses conv(); DuckDB lacks a hex-parse cast that's stable
-    * across versions, so the oracle folds digit-by-digit). */
-  private def hexFoldSql(expr: String, k: Int): String = {
-    val h = s"md5($expr)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to k).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
   def all: Seq[Q] = Seq(
 
     // Order-invariant table checksum: canonical row rendering → md5 →
@@ -53,37 +43,35 @@ object ChecksumOpsQueries extends QueryModule {
           "CAST(floor(o_totalprice*100 + 0.5) AS BIGINT), " +
           "strftime(o_orderdate, '%Y-%m-%d'), o_orderpriority)"
         s"""SELECT 'lineitem' AS tbl, CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(sum(CAST(${hexFoldSql(li, 12)} AS HUGEINT)) AS VARCHAR)
+           |  CAST(sum(CAST(${H.md5PrefixSql(li, 12)} AS HUGEINT)) AS VARCHAR)
            |    AS checksum
            |FROM lineitem
            |UNION ALL
            |SELECT 'orders', CAST(count(*) AS BIGINT),
-           |  CAST(sum(CAST(${hexFoldSql(o, 12)} AS HUGEINT)) AS VARCHAR)
+           |  CAST(sum(CAST(${H.md5PrefixSql(o, 12)} AS HUGEINT)) AS VARCHAR)
            |FROM orders
            |ORDER BY 1
            |""".stripMargin
       },
       (s, dir) => {
-        def word(c: org.apache.spark.sql.Column) =
-          conv(substring(md5(c), 1, 12), 16, 10).cast("long")
         val li = tbl(s, dir, "lineitem").select(
-          word(concat_ws("|", col("l_orderkey"), col("l_linenumber"),
+          H.md5Prefix(concat_ws("|", col("l_orderkey"), col("l_linenumber"),
             col("l_partkey"), col("l_suppkey"),
             col("l_quantity").cast("long"),
             floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long"),
             col("l_returnflag"), col("l_linestatus"),
-            date_format(col("l_shipdate"), "yyyy-MM-dd"))).as("w"))
+            date_format(col("l_shipdate"), "yyyy-MM-dd")), 12).as("w"))
           .agg(count(lit(1)).cast("long").as("n_rows"),
             sum(col("w").cast("decimal(38,0)")).cast("decimal(38,0)")
               .cast("string").as("checksum"))
           .select(lit("lineitem").as("tbl"), col("n_rows"),
             col("checksum"))
         val o = tbl(s, dir, "orders").select(
-          word(concat_ws("|", col("o_orderkey"), col("o_custkey"),
+          H.md5Prefix(concat_ws("|", col("o_orderkey"), col("o_custkey"),
             col("o_orderstatus"),
             floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"),
             date_format(col("o_orderdate"), "yyyy-MM-dd"),
-            col("o_orderpriority"))).as("w"))
+            col("o_orderpriority")), 12).as("w"))
           .agg(count(lit(1)).cast("long").as("n_rows"),
             sum(col("w").cast("decimal(38,0)")).cast("decimal(38,0)")
               .cast("string").as("checksum"))

@@ -52,8 +52,8 @@ object ChunkOpsQueries extends QueryModule {
         "unnest(range(1, CAST(length(text) AS BIGINT) - 6)) AS i " +
         "FROM documents WHERE length(text) >= 8), " +
         "bnd AS (SELECT doc_id, i FROM pos " +
-        "WHERE instr('0123456789abcdef', substr(md5(substr(text, CAST(i AS INTEGER), 8)), 32, 1)) - 1 = 0 " +
-        "AND (instr('0123456789abcdef', substr(md5(substr(text, CAST(i AS INTEGER), 8)), 31, 1)) - 1) % 2 = 0), " +
+        "WHERE " + H.hexSql("substr(md5(substr(text, CAST(i AS INTEGER), 8)), 31, 2)") +
+        " % 32 = 0), " +
         "bl AS (SELECT doc_id, list_sort(list(i)) AS bs FROM bnd GROUP BY doc_id), " +
         "wb AS (SELECT d.doc_id, d.text, " +
         "CASE WHEN b.bs IS NULL THEN [CAST(1 AS BIGINT)] " +
@@ -85,9 +85,7 @@ object ChunkOpsQueries extends QueryModule {
             col("text"))
           .select(col("doc_id"), col("i"),
             expr("substring(md5(substring(text, CAST(i AS INT), 8)), 31, 2)").as("d2"))
-          .filter(
-            expr("instr('0123456789abcdef', substring(d2, 2, 1)) - 1 = 0") &&
-            expr("(instr('0123456789abcdef', substring(d2, 1, 1)) - 1) % 2 = 0"))
+          .filter(conv(col("d2"), 16, 10).cast("int") % 32 === 0)
           .select(col("doc_id"), col("i").cast("long").as("i"))
         val bl = bnd.groupBy("doc_id")
           .agg(array_sort(collect_list("i")).as("bs0"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Q, QueryModule}
+import graft.{H, Q, QueryModule}
 import graft.H.tbl
 
 /** Round-9 wave 143: mixed-script confusables auditing (the homoglyph
@@ -27,10 +27,9 @@ object ConfusablesHillOpsQueries extends QueryModule {
     // per-row map + explode, one bounded (lang) reduce.
     Q("text_confusables_audit",
       Some(
-        """WITH planted AS (
+        raw"""WITH planted AS (
           |  SELECT doc_id, lang,
-          |    CASE WHEN strpos('0123456789abcdef',
-          |        substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 = 7
+          |    CASE WHEN ${H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 1)} = 7
           |      THEN replace(text, 'a', chr(1072))
           |      ELSE text END AS text
           |  FROM documents),
@@ -52,8 +51,7 @@ object ConfusablesHillOpsQueries extends QueryModule {
       (s, dir) => {
         val planted = tbl(s, dir, "documents")
           .select(col("doc_id"), col("lang"),
-            when(expr("conv(substring(md5(CAST(doc_id AS STRING)), 1, 1)," +
-              " 16, 10)") === "7",
+            when(H.md5Digits(col("doc_id").cast("string"), 1) === "7",
               regexp_replace(col("text"), "a", "а"))
               .otherwise(col("text")).as("text"))
           .localCheckpoint() // doc census + the flagged-token sweep

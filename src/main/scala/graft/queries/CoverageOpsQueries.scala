@@ -169,16 +169,11 @@ object CoverageOpsQueries extends QueryModule {
     // error in bps. Distinct counts are the only wide ops.
     Q("corpus_vocab_capture_recapture",
       Some {
-        def fold(e: String) = {
-          val h = s"md5($e)"
-          def digit(i: Int) =
-            s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-          (2 to 4).foldLeft(digit(1)) { (a, i) => s"($a * 16 + ${digit(i)})" }
-        }
+        val fold = H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 4)
         s"""WITH t AS (SELECT doc_id,
            |  unnest(string_split(text, ' ')) AS w,
-           |  ${fold("CAST(doc_id AS VARCHAR)")} % 2 AS inA,
-           |  ${fold("CAST(doc_id AS VARCHAR)")} % 3 AS inB
+           |  $fold % 2 AS inA,
+           |  $fold % 3 AS inB
            |  FROM documents),
            |f AS (SELECT w, max(CASE WHEN inA = 0 THEN 1 ELSE 0 END)
            |    AS a, max(CASE WHEN inB = 0 THEN 1 ELSE 0 END) AS b
@@ -196,15 +191,12 @@ object CoverageOpsQueries extends QueryModule {
            |""".stripMargin
       },
       (s, dir) => {
-        def fold(c: org.apache.spark.sql.Column) =
-          conv(substring(md5(c.cast("string")), 1, 4), 16, 10)
-            .cast("long")
+        val fold = H.md5Prefix(col("doc_id").cast("string"), 4)
         val t = tbl(s, dir, "documents")
           .select(col("doc_id"),
             explode(split(col("text"), " ", -1)).as("w"))
           .filter(col("w") =!= "")
-          .select(col("w"), (fold(col("doc_id")) % 2).as("inA"),
-            (fold(col("doc_id")) % 3).as("inB"))
+          .select(col("w"), (fold % 2).as("inA"), (fold % 3).as("inB"))
         val f = t.groupBy("w")
           .agg(max(when(col("inA") === 0, 1).otherwise(0)).as("a"),
             max(when(col("inB") === 0, 1).otherwise(0)).as("b"))

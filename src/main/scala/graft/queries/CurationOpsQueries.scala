@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.{Q, QueryModule}
+import graft.{H, Q, QueryModule}
 import graft.H.tbl
 import graft.functions.{DedupSketches => DS, VectorSim => VS}
 
@@ -17,20 +17,13 @@ object CurationOpsQueries extends QueryModule {
 
   private def d9(c: Column): Column = c.cast(DecimalType(18, 9))
 
-  /** DuckDB twin of Spark's `conv(substring(md5(e),1,4),16,10)`. */
-  private def md5FoldSql(e: String): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    s"((((${nib(1)} * 16 + ${nib(2)}) * 16 + ${nib(3)}) * 16 + ${nib(4)}))"
-  }
-
   /** Deterministic 80/20 split predicate on doc_id (same md5-fold family as
     * sample_split — a pure function of the key, reproducible on any
     * partitioning). */
   private def isTrain(docId: Column): Column =
-    conv(substring(md5(docId.cast("string")), 1, 4), 16, 10)
-      .cast("long") % 10 < 8
+    H.md5Prefix(docId.cast("string"), 4) % 10 < 8
   private def isTrainSql(e: String): String =
-    s"${md5FoldSql(s"CAST($e AS VARCHAR)")} % 10 < 8"
+    s"${H.md5PrefixSql(s"CAST($e AS VARCHAR)", 4)} % 10 < 8"
 
   def all: Seq[Q] = Seq(
 
@@ -120,7 +113,7 @@ object CurationOpsQueries extends QueryModule {
            |FROM fan
            |WHERE epoch < permille // 1000
            |   OR (epoch = permille // 1000
-           |       AND ${md5FoldSql("CAST(doc_id AS VARCHAR) || '#' || CAST(epoch AS VARCHAR)")} % 1000 < permille % 1000)
+           |       AND ${H.md5PrefixSql("CAST(doc_id AS VARCHAR) || '#' || CAST(epoch AS VARCHAR)", 4)} % 1000 < permille % 1000)
            |ORDER BY doc_id, epoch""".stripMargin),
       (s, dir) => {
         val cfg = tbl(s, dir, "documents").select(col("doc_id"), col("source"),
@@ -132,9 +125,8 @@ object CurationOpsQueries extends QueryModule {
           explode(sequence(lit(0L), floorEpochs)).as("epoch"))
         val fullCopies = col("epoch") < floorEpochs
         val fracKeep = col("epoch") === floorEpochs &&
-          conv(substring(md5(concat(col("doc_id").cast("string"), lit("#"),
-            col("epoch").cast("string"))), 1, 4), 16, 10).cast("long") % 1000 <
-            col("permille") % 1000
+          H.md5Prefix(concat(col("doc_id").cast("string"), lit("#"),
+            col("epoch").cast("string")), 4) % 1000 < col("permille") % 1000
         fan.filter(fullCopies || fracKeep)
           .select("doc_id", "source", "epoch")
           .orderBy("doc_id", "epoch")

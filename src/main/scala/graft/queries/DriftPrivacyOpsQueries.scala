@@ -23,14 +23,6 @@ import graft.H.tbl
   */
 object DriftPrivacyOpsQueries extends QueryModule {
 
-  /** DuckDB fold of the first 12 md5 hex digits to BIGINT. */
-  private def hexFoldSql(e: String): String = {
-    val h = s"md5($e)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to 12).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
   def all: Seq[Q] = Seq(
 
     // Population stability index, 1996 → 1997 ship-year populations,
@@ -124,7 +116,7 @@ object DriftPrivacyOpsQueries extends QueryModule {
     // value-bounded — and the whole mechanism is one window-free pass.
     Q("privacy_dp_quantile",
       Some {
-        val fold = hexFoldSql("CAST(v AS VARCHAR)")
+        val fold = H.md5PrefixSql("CAST(v AS VARCHAR)", 12)
         """WITH b AS (SELECT CAST(floor(o_totalprice*100 + 0.5) AS BIGINT)
           |    AS v FROM orders),
           |h AS (SELECT v, CAST(count(*) AS BIGINT) AS n FROM b
@@ -164,8 +156,8 @@ object DriftPrivacyOpsQueries extends QueryModule {
             sum(col("n")).over(Window.partitionBy()).cast("long"))
         val sc = c
           .withColumn("u6",
-            (conv(substring(md5(col("v").cast("string")), 1, 12), 16, 10)
-              .cast("long") % 1000000 + 1000000) % 1000000)
+            (H.md5Prefix(col("v").cast("string"), 12) % 1000000 + 1000000)
+              % 1000000)
           .withColumn("r2", abs(lit(2) * col("cum") - col("nn")))
         val s2 = sc.select(col("v"), col("cum"), col("nn"),
           (lit(0.01d) * (lit(0.0d) - col("r2").cast("double") / 2.0d) -

@@ -170,10 +170,7 @@ object EconOpsQueries extends QueryModule {
     // on re-run — which is what an auditable DP pipeline needs.
     Q("privacy_dp_geometric",
       Some {
-        def nib(i: Int) =
-          s"(strpos('0123456789abcdef', substr(md5(event_type), $i, 1)) - 1)"
-        val fold = (2 to 15).foldLeft(nib(1))((acc, i) =>
-          s"($acc * 16 + ${nib(i)})")
+        val fold = H.md5PrefixSql("event_type", 15)
         val ones = (0 to 19).map(i =>
           s"CASE WHEN h & ${(1L << (i + 1)) - 1} = ${(1L << (i + 1)) - 1} " +
             "THEN 1 ELSE 0 END").mkString(" + ")
@@ -194,8 +191,7 @@ object EconOpsQueries extends QueryModule {
         H.events(s, dir)
           .groupBy("event_type")
           .agg(count(lit(1)).cast("long").as("n"))
-          .withColumn("h", conv(substring(md5(col("event_type")), 1, 15),
-            16, 10).cast("long"))
+          .withColumn("h", H.md5Prefix(col("event_type"), 15))
           .withColumn("mag", expr(s"CAST($ones AS BIGINT)"))
           .withColumn("sgn",
             (shiftright(col("h"), 21).bitwiseAND(1) * 2 - 1).cast("long"))

@@ -24,17 +24,6 @@ import graft.H.tbl
   */
 object GovernanceQueries extends QueryModule {
 
-  /** DuckDB int value of hex digit k (1-based) of string expr `h`. */
-  private def hexDigitSql(h: String, k: Int): String =
-    s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-
-  /** DuckDB int value of the first 8 hex chars of `h` (base-16 fold) —
-    * a deterministic 32-bit uniform both engines can replay. */
-  private def hex8Sql(h: String): String =
-    (2 to 8).foldLeft(hexDigitSql(h, 1)) { (acc, k) =>
-      s"($acc * 16 + ${hexDigitSql(h, k)})"
-    }
-
   /** One Hilbert-curve refinement level (cell side `s`, a power of two):
     * SQL fragments computing the next (hx, hy, hd) from the current ones.
     * This is the standard xy2d loop body with the reflection applied to the
@@ -262,15 +251,15 @@ object GovernanceQueries extends QueryModule {
     Q("sample_weighted",
       Some(
         "WITH u AS (SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS w, " +
-          s"(${hex8Sql("md5(CAST(doc_id AS VARCHAR))")} + 1) / 4294967296.0 AS u " +
+          s"(${H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 8)} + 1) / 4294967296.0 AS u " +
           "FROM documents) " +
           "SELECT doc_id, lang, w, w / u AS priority " +
           "FROM u ORDER BY priority DESC, doc_id LIMIT 100"),
       (s, dir) =>
         tbl(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("w"),
-            ((conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-              .cast("long") + 1L) / 4294967296.0).as("u"))
+            ((H.md5Prefix(col("doc_id").cast("string"), 8) + 1L) /
+              4294967296.0).as("u"))
           .select(col("doc_id"), col("lang"), col("w"),
             (col("w") / col("u")).as("priority"))
           .orderBy(col("priority").desc, col("doc_id"))

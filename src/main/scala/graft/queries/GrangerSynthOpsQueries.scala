@@ -11,16 +11,6 @@ import graft.H.tbl
   */
 object GrangerSynthOpsQueries extends QueryModule {
 
-  private def hexFoldSql(e: String): String = {
-    val h = s"md5($e)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to 12).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
-  private def fold48(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(e), 1, 12), 16, 10).cast("long")
-
   def all: Seq[Q] = Seq(
 
     // LAG-1 GRANGER SCREEN between the click and purchase daily count
@@ -148,8 +138,8 @@ object GrangerSynthOpsQueries extends QueryModule {
     // pass through the doc ids with two broadcast range lookups.
     Q("privacy_synthetic_marginals",
       Some {
-        val ul = hexFoldSql("'syl:' || CAST(doc_id AS VARCHAR)")
-        val us = hexFoldSql("'sys:' || CAST(doc_id AS VARCHAR)")
+        val ul = H.md5PrefixSql("'syl:' || CAST(doc_id AS VARCHAR)", 12)
+        val us = H.md5PrefixSql("'sys:' || CAST(doc_id AS VARCHAR)", 12)
         s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
            |ml AS (SELECT lang, CAST(count(*) AS BIGINT) AS c
            |  FROM documents GROUP BY 1),
@@ -228,10 +218,10 @@ object GrangerSynthOpsQueries extends QueryModule {
                 col("u") * col("n") < (col("lo") + col("c")) * 1048576)
             .select(col("doc_id"), col(keyCol).as(out))
         }
-        val synL = pick(fold48(concat(lit("syl:"),
-          col("doc_id").cast("string"))) % 1048576, cl, "lang", "slang")
-        val synS = pick(fold48(concat(lit("sys:"),
-          col("doc_id").cast("string"))) % 1048576, cs, "source", "ssource")
+        val synL = pick(H.md5Prefix(concat(lit("syl:"),
+          col("doc_id").cast("string")), 12) % 1048576, cl, "lang", "slang")
+        val synS = pick(H.md5Prefix(concat(lit("sys:"),
+          col("doc_id").cast("string")), 12) % 1048576, cs, "source", "ssource")
         val syn = synL.join(synS, Seq("doc_id"))
           .localCheckpoint() // synthetic table, read by 3 audits
         def tvdNum(t: org.apache.spark.sql.DataFrame,

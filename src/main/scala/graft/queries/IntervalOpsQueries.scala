@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, QueryModule}
+import graft.{H, Q, QueryModule}
 import graft.H.tbl
 
 /** Eighth wave: interval-overlap join via bucketized equi-join (the
@@ -13,13 +13,6 @@ import graft.H.tbl
   * carries).
   */
 object IntervalOpsQueries extends QueryModule {
-
-  /** DuckDB fold of the first `n` hex chars of md5(`e`) to a BIGINT
-    * (Horner form; twin of Spark's conv(substring(md5(e),1,n),16,10)). */
-  private def md5FoldSqlN(e: String, n: Int): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    (2 to n).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-  }
 
   /** 3-round synchronous 3-core peel as unrolled SQL CTEs: each round
     * keeps nodes whose degree WITHIN the surviving subgraph is ≥ 3. */
@@ -171,10 +164,10 @@ object IntervalOpsQueries extends QueryModule {
     Q("pipeline_shard_manifest",
       Some(
         s"""WITH d AS (
-           |  SELECT CAST(${md5FoldSqlN("CAST(doc_id AS VARCHAR)", 4)} % 16 AS BIGINT) AS shard,
+           |  SELECT CAST(${H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 4)} % 16 AS BIGINT) AS shard,
            |         n_chars,
            |         length(text) - length(replace(text, ' ', '')) + 1 AS toks,
-           |         CAST(${md5FoldSqlN("text", 8)} AS BIGINT) AS fp
+           |         CAST(${H.md5PrefixSql("text", 8)} AS BIGINT) AS fp
            |  FROM documents
            |)
            |SELECT shard, CAST(count(*) AS BIGINT) AS docs,
@@ -184,12 +177,11 @@ object IntervalOpsQueries extends QueryModule {
            |FROM d GROUP BY shard ORDER BY shard""".stripMargin),
       (s, dir) => {
         val d = tbl(s, dir, "documents").select(
-          (conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-            .cast("long") % 16).as("shard"),
+          (H.md5Prefix(col("doc_id").cast("string"), 4) % 16).as("shard"),
           col("n_chars"),
           (length(col("text")) -
             length(translate(col("text"), " ", "")) + 1).as("toks"),
-          conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long").as("fp"))
+          H.md5Prefix(col("text"), 8).as("fp"))
         d.groupBy("shard")
           .agg(count(lit(1)).as("docs"),
             sum(col("n_chars")).cast("long").as("chars"),

@@ -23,13 +23,6 @@ import graft.H.tbl
   */
 object JoinCardEstOpsQueries extends QueryModule {
 
-  // 32-bit fold of md5's first 8 hex chars — the board's cross-engine
-  // deterministic hash (sample_bottomk_minwise discipline)
-  private def md5Fold8Sql(e: String): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    (2 to 8).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-  }
-
   private case class JoinSpec(
       name: String, left: String, lkey: String, right: String, rkey: String)
   private val specs = Seq(
@@ -45,7 +38,7 @@ object JoinCardEstOpsQueries extends QueryModule {
         // estimate, true count, integer error, strategy choice
         def side(tblName: String, key: String, tag: String) =
           s"""h_$tag AS (SELECT DISTINCT
-             |  CAST(${md5Fold8Sql(s"CAST($key AS VARCHAR)")} AS BIGINT) AS hv
+             |  CAST(${H.md5PrefixSql(s"CAST($key AS VARCHAR)", 8)} AS BIGINT) AS hv
              |  FROM $tblName),
              |bk_$tag AS (SELECT hv FROM h_$tag ORDER BY hv LIMIT 64),
              |d_$tag AS (SELECT CASE WHEN count(*) < 64
@@ -81,8 +74,7 @@ object JoinCardEstOpsQueries extends QueryModule {
           def sketch(tn: String, key: String) = {
             val t = tbl(s, dir, tn)
             val h = t.select(
-              conv(substring(md5(col(key).cast("string")), 1, 8), 16, 10)
-                .cast("long").as("hv")).distinct()
+              H.md5Prefix(col(key).cast("string"), 8).as("hv")).distinct()
             // bottom-k: TakeOrderedAndProject — k rows per partition to
             // the driver-side merge, the KMV union property
             val bk = h.orderBy("hv").limit(64)

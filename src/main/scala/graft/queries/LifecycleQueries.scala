@@ -12,16 +12,6 @@ import graft.H.tbl
   */
 object LifecycleQueries extends QueryModule {
 
-  /** DuckDB int value of hex digit k (1-based) of string expr `h`. */
-  private def hexDigitSql(h: String, k: Int): String =
-    s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-
-  /** DuckDB int value of the first 4 hex chars of `h`. */
-  private def hex4Sql(h: String): String =
-    (2 to 4).foldLeft(hexDigitSql(h, 1)) { (acc, k) =>
-      s"($acc * 16 + ${hexDigitSql(h, k)})"
-    }
-
   def all: Seq[Q] = Seq(
 
     // WINSORIZED MEAN per group: clamp at the exact discrete p05/p95 and
@@ -99,8 +89,8 @@ object LifecycleQueries extends QueryModule {
     // re-sharding or retrying never changes the transform.
     Q("text_fim_split",
       Some {
-        val u1 = s"(${hex4Sql("md5(CAST(doc_id AS VARCHAR) || 'a')")} % length(text))"
-        val u2 = s"(${hex4Sql("md5(CAST(doc_id AS VARCHAR) || 'b')")} % length(text))"
+        val u1 = s"(${H.md5PrefixSql("CAST(doc_id AS VARCHAR) || 'a'", 4)} % length(text))"
+        val u2 = s"(${H.md5PrefixSql("CAST(doc_id AS VARCHAR) || 'b'", 4)} % length(text))"
         s"""WITH s AS (
            |  SELECT doc_id, text, least($u1, $u2) AS p1, greatest($u1, $u2) AS p2
            |  FROM documents WHERE length(text) > 0)
@@ -114,8 +104,8 @@ object LifecycleQueries extends QueryModule {
       },
       (s, dir) => {
         def u(salt: String) =
-          conv(substring(md5(concat(col("doc_id").cast("string"), lit(salt))),
-            1, 4), 16, 10).cast("long") % length(col("text"))
+          H.md5Prefix(concat(col("doc_id").cast("string"), lit(salt)), 4) %
+            length(col("text"))
         tbl(s, dir, "documents")
           .filter(length(col("text")) > 0)
           .select(col("doc_id"), col("text"),

@@ -133,13 +133,7 @@ object LinkPredOpsQueries extends QueryModule {
     // model, deterministic end to end.
     Q("graph_linkpred_eval",
       Some {
-        val fold = {
-          val h = "md5(CAST(a * 100000 + b AS VARCHAR))"
-          def digit(i: Int) =
-            s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-          (2 to 4).foldLeft(digit(1)) { (acc, i) =>
-            s"($acc * 16 + ${digit(i)})" }
-        }
+        val fold = H.md5PrefixSql("CAST(a * 100000 + b AS VARCHAR)", 4)
         s"""WITH li AS (SELECT DISTINCT l_orderkey, l_suppkey
            |  FROM lineitem),
            |e AS (SELECT x.l_suppkey AS a, y.l_suppkey AS b FROM li x
@@ -186,8 +180,8 @@ object LinkPredOpsQueries extends QueryModule {
           .groupBy(col("x.l_suppkey").as("a"), col("y.l_suppkey").as("b"))
           .agg(count(lit(1)).as("w")).filter(col("w") >= 6)
           .select(col("a"), col("b"),
-            (conv(substring(md5((col("a") * 100000 + col("b"))
-              .cast("string")), 1, 4), 16, 10).cast("long") % 3 === 0)
+            (H.md5Prefix((col("a") * 100000 + col("b")).cast("string"), 4)
+              % 3 === 0)
               .as("hidden"))
           .localCheckpoint()
         val vis = e.filter(!col("hidden")).select("a", "b")

@@ -92,11 +92,7 @@ object LinkageOpsQueries extends QueryModule {
         // per-(event,b) hashes — measured 16.7 s → bit-extraction cost —
         // and md5 bits are independent, so each permutation is still a
         // fair relabeling.)
-        def nib(i: Int) =
-          s"(strpos('0123456789abcdef', substr(md5(" +
-            s"CAST(event_id AS VARCHAR)), $i, 1)) - 1)"
-        val fold = (2 to 15).foldLeft(nib(1))((acc, i) =>
-          s"($acc * 16 + ${nib(i)})")
+        val fold = H.md5PrefixSql("CAST(event_id AS VARCHAR)", 15)
         s"""WITH e AS MATERIALIZED (SELECT event_id, event_type AS t, ($fold) AS h,
            |  CAST(floor(value*100 + 0.5) AS BIGINT) AS v FROM events),
            |ty AS (SELECT DISTINCT t FROM e),
@@ -142,8 +138,7 @@ object LinkageOpsQueries extends QueryModule {
       (s, dir) => {
         val e = H.events(s, dir)
           .select(col("event_id"), col("event_type").as("t"),
-            conv(substring(md5(col("event_id").cast("string")), 1, 15),
-              16, 10).cast("long").as("h"),
+            H.md5Prefix(col("event_id").cast("string"), 15).as("h"),
             floor(col("value") * 100 + lit(0.5)).cast("long").as("v"))
           .localCheckpoint() // type domain + pair fan-out ×2
         val ty = e.select("t").distinct()

@@ -23,21 +23,11 @@ import graft.H.tbl
   */
 object LmMixQueries extends QueryModule {
 
-  /** md5-hex high nibbles as an integer — deterministic doc split. */
-  private def bucketCol(id: org.apache.spark.sql.Column) =
-    conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("long") % 10
-  private def bucketSql(id: String) = {
-    val h = s"md5(CAST($id AS VARCHAR))"
-    def digit(k: Int) = s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-    val v = (2 to 4).foldLeft(digit(1)) { (acc, k) => s"($acc * 16 + ${digit(k)})" }
-    s"(CAST($v AS BIGINT) % 10)"
-  }
-
   /** The per-doc trigram-scoring CTE chain shared by lm_trigram_score and
     * select_perplexity_band: everything up to a `perdoc` relation with
     * (doc_id, n_tri, n_known, score). */
   private def perDocScoredSql: String = {
-    val b = bucketSql("doc_id")
+    val b = s"(${H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 4)} % 10)"
     "WITH toks AS (SELECT doc_id, string_split(text, ' ') AS l, " +
       s"$b AS bucket FROM documents), " +
       "tr_tri AS (SELECT l[i] AS w1, l[i+1] AS w2, l[i+2] AS w3, count(*) AS c3 " +
@@ -69,7 +59,7 @@ object LmMixQueries extends QueryModule {
   private def perDocScored(s: SparkSession, dir: String): DataFrame = {
     val toks = tbl(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("l"),
-        bucketCol(col("doc_id")).as("bucket"))
+        (H.md5Prefix(col("doc_id").cast("string"), 4) % 10).as("bucket"))
     val train = toks.filter(col("bucket") < 8)
     val triOf = (df: DataFrame) => df.select(
       col("doc_id"),

@@ -11,11 +11,6 @@ import graft.H.tbl
   */
 object LoaderGazetteerOpsQueries extends QueryModule {
 
-  private def md5Fold8Sql(e: String): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    (2 to 8).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-  }
-
   def all: Seq[Q] = Seq(
 
     // REPRODUCIBLE EPOCH SHUFFLE: each training epoch must visit the
@@ -33,7 +28,7 @@ object LoaderGazetteerOpsQueries extends QueryModule {
     // the partition.
     Q("pipeline_epoch_shuffle",
       Some {
-        s"WITH e AS (SELECT doc_id, epoch, CAST(${md5Fold8Sql("CAST(doc_id AS VARCHAR) || ':' || CAST(epoch AS VARCHAR)")} AS BIGINT) AS h " +
+        s"WITH e AS (SELECT doc_id, epoch, CAST(${H.md5PrefixSql("CAST(doc_id AS VARCHAR) || ':' || CAST(epoch AS VARCHAR)", 8)} AS BIGINT) AS h " +
           "FROM documents, (SELECT unnest([0, 1, 2]) AS epoch)), " +
           "r AS (SELECT epoch, doc_id, h, h % 4 AS shard, " +
           "CAST(row_number() OVER (PARTITION BY epoch, h % 4 ORDER BY h, doc_id) AS BIGINT) AS rnk FROM e) " +
@@ -47,9 +42,8 @@ object LoaderGazetteerOpsQueries extends QueryModule {
           .select(col("doc_id"),
             explode(array(lit(0L), lit(1L), lit(2L))).as("epoch"))
           .withColumn("h",
-            conv(substring(md5(concat(col("doc_id").cast("string"),
-              lit(":"), col("epoch").cast("string"))), 1, 8), 16, 10)
-              .cast("long"))
+            H.md5Prefix(concat(col("doc_id").cast("string"),
+              lit(":"), col("epoch").cast("string")), 8))
           .withColumn("shard", pmod(col("h"), lit(4)))
         val r = e.withColumn("rnk",
           row_number().over(Window.partitionBy("epoch", "shard")

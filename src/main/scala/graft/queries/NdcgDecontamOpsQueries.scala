@@ -14,16 +14,6 @@ import graft.H.tbl
   */
 object NdcgDecontamOpsQueries extends QueryModule {
 
-  private def hexFoldSql(e: String): String = {
-    val h = s"md5($e)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to 12).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
-  private def fold48(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(e), 1, 12), 16, 10).cast("long")
-
   /** The 13-gram decontamination core, shared with the pipeline_rlhf_prep
     * capstone (so its hygiene gate cannot desync from the judged
     * dedup_benchmark_decontam op). SQL: CTE chain ending in
@@ -81,12 +71,12 @@ object NdcgDecontamOpsQueries extends QueryModule {
     // packed exactly into the double's 53-bit integer range.
     Q("rank_ndcg_mrr",
       Some {
-        val fq = hexFoldSql(
-          "'qd:' || CAST(q AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")
-        val fs = hexFoldSql(
-          "'sc:' || CAST(q AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")
-        val fg = hexFoldSql(
-          "'rl:' || CAST(q AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")
+        val fq = H.md5PrefixSql(
+          "'qd:' || CAST(q AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)", 12)
+        val fs = H.md5PrefixSql(
+          "'sc:' || CAST(q AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)", 12)
+        val fg = H.md5PrefixSql(
+          "'rl:' || CAST(q AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)", 12)
         s"""WITH qs AS (SELECT unnest(range(0, 50)) AS q),
            |cand AS (SELECT qs.q, d.doc_id, ($fs) AS s,
            |    CASE WHEN ($fg) % 10 = 0 THEN 3
@@ -123,8 +113,8 @@ object NdcgDecontamOpsQueries extends QueryModule {
         import org.apache.spark.sql.GraftColumnBridge
         import graft.functions.TopKByValue
         val qs = s.range(50).select(col("id").as("q"))
-        def fold(tag: String) = fold48(concat(lit(s"$tag:"),
-          col("q").cast("string"), lit(":"), col("doc_id").cast("string")))
+        def fold(tag: String) = H.md5Prefix(concat(lit(s"$tag:"),
+          col("q").cast("string"), lit(":"), col("doc_id").cast("string")), 12)
         val cand = tbl(s, dir, "documents").select("doc_id")
           .crossJoin(broadcast(qs))
           .filter(fold("qd") % 100 === 0)
@@ -189,7 +179,7 @@ object NdcgDecontamOpsQueries extends QueryModule {
     // domain; Σε and Σε² stay exact BIGINT milli.
     Q("privacy_dp_accounting",
       Some {
-        val fe = hexFoldSql("'eps:' || CAST(event_id AS VARCHAR)")
+        val fe = H.md5PrefixSql("'eps:' || CAST(event_id AS VARCHAR)", 12)
         s"""WITH rel AS (SELECT event_type AS team,
            |    (100 + ($fe) % 401) AS eps_milli FROM events),
            |t AS (SELECT team, CAST(count(*) AS BIGINT) AS n_releases,
@@ -211,8 +201,8 @@ object NdcgDecontamOpsQueries extends QueryModule {
       },
       (s, dir) => {
         val rel = H.events(s, dir).select(col("event_type").as("team"),
-          (lit(100L) + fold48(concat(lit("eps:"),
-            col("event_id").cast("string"))) % 401).as("eps_milli"))
+          (lit(100L) + H.md5Prefix(concat(lit("eps:"),
+            col("event_id").cast("string")), 12) % 401).as("eps_milli"))
         val t = rel.groupBy("team").agg(
           count(lit(1)).cast("long").as("n_releases"),
           sum("eps_milli").cast("long").as("eps_sum_milli"),

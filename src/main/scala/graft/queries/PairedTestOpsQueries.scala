@@ -118,11 +118,7 @@ object PairedTestOpsQueries extends QueryModule {
     Q("dq_column_checksums",
       Some {
         def one(cn: String, e: String) = {
-          val h = s"md5($e)"
-          def digit(i: Int) =
-            s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-          val fold = (2 to 12).foldLeft(digit(1)) { (a, i) =>
-            s"($a * 16 + ${digit(i)})" }
+          val fold = H.md5PrefixSql(e, 12)
           s"SELECT '$cn' AS col_name, CAST(sum(CAST($fold AS HUGEINT))" +
             s" AS VARCHAR) AS checksum, CAST(count(DISTINCT $e)" +
             s" AS BIGINT) AS n_distinct FROM orders"
@@ -152,8 +148,7 @@ object PairedTestOpsQueries extends QueryModule {
           " c4, 'o_orderstatus', c5, 'o_totalprice', c6)" +
           " AS (col_name, sval)"))
         lng.groupBy("col_name")
-          .agg(sum(conv(substring(md5(col("sval")), 1, 12), 16, 10)
-              .cast("long").cast("decimal(38,0)"))
+          .agg(sum(H.md5Prefix(col("sval"), 12).cast("decimal(38,0)"))
               .cast("decimal(38,0)").cast("string").as("checksum"),
             countDistinct(col("sval")).cast("long").as("n_distinct"))
           .orderBy("col_name")

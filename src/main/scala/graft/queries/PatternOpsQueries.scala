@@ -134,7 +134,7 @@ object PatternOpsQueries extends QueryModule {
     Q("dedup_minhash_bbit",
       Some {
         val packedSql = (0 until DS.NumHashes).map { i =>
-          s"((instr('0123456789abcdef', substr(h$i, 8, 1)) - 1) % 4) * ${1L << (2 * i)}"
+          s"(${H.hexSql(s"substr(h$i, 8, 1)")} % 4) * ${1L << (2 * i)}"
         }.mkString(" + ")
         s"WITH sh AS (${DS.shinglesSql(3)}), " +
           s"sig AS (${DS.minhashSignatureSql}), " +

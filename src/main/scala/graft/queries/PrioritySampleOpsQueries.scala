@@ -22,18 +22,6 @@ import graft.H.tbl
   */
 object PrioritySampleOpsQueries extends QueryModule {
 
-  /** 48-bit md5 fold (DuckDB side) — the repo's deterministic-uniform. */
-  private def hexFoldSql(e: String): String = {
-    val h = s"md5($e)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to 12).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
-  /** 48-bit md5 fold (Spark side), identical to [[hexFoldSql]]. */
-  private def fold48(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(e), 1, 12), 16, 10).cast("long")
-
   def all: Seq[Q] = Seq(
 
     // PRIORITY SAMPLING: k=64 docs weighted by (capped) n_chars. Priority
@@ -49,7 +37,7 @@ object PrioritySampleOpsQueries extends QueryModule {
     // selection cost is Θ(n) map-side work regardless of corpus size.
     Q("sample_priority_weighted",
       Some {
-        val fold = hexFoldSql("'pri:' || CAST(doc_id AS VARCHAR)")
+        val fold = H.md5PrefixSql("'pri:' || CAST(doc_id AS VARCHAR)", 12)
         s"""WITH keyed AS (SELECT doc_id, lang,
            |    least(greatest(n_chars, 1), 4096) AS w,
            |    (least(greatest(n_chars, 1), 4096) * 281474976710656)
@@ -79,7 +67,7 @@ object PrioritySampleOpsQueries extends QueryModule {
         val keyed = tbl(s, dir, "documents")
           .select(col("doc_id"), col("lang"),
             least(greatest(col("n_chars"), lit(1L)), lit(4096L)).as("w"),
-            fold48(concat(lit("pri:"), col("doc_id").cast("string"))).as("h"))
+            H.md5Prefix(concat(lit("pri:"), col("doc_id").cast("string")), 12).as("h"))
           .withColumn("pkey", expr("(w * 281474976710656) div (h + 1)"))
           .localCheckpoint() // scanned twice: top-65 + corpus totals
         // global top-65: TakeOrdered (bounded), then a 65-row window for

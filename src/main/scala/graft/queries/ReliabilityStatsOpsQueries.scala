@@ -30,12 +30,11 @@ object ReliabilityStatsOpsQueries extends QueryModule {
     // and everything after is (lang × category²)-domain — bounded.
     Q("eval_krippendorff_alpha",
       Some(
-        """WITH r AS (
+        s"""WITH r AS (
           |  SELECT doc_id, lang, n_chars, rater,
           |    least(4, greatest(0, least(4, n_chars // 100)
-          |      + (strpos('0123456789abcdef', substr(md5(
-          |          CAST(doc_id AS VARCHAR) || '#' ||
-          |          CAST(rater AS VARCHAR)), 1, 1)) - 1) % 3 - 1))
+          |      + ${H.md5PrefixSql("CAST(doc_id AS VARCHAR) || '#' || " +
+                    "CAST(rater AS VARCHAR)", 1)} % 3 - 1))
           |      AS label
           |  FROM documents, (SELECT unnest([1, 2, 3]) AS rater)),
           |nu AS (
@@ -83,9 +82,8 @@ object ReliabilityStatsOpsQueries extends QueryModule {
           .withColumn("label",
             least(lit(4), greatest(lit(0),
               least(lit(4), expr("n_chars div 100")) +
-                pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-                  lit("#"), col("rater").cast("string"))), 1, 1), 16, 10)
-                  .cast("long"), lit(3)) - 1)))
+                pmod(H.md5Prefix(concat(col("doc_id").cast("string"),
+                  lit("#"), col("rater").cast("string")), 1), lit(3)) - 1)))
           .localCheckpoint() // unit counts AND the unit census read it
         val nu = r.groupBy("lang", "doc_id", "label")
           .agg(count(lit(1)).cast("long").as("nuc"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.{Q, QueryModule}
+import graft.{H, Q, QueryModule}
 import graft.H.tbl
 import graft.functions.{VectorSim => VS}
 
@@ -22,15 +22,6 @@ import graft.functions.{VectorSim => VS}
 object RetrievalQueries extends QueryModule {
 
   private def d9(c: Column): Column = c.cast(DecimalType(18, 9))
-
-  /** DuckDB-side fold of the first 4 hex chars of md5(`e`) to a BIGINT in
-    * [0, 65536) — the exact twin of Spark's
-    * `conv(substring(md5(e),1,4),16,10)` (same trick as select_dsir /
-    * sample_split). */
-  private def md5FoldSql(e: String): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    s"((((${nib(1)} * 16 + ${nib(2)}) * 16 + ${nib(3)}) * 16 + ${nib(4)}))"
-  }
 
   /** Shared trade-graph SQL prelude: nation→nation edges, each source
     * keeping its top-7 destinations by trade count (scale-invariant
@@ -250,12 +241,12 @@ object RetrievalQueries extends QueryModule {
       Some(
         s"""WITH weights AS (
            |  SELECT CAST(b AS BIGINT) AS b,
-           |         CAST(${md5FoldSql("'w' || CAST(b AS VARCHAR)")} % 2001 - 1000 AS BIGINT) AS w
+           |         CAST(${H.md5PrefixSql("'w' || CAST(b AS VARCHAR)", 4)} % 2001 - 1000 AS BIGINT) AS w
            |  FROM generate_series(0, 255) t(b)
            |), tok AS (
            |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
            |), f AS (
-           |  SELECT doc_id, CAST(${md5FoldSql("term")} % 256 AS BIGINT) AS b FROM tok
+           |  SELECT doc_id, CAST(${H.md5PrefixSql("term", 4)} % 256 AS BIGINT) AS b FROM tok
            |), sc AS (
            |  SELECT f.doc_id, CAST(sum(w.w) AS BIGINT) AS sw,
            |         CAST(count(*) AS BIGINT) AS toks
@@ -268,13 +259,12 @@ object RetrievalQueries extends QueryModule {
       (s, dir) => {
         val weights = s.range(256)
           .select(col("id").as("b"),
-            (conv(substring(md5(concat(lit("w"), col("id").cast("string"))),
-              1, 4), 16, 10).cast("long") % 2001 - 1000).as("w"))
+            (H.md5Prefix(concat(lit("w"), col("id").cast("string")), 4) %
+              2001 - 1000).as("w"))
         val tok = tbl(s, dir, "documents")
           .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         val f = tok.select(col("doc_id"),
-          (conv(substring(md5(col("term")), 1, 4), 16, 10).cast("long")
-            % 256).as("b"))
+          (H.md5Prefix(col("term"), 4) % 256).as("b"))
         val sc = f.join(broadcast(weights), Seq("b"))
           .groupBy("doc_id")
           .agg(sum(col("w")).as("sw"), count(lit(1)).as("toks"))

@@ -16,12 +16,6 @@ import graft.H.tbl
   */
 object RobustOpsQueries extends QueryModule {
 
-  /** DuckDB twin of Spark's `conv(substring(md5(e),1,4),16,10)`. */
-  private def md5FoldSql(e: String): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    s"((((${nib(1)} * 16 + ${nib(2)}) * 16 + ${nib(3)}) * 16 + ${nib(4)}))"
-  }
-
   def all: Seq[Q] = Seq(
 
     // Robust anomaly detection: per event type, flag values more than
@@ -100,13 +94,13 @@ object RobustOpsQueries extends QueryModule {
            |  SELECT unnest(string_split(text, ' ')) AS term FROM documents
            |), h AS (
            |  SELECT term, i,
-           |         CAST(${md5FoldSql("CAST(i AS VARCHAR) || '|' || term")} % 64 AS BIGINT) AS b
+           |         CAST(${H.md5PrefixSql("CAST(i AS VARCHAR) || '|' || term", 4)} % 64 AS BIGINT) AS b
            |  FROM tok CROSS JOIN generate_series(0, 2) t(i)
            |), cm AS (
            |  SELECT i, b, CAST(count(*) AS BIGINT) AS c FROM h GROUP BY 1, 2
            |), probe AS (
            |  SELECT term, i,
-           |         CAST(${md5FoldSql("CAST(i AS VARCHAR) || '|' || term")} % 64 AS BIGINT) AS b
+           |         CAST(${H.md5PrefixSql("CAST(i AS VARCHAR) || '|' || term", 4)} % 64 AS BIGINT) AS b
            |  FROM (SELECT unnest(['spark', 'join', 'window']) AS term) q
            |  CROSS JOIN generate_series(0, 2) t(i)
            |), est AS (
@@ -124,8 +118,7 @@ object RobustOpsQueries extends QueryModule {
         val tok = tbl(s, dir, "documents")
           .select(explode(split(col("text"), " ")).as("term"))
         def bucket(i: Column, term: Column): Column =
-          conv(substring(md5(concat(i.cast("string"), lit("|"), term)),
-            1, 4), 16, 10).cast("long") % 64
+          H.md5Prefix(concat(i.cast("string"), lit("|"), term), 4) % 64
         val h = tok.select(col("term"),
             explode(array(lit(0), lit(1), lit(2))).as("i"))
           .select(col("i"), bucket(col("i"), col("term")).as("b"))

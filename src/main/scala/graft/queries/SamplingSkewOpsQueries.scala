@@ -14,13 +14,6 @@ import graft.H.tbl
   */
 object SamplingSkewOpsQueries extends QueryModule {
 
-  /** DuckDB fold of the first 8 hex chars of md5(`e`) to a BIGINT in
-    * [0, 2^32) — twin of Spark's conv(substring(md5(e),1,8),16,10). */
-  private def md5Fold8Sql(e: String): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    (2 to 8).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-  }
-
   def all: Seq[Q] = Seq(
 
     // BOTTOM-K MINWISE SAMPLE + KMV ESTIMATE: hash every doc_id to a
@@ -34,7 +27,7 @@ object SamplingSkewOpsQueries extends QueryModule {
     // at the driver on k rows), never a global sort.
     Q("sample_bottomk_minwise",
       Some {
-        s"WITH h AS (SELECT doc_id, CAST(${md5Fold8Sql("CAST(doc_id AS VARCHAR)")} AS BIGINT) AS hv " +
+        s"WITH h AS (SELECT doc_id, CAST(${H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 8)} AS BIGINT) AS hv " +
           "FROM documents), " +
           "bk AS (SELECT doc_id, hv, row_number() OVER (ORDER BY hv, doc_id) AS rnk " +
           "FROM h ORDER BY hv, doc_id LIMIT 50), " +
@@ -46,8 +39,7 @@ object SamplingSkewOpsQueries extends QueryModule {
       (s, dir) => {
         val h = tbl(s, dir, "documents")
           .select(col("doc_id"),
-            conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-              .cast("long").as("hv"))
+            H.md5Prefix(col("doc_id").cast("string"), 8).as("hv"))
         // bottom-k: TakeOrderedAndProject, k rows cross the wire per
         // partition — the merge IS the sketch union
         val bk = h.orderBy(col("hv"), col("doc_id")).limit(50)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.{Q, QueryModule}
+import graft.{H, Q, QueryModule}
 import graft.H.tbl
 
 /** Fourth wave of corpus-scale operators: substring-level exact dedup (the
@@ -286,15 +286,12 @@ object ScaleCorpusQueries extends QueryModule {
     // driver loop.
     Q("select_dsir",
       Some(
-        """WITH tok AS (
+        s"""WITH tok AS (
           |  SELECT d.doc_id, d.source, unnest(string_split(d.text, ' ')) AS term
           |  FROM documents d
           |), f AS (
           |  SELECT doc_id, source,
-          |         CAST(((((strpos('0123456789abcdef', substr(md5(term), 1, 1)) - 1) * 16
-          |           + (strpos('0123456789abcdef', substr(md5(term), 2, 1)) - 1)) * 16
-          |           + (strpos('0123456789abcdef', substr(md5(term), 3, 1)) - 1)) * 16
-          |           + (strpos('0123456789abcdef', substr(md5(term), 4, 1)) - 1)) % 256 AS BIGINT) AS b
+          |         CAST(${H.md5PrefixSql("term", 4)} % 256 AS BIGINT) AS b
           |  FROM tok
           |), cnt AS (
           |  SELECT doc_id, b, CAST(count(*) AS BIGINT) AS c FROM f GROUP BY 1, 2
@@ -329,8 +326,7 @@ object ScaleCorpusQueries extends QueryModule {
         val tok = docs.select(col("doc_id"), col("source"),
           explode(split(col("text"), " ")).as("term"))
         val f = tok.select(col("doc_id"), col("source"),
-          (conv(substring(md5(col("term")), 1, 4), 16, 10).cast("long")
-            % 256).as("b"))
+          (H.md5Prefix(col("term"), 4) % 256).as("b"))
         val cnt = f.groupBy("doc_id", "b").agg(count(lit(1)).as("c"))
         val raw = f.groupBy("b").agg(count(lit(1)).as("cr"))
         val tgt = f.filter(col("source") === "src0")

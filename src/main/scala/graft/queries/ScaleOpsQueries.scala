@@ -620,26 +620,27 @@ object ScaleOpsQueries extends QueryModule {
     // md5, no interpreted lambdas) → ordered reassembly via sorted struct
     // collect, the same pattern as paragraph dedup.
     Q("text_span_mask",
-      Some("WITH t AS (SELECT doc_id, string_split(text, ' ') AS l " +
-        "FROM documents), " +
-        "p AS (SELECT doc_id, unnest(range(1, len(l) + 1)) AS i, l FROM t), " +
-        "m AS (SELECT doc_id, i, CASE WHEN (strpos('0123456789abcdef', " +
-        "substr(md5(doc_id::VARCHAR || ':' || (i - 1)::VARCHAR), 1, 1)) - 1) " +
-        "% 5 = 0 THEN '<MASK>' ELSE l[i] END AS tok, " +
-        "CASE WHEN (strpos('0123456789abcdef', " +
-        "substr(md5(doc_id::VARCHAR || ':' || (i - 1)::VARCHAR), 1, 1)) - 1) " +
-        "% 5 = 0 THEN 1 ELSE 0 END AS is_m FROM p) " +
-        "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok, " +
-        "CAST(sum(is_m) AS BIGINT) AS n_masked, " +
-        "array_to_string(list(tok ORDER BY i), ' ') AS masked " +
-        "FROM m GROUP BY doc_id ORDER BY doc_id"),
+      Some {
+        val maskHash =
+          H.md5PrefixSql("doc_id::VARCHAR || ':' || (i - 1)::VARCHAR", 1)
+        "WITH t AS (SELECT doc_id, string_split(text, ' ') AS l " +
+          "FROM documents), " +
+          "p AS (SELECT doc_id, unnest(range(1, len(l) + 1)) AS i, l FROM t), " +
+          s"m AS (SELECT doc_id, i, CASE WHEN $maskHash % 5 = 0 " +
+          "THEN '<MASK>' ELSE l[i] END AS tok, " +
+          s"CASE WHEN $maskHash % 5 = 0 THEN 1 ELSE 0 END AS is_m FROM p) " +
+          "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok, " +
+          "CAST(sum(is_m) AS BIGINT) AS n_masked, " +
+          "array_to_string(list(tok ORDER BY i), ' ') AS masked " +
+          "FROM m GROUP BY doc_id ORDER BY doc_id"
+      },
       (s, dir) =>
         tbl(s, dir, "documents")
           .select(col("doc_id"),
             posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
           .withColumn("is_m",
-            (conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
-              col("pos").cast("string"))), 1, 1), 16, 10).cast("int") % 5 === 0)
+            (H.md5Digits(concat(col("doc_id").cast("string"), lit(":"),
+              col("pos").cast("string")), 1).cast("int") % 5 === 0)
               .cast("int"))
           .withColumn("tok2",
             when(col("is_m") === 1, lit("<MASK>")).otherwise(col("tok")))

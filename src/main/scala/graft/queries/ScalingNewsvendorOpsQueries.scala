@@ -13,16 +13,6 @@ import graft.H.tbl
   */
 object ScalingNewsvendorOpsQueries extends QueryModule {
 
-  private def hexFoldSql(e: String): String = {
-    val h = s"md5($e)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to 12).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
-  private def fold48(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(e), 1, 12), 16, 10).cast("long")
-
   def all: Seq[Q] = Seq(
 
     // SCALING-LAW FIT: L(N) = E + A·N^(−α) (the Chinchilla data-scaling
@@ -37,7 +27,7 @@ object ScalingNewsvendorOpsQueries extends QueryModule {
     // after is bounded-domain arithmetic.
     Q("stats_scaling_law_fit",
       Some {
-        val fj = hexFoldSql("'sl:' || strftime(m, '%Y-%m')")
+        val fj = H.md5PrefixSql("'sl:' || strftime(m, '%Y-%m')", 12)
         s"""WITH runs AS (SELECT date_trunc('month', o_orderdate) AS m,
            |    CAST(count(*) AS BIGINT) AS n FROM orders GROUP BY 1),
            |obs AS (SELECT n,
@@ -67,7 +57,7 @@ object ScalingNewsvendorOpsQueries extends QueryModule {
           .agg(count(lit(1)).cast("long").as("n"))
         val obs = runs.select(col("n"),
           (lit(1.8) + lit(350) * pow(col("n"), -0.32)
-            + (fold48(concat(lit("sl:"), date_format(col("m"), "yyyy-MM")))
+            + (H.md5Prefix(concat(lit("sl:"), date_format(col("m"), "yyyy-MM")), 12)
               % 1000 - 500) / 100000.0).as("l"))
           .localCheckpoint() // bounded month spine, read per grid point
         val grid = s.range(1, 41)
@@ -105,7 +95,7 @@ object ScalingNewsvendorOpsQueries extends QueryModule {
     // offsets), so no single-partition sort of corpus rows anywhere.
     Q("clf_pr_auc",
       Some {
-        val fs = hexFoldSql("'pr:' || CAST(vec_id AS VARCHAR)")
+        val fs = H.md5PrefixSql("'pr:' || CAST(vec_id AS VARCHAR)", 12)
         s"""WITH scored AS (SELECT vec_id,
            |    CASE WHEN label = 0 THEN 1 ELSE 0 END AS y,
            |    ($fs) % 1000
@@ -128,7 +118,7 @@ object ScalingNewsvendorOpsQueries extends QueryModule {
         val scored = tbl(s, dir, "embeddings")
           .select(col("vec_id"),
             when(col("label") === 0, 1L).otherwise(0L).as("y"),
-            (fold48(concat(lit("pr:"), col("vec_id").cast("string"))) % 1000
+            (H.md5Prefix(concat(lit("pr:"), col("vec_id").cast("string")), 12) % 1000
               + when(col("label") === 0, 300L).otherwise(0L)).as("s"))
         val (ranked, rChk) = H.globalRank(scored,
           Seq(col("s").desc, col("vec_id").asc), "rnk")

@@ -255,10 +255,7 @@ object Scd2StreamOpsQueries extends QueryModule {
 
     Q("privacy_randomized_response",
       Some {
-        def nib(i: Int) =
-          s"(strpos('0123456789abcdef', substr(md5(CAST(event_id AS VARCHAR)), $i, 1)) - 1)"
-        val fold = (2 to 15).foldLeft(nib(1))((acc, i) =>
-          s"($acc * 16 + ${nib(i)})")
+        val fold = H.md5PrefixSql("CAST(event_id AS VARCHAR)", 15)
         s"""WITH e AS (SELECT event_type, ($fold) AS h,
            |  CASE WHEN floor(value*100 + 0.5) > 25000 THEN 1 ELSE 0 END
            |    AS truth FROM events),
@@ -279,8 +276,7 @@ object Scd2StreamOpsQueries extends QueryModule {
       (s, dir) => {
         H.events(s, dir)
           .select(col("event_type"),
-            conv(substring(md5(col("event_id").cast("string")), 1, 15),
-              16, 10).cast("long").as("h"),
+            H.md5Prefix(col("event_id").cast("string"), 15).as("h"),
             when(floor(col("value") * 100 + lit(0.5)) > 25000, 1L)
               .otherwise(0L).as("truth"))
           .withColumn("reported",

@@ -18,17 +18,6 @@ import graft.H.tbl
   */
 object ScreeningOpsQueries extends QueryModule {
 
-  /** 60-bit seeded hash of an integer key, identical in both engines:
-    * Spark `conv(substring(md5(k),1,15),16,10)`, DuckDB a nibble fold. */
-  private def duckHash(key: String): String = {
-    def nib(i: Int) =
-      s"(strpos('0123456789abcdef', substr(md5(CAST($key AS VARCHAR)), $i, 1)) - 1)"
-    (2 to 15).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-  }
-  private def sparkHash(key: String) =
-    conv(substring(md5(expr(key).cast("string")), 1, 15), 16, 10)
-      .cast("long")
-
   def all: Seq[Q] = Seq(
 
     // Brier reliability table: a deterministic pseudo-forecast (length
@@ -40,7 +29,7 @@ object ScreeningOpsQueries extends QueryModule {
     // non-negative operands). Shape: one scan, one keyed aggregation.
     Q("eval_brier_reliability",
       Some {
-        val h = duckHash("doc_id")
+        val h = H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 15)
         s"""WITH p AS (SELECT doc_id,
            |  CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS y,
            |  LEAST(1000000, GREATEST(0,
@@ -63,7 +52,8 @@ object ScreeningOpsQueries extends QueryModule {
             when(col("n_chars") >= 300, 1L).otherwise(0L).as("y"),
             least(lit(1000000L), greatest(lit(0L),
               (col("n_chars") - 100) * 2500 +
-                (sparkHash("doc_id") % 500001) - 250000)).as("pm"))
+                (H.md5Prefix(col("doc_id").cast("string"), 15) % 500001) -
+                  250000)).as("pm"))
         p.withColumn("bin", least(expr("pm div 100000"), lit(9L)))
           .groupBy(col("bin").cast("long").as("bin"))
           .agg(count(lit(1)).cast("long").as("n"),

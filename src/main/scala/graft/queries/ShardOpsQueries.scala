@@ -28,19 +28,14 @@ object ShardOpsQueries extends QueryModule {
     // ~1/9 of the keyspace, and only INTO the new node.
     Q("pipeline_consistent_hash",
       Some {
-        def fold13(arg: String) = {
-          def nib(i: Int) =
-            s"(strpos('0123456789abcdef', substr(md5($arg), $i, 1)) - 1)"
-          (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-        }
         s"""WITH vn AS MATERIALIZED (
            |  SELECT n.n AS node, v.v AS vv,
-           |    (${fold13("'n' || CAST(n.n AS VARCHAR) || '#' || CAST(v.v AS VARCHAR)")})
+           |    (${H.md5PrefixSql("'n' || CAST(n.n AS VARCHAR) || '#' || CAST(v.v AS VARCHAR)", 13)})
            |      * 512 + n.n * 16 + v.v AS pos
            |  FROM (SELECT unnest(range(0, 9)) AS n) n,
            |    (SELECT unnest(range(0, 16)) AS v) v),
            |k AS (SELECT c_custkey,
-           |  (${fold13("CAST(c_custkey AS VARCHAR)")}) * 512 AS kh
+           |  (${H.md5PrefixSql("CAST(c_custkey AS VARCHAR)", 13)}) * 512 AS kh
            |  FROM customer),
            |asg AS (SELECT k.c_custkey,
            |  CAST(min(CASE WHEN vn.node <= 7 THEN
@@ -69,16 +64,14 @@ object ShardOpsQueries extends QueryModule {
         val vn = s.range(0, 9).select(col("id").as("node"))
           .crossJoin(s.range(0, 16).select(col("id").as("vv")))
           .select(col("node"), col("vv"),
-            (conv(substring(md5(concat(lit("n"),
-              col("node").cast("string"), lit("#"),
-              col("vv").cast("string"))), 1, 13), 16, 10).cast("long")
+            (H.md5Prefix(concat(lit("n"), col("node").cast("string"),
+              lit("#"), col("vv").cast("string")), 13)
               * 512 + col("node") * 16 + col("vv")).as("pos"))
         // spread: the 144-way ring expansion + per-key md5 ran in the
         // single customer-scan task (1.8 s, 1 task — r11 profile; H.spread)
         val k = graft.H.spread(tbl(s, dir, "customer"), col("c_custkey"))
           .select(col("c_custkey"),
-            (conv(substring(md5(col("c_custkey").cast("string")), 1, 13),
-              16, 10).cast("long") * 512).as("kh"))
+            (H.md5Prefix(col("c_custkey").cast("string"), 13) * 512).as("kh"))
         val adj = when(col("pos") >= col("kh"), col("pos"))
           .otherwise(col("pos") + Wrap)
         val nd = k.crossJoin(broadcast(vn))

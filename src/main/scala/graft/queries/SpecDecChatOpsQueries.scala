@@ -15,27 +15,17 @@ import graft.H.tbl
   */
 object SpecDecChatOpsQueries extends QueryModule {
 
-  private def hexFoldSql(e: String): String = {
-    val h = s"md5($e)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to 12).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
-  private def fold48(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(e), 1, 12), 16, 10).cast("long")
-
   /** The chat-template audit as a reusable per-conversation frame —
     * shared with the pipeline_rlhf_prep capstone so the capstone's
     * validity gate can NEVER desync from the judged dq_chat_template op.
     * SQL: CTE chain ending in relation `chatv`(doc_id, v_alt, v_empty,
     * v_noasst, v_final, asst_chars, all_chars, valid). */
   private[queries] def chatAuditSql: String = {
-    val f0 = hexFoldSql("'ct:' || CAST(doc_id AS VARCHAR)")
-    val fr = hexFoldSql(
-      "'cr:' || CAST(doc_id AS VARCHAR) || ':' || CAST(t AS VARCHAR)")
-    val fe = hexFoldSql(
-      "'ce:' || CAST(doc_id AS VARCHAR) || ':' || CAST(t AS VARCHAR)")
+    val f0 = H.md5PrefixSql("'ct:' || CAST(doc_id AS VARCHAR)", 12)
+    val fr = H.md5PrefixSql(
+      "'cr:' || CAST(doc_id AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 12)
+    val fe = H.md5PrefixSql(
+      "'ce:' || CAST(doc_id AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 12)
     s"""chatd AS (SELECT doc_id, text,
        |    2 + ($f0) % 6 AS nt, ($f0) % 3 = 0 AS has_sys
        |  FROM documents),
@@ -80,21 +70,21 @@ object SpecDecChatOpsQueries extends QueryModule {
     val d = graft.H.spread(
         tbl(s, dir, "documents").select(col("doc_id"), col("text")),
         col("doc_id"))
-      .withColumn("f0", fold48(concat(lit("ct:"), col("doc_id").cast("string"))))
+      .withColumn("f0", H.md5Prefix(concat(lit("ct:"), col("doc_id").cast("string")), 12))
       .select(col("doc_id"), col("text"),
         (lit(2L) + col("f0") % 6).as("nt"), (col("f0") % 3 === 0).as("has_sys"))
     val tu = d.select(col("doc_id"), col("text"), col("nt"), col("has_sys"),
       explode(expr("sequence(0L, nt - 1)")).as("t"))
     val r = tu.select(col("doc_id"), col("nt"), col("t"),
-      when(fold48(concat(lit("cr:"), col("doc_id").cast("string"),
-        lit(":"), col("t").cast("string"))) % 13 === 0, "user")
+      when(H.md5Prefix(concat(lit("cr:"), col("doc_id").cast("string"),
+        lit(":"), col("t").cast("string")), 12) % 13 === 0, "user")
         .when(col("t") === 0 && col("has_sys"), "system")
         .when(col("has_sys"),
           when((col("t") - 1) % 2 === 0, "user").otherwise("assistant"))
         .otherwise(when(col("t") % 2 === 0, "user").otherwise("assistant"))
         .as("role"),
-      when(fold48(concat(lit("ce:"), col("doc_id").cast("string"),
-        lit(":"), col("t").cast("string"))) % 17 === 0, "")
+      when(H.md5Prefix(concat(lit("ce:"), col("doc_id").cast("string"),
+        lit(":"), col("t").cast("string")), 12) % 17 === 0, "")
         .otherwise(trim(expr("substr(text, CAST(1 + t*37 AS INT), 37)")))
         .as("content"))
     val l = r.withColumn("prev",
@@ -134,8 +124,8 @@ object SpecDecChatOpsQueries extends QueryModule {
       Some {
         def face(g: Int) = {
           val slots = (0 until g).map { sl =>
-            val f = hexFoldSql(
-              s"'sd:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j*$g+$sl AS VARCHAR)")
+            val f = H.md5PrefixSql(
+              s"'sd:' || CAST(doc_id AS VARCHAR) || ':' || CAST(j*$g+$sl AS VARCHAR)", 12)
             s"CASE WHEN $sl < least($g, n - j*$g) AND ($f) % 10 = 0 THEN $sl END"
           }.mkString(", ")
           s"""SELECT CAST($g AS BIGINT) AS gamma, CAST(a AS BIGINT) AS a,
@@ -164,8 +154,8 @@ object SpecDecChatOpsQueries extends QueryModule {
             .withColumn("bl", least(lit(g.toLong), col("n") - col("j") * g))
           val slots = (0 until g).map { sl =>
             when(lit(sl) < col("bl") &&
-              fold48(concat(lit("sd:"), col("doc_id").cast("string"),
-                lit(":"), (col("j") * g + sl).cast("string"))) % 10 === 0,
+              H.md5Prefix(concat(lit("sd:"), col("doc_id").cast("string"),
+                lit(":"), (col("j") * g + sl).cast("string")), 12) % 10 === 0,
               lit(sl.toLong))
           }
           val hist = b

@@ -190,11 +190,7 @@ object StatTestOpsQueries extends QueryModule {
         // one 60-bit md5 fold per event; permutation b reads bit b−1
         // (same construction as stats_bh_correction — one hash, forty
         // independent bits)
-        def nib(i: Int) =
-          s"(strpos('0123456789abcdef', substr(md5(" +
-            s"CAST(event_id AS VARCHAR)), $i, 1)) - 1)"
-        val fold = (2 to 15).foldLeft(nib(1))((acc, i) =>
-          s"($acc * 16 + ${nib(i)})")
+        val fold = H.md5PrefixSql("CAST(event_id AS VARCHAR)", 15)
         s"""WITH e AS (SELECT event_id, event_type AS t, ($fold) AS h,
            |  CAST(floor(value*100 + 0.5) AS BIGINT) AS v FROM events
            |  WHERE event_type IN ('click', 'purchase')),
@@ -232,8 +228,7 @@ object StatTestOpsQueries extends QueryModule {
         val e = H.events(s, dir)
           .filter(col("event_type").isin("click", "purchase"))
           .select(col("event_id"), col("event_type").as("t"),
-            conv(substring(md5(col("event_id").cast("string")), 1, 15),
-              16, 10).cast("long").as("h"),
+            H.md5Prefix(col("event_id").cast("string"), 15).as("h"),
             floor(col("value") * 100 + lit(0.5)).cast("long").as("v"))
           .localCheckpoint() // observed stats + the 40-way explode
         val obs = e.agg(

@@ -12,16 +12,6 @@ import graft.H.{dec2, tbl}
   */
 object SurfaceQueries extends QueryModule {
 
-  /** Deterministic 0-15 bucket from an id (md5 hex nibble), both engines. */
-  private def bucket16(id: org.apache.spark.sql.Column) =
-    conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("long") % 16
-  private def bucket16Sql(id: String) = {
-    val h = s"md5(CAST($id AS VARCHAR))"
-    def digit(k: Int) = s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-    val v = (2 to 4).foldLeft(digit(1)) { (acc, k) => s"($acc * 16 + ${digit(k)})" }
-    s"CAST($v % 16 AS BIGINT)"
-  }
-
   def all: Seq[Q] = Seq(
 
     // EXCEPT ALL — multiset difference keeps surplus multiplicity (a
@@ -170,7 +160,8 @@ object SurfaceQueries extends QueryModule {
     // filter, rates are plan literals).
     Q("sample_stratified",
       Some("WITH b AS (SELECT doc_id, lang, " +
-        s"${bucket16Sql("doc_id")} AS bucket FROM documents) " +
+        s"${H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 4)} % 16 AS bucket " +
+        "FROM documents) " +
         "SELECT doc_id, lang, bucket FROM b " +
         "WHERE bucket < (CASE WHEN lang = 'en' THEN 8 " +
         "WHEN lang IN ('de', 'fr') THEN 4 ELSE 2 END) ORDER BY doc_id"),
@@ -178,7 +169,8 @@ object SurfaceQueries extends QueryModule {
         val rate = when(col("lang") === "en", 8)
           .when(col("lang").isin("de", "fr"), 4).otherwise(2)
         tbl(s, dir, "documents")
-          .select(col("doc_id"), col("lang"), bucket16(col("doc_id")).as("bucket"))
+          .select(col("doc_id"), col("lang"),
+            (H.md5Prefix(col("doc_id").cast("string"), 4) % 16).as("bucket"))
           .filter(col("bucket") < rate)
           .orderBy("doc_id")
       }),

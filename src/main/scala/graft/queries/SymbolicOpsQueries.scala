@@ -128,12 +128,8 @@ object SymbolicOpsQueries extends QueryModule {
     // 1 << 63).
     Q("dedup_bloom_gate",
       Some {
-        def posSql(o: Int) =
-          s"((instr('0123456789abcdef', substr(h, ${o + 1}, 1)) - 1) * 4096 + " +
-            s"(instr('0123456789abcdef', substr(h, ${o + 2}, 1)) - 1) * 256 + " +
-            s"(instr('0123456789abcdef', substr(h, ${o + 3}, 1)) - 1) * 16 + " +
-            s"(instr('0123456789abcdef', substr(h, ${o + 4}, 1)) - 1)) % 65536"
-        val positions = Seq(0, 8, 16, 24).map(posSql).mkString(", ")
+        val positions = Seq(0, 8, 16, 24)
+          .map(o => H.hexSql(s"substr(h, ${o + 1}, 4)")).mkString(", ")
         "WITH docs AS (SELECT doc_id, md5(text) AS h FROM documents), " +
           "base AS (SELECT * FROM docs WHERE doc_id % 3 <> 0), " +
           "delta AS (SELECT * FROM docs WHERE doc_id % 7 = 0), " +
@@ -159,16 +155,12 @@ object SymbolicOpsQueries extends QueryModule {
           "FROM truth"
       },
       (s, dir) => {
-        def posExpr(o: Int) =
-          s"((instr('0123456789abcdef', substring(h, ${o + 1}, 1)) - 1) * 4096 + " +
-            s"(instr('0123456789abcdef', substring(h, ${o + 2}, 1)) - 1) * 256 + " +
-            s"(instr('0123456789abcdef', substring(h, ${o + 3}, 1)) - 1) * 16 + " +
-            s"(instr('0123456789abcdef', substring(h, ${o + 4}, 1)) - 1)) % 65536"
         val docs = tbl(s, dir, "documents")
           .select(col("doc_id"), md5(col("text")).as("h")).localCheckpoint()
         val base = docs.filter(col("doc_id") % 3 =!= 0)
         val delta = docs.filter(col("doc_id") % 7 === 0)
-        val posArr = expr(s"array(${Seq(0, 8, 16, 24).map(posExpr).mkString(", ")})")
+        val posArr = array(Seq(0, 8, 16, 24).map(o =>
+          conv(substring(col("h"), o + 1, 4), 16, 10).cast("int")): _*)
         val bitOf = "CASE WHEN p % 64 = 63 " +
           "THEN CAST(-9223372036854775807 AS BIGINT) - 1 " +
           "ELSE shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT)) END"

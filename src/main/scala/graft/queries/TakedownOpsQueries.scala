@@ -16,13 +16,6 @@ import graft.H.tbl
   */
 object TakedownOpsQueries extends QueryModule {
 
-  /** DuckDB fold of the first `n` hex chars of md5(`e`) to a BIGINT
-    * (Horner form; twin of Spark's conv(substring(md5(e),1,n),16,10)). */
-  private def md5FoldSqlN(e: String, n: Int): String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(md5($e), $i, 1)) - 1)"
-    (2 to n).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-  }
-
   def all: Seq[Q] = Seq(
 
     // TAKEDOWN / OPT-OUT PROPAGATION: a revocation list — one
@@ -55,7 +48,7 @@ object TakedownOpsQueries extends QueryModule {
            |    CASE WHEN t.doc_id IS NULL THEN 0 ELSE 1 END AS hit
            |  FROM embeddings e LEFT JOIN td t ON e.vec_id = t.doc_id),
            |fp AS (
-           |  SELECT CAST(sum(${md5FoldSqlN("CAST(doc_id AS VARCHAR)", 8)})
+           |  SELECT CAST(sum(${H.md5PrefixSql("CAST(doc_id AS VARCHAR)", 8)})
            |    AS BIGINT) AS manifest_fp
            |  FROM docs WHERE hit = 1)
            |SELECT
@@ -114,8 +107,7 @@ object TakedownOpsQueries extends QueryModule {
             sum(when(col("hit").isNotNull, col("n_chars")).otherwise(0L))
               .cast("long").as("chars_removed"),
             sum(when(col("hit").isNotNull,
-              conv(substring(md5(col("doc_id").cast("string")), 1, 8),
-                16, 10).cast("long")).otherwise(0L))
+              H.md5Prefix(col("doc_id").cast("string"), 8)).otherwise(0L))
               .cast("long").as("manifest_fp"))))
           .crossJoin(broadcast(jv.agg(
             sum(when(col("hit").isNotNull, 1L).otherwise(0L))

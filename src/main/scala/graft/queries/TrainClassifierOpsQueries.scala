@@ -19,16 +19,6 @@ import graft.H.tbl
   */
 object TrainClassifierOpsQueries extends QueryModule {
 
-  private def hexFoldSql(e: String): String = {
-    val h = s"md5($e)"
-    def digit(i: Int) =
-      s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-    (2 to 12).foldLeft(digit(1)) { (acc, i) => s"($acc * 16 + ${digit(i)})" }
-  }
-
-  private def fold48(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(e), 1, 12), 16, 10).cast("long")
-
   // ---- shared IRLS arithmetic (one definition, both engines) ----------
 
   /** Aggregation SELECT list for one IRLS round over rows carrying
@@ -67,9 +57,9 @@ object TrainClassifierOpsQueries extends QueryModule {
     // matrix library, no collect, the 100 TB GLM-training shape.
     Q("clf_logreg_train",
       Some {
-        val u = s"((${hexFoldSql("'lr:' || CAST(doc_id AS VARCHAR)")}) " +
+        val u = s"((${H.md5PrefixSql("'lr:' || CAST(doc_id AS VARCHAR)", 12)}) " +
           "% 1000 - 500) / 500.0"
-        val x2 = s"((${hexFoldSql("'f2:' || CAST(doc_id AS VARCHAR)")}) " +
+        val x2 = s"((${H.md5PrefixSql("'f2:' || CAST(doc_id AS VARCHAR)", 12)}) " +
           "% 1000) / 250.0"
         def round(prev: String, out: String) =
           s"""${out}_s AS (SELECT ${irlsSums.replace("\n", " ")}
@@ -109,10 +99,10 @@ object TrainClassifierOpsQueries extends QueryModule {
             // an independent hash feature: a second length-derived
             // feature would be collinear with x1 (both ∝ doc length)
             // and leave the normal equations near-singular
-            ((fold48(concat(lit("f2:"), col("doc_id").cast("string")))
+            ((H.md5Prefix(concat(lit("f2:"), col("doc_id").cast("string")), 12)
               % 1000) / 250.0).as("x2"))
           .withColumn("u",
-            (fold48(concat(lit("lr:"), col("doc_id").cast("string")))
+            (H.md5Prefix(concat(lit("lr:"), col("doc_id").cast("string")), 12)
               % 1000 - 500) / 500.0)
           .withColumn("y",
             when(lit(0.9) * col("x1") - lit(0.7) * col("x2") + 0.3
@@ -161,10 +151,7 @@ object TrainClassifierOpsQueries extends QueryModule {
     // per-doc argmax over the bounded 5-class partition.
     Q("clf_naive_bayes_train",
       Some {
-        val dg = "(strpos('0123456789abcdef', substr(md5('d:' || lang" +
-          " || ':' || tok), 1, 1)) - 1) * 16 + " +
-          "(strpos('0123456789abcdef', substr(md5('d:' || lang" +
-          " || ':' || tok), 2, 1)) - 1)"
+        val dg = H.md5PrefixSql("'d:' || lang || ':' || tok", 2)
         s"""WITH base AS (SELECT doc_id, lang,
            |    unnest(string_split(text, ' ')) AS tok FROM documents),
            |dial AS (SELECT doc_id, lang,
@@ -217,8 +204,8 @@ object TrainClassifierOpsQueries extends QueryModule {
         val dial = docs.select(col("doc_id"), col("lang"),
             explode(split(col("text"), " ")).as("tok"))
           .withColumn("tok",
-            when(conv(substring(md5(concat(lit("d:"), col("lang"),
-              lit(":"), col("tok"))), 1, 2), 16, 10).cast("long") % 4 === 0,
+            when(H.md5Prefix(concat(lit("d:"), col("lang"),
+              lit(":"), col("tok")), 2) % 4 === 0,
               concat(col("tok"), lit("_"), col("lang")))
               .otherwise(col("tok")))
           .localCheckpoint() // feeds train stream + test stream

@@ -17,16 +17,6 @@ import graft.H.tbl
   */
 object TrainingDataQueries extends QueryModule {
 
-  /** DuckDB int value of hex digit k (1-based) of string expr `h`. */
-  private def hexDigitSql(h: String, k: Int): String =
-    s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-
-  /** DuckDB int value of the first 4 hex chars of `h` (base-16 fold). */
-  private def hex4Sql(h: String): String =
-    (2 to 4).foldLeft(hexDigitSql(h, 1)) { (acc, k) =>
-      s"($acc * 16 + ${hexDigitSql(h, k)})"
-    }
-
   // ---- shared building blocks (used by the single-op queries AND the
   // corpus-prep capstone — one definition, or the capstone silently
   // desynchronizes from the operators it composes) -----------------------
@@ -53,11 +43,11 @@ object TrainingDataQueries extends QueryModule {
 
   /** Deterministic split bucket 0-9 from an id column (md5 hex prefix). */
   private def bucketCol(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("long") % 10
+    H.md5Prefix(id.cast("string"), 4) % 10
 
   /** DuckDB twin over a ready md5-hex expression `h`. */
   private def bucketSql(h: String): String =
-    s"CAST(${hex4Sql(h)} % 10 AS BIGINT)"
+    s"${H.hexSql(s"substr($h, 1, 4)")} % 10"
 
   /** Per-language split rule (80/20 en, 50/50 elsewhere), both engines. */
   private def splitCol(bucket: org.apache.spark.sql.Column,

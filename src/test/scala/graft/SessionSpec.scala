@@ -5,8 +5,9 @@ import scala.concurrent.duration._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft builds its Spark session in one place (graft.Session), runs
-  * query pools in one place (Verify.pooled) and reads OData through one
-  * connector (ODataHttpSource); these pin all three. */
+  * query pools in one place (Verify.pooled), frees a query result's
+  * checkpoint in one place (H.actThenFree) and reads OData through one
+  * connector (ODataHttpSource); these pin all four. */
 class SessionSpec extends AnyFunSuite {
 
   test("the test session carries every entry of graft.Session's conf table") {
@@ -46,6 +47,21 @@ class SessionSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("sleeper"), e.getMessage)
     assert(!e.getMessage.contains("quick"), e.getMessage)
+  }
+
+  test("actThenFree frees the result's checkpoint when the action succeeds or throws") {
+    val sc = TestSpark.spark.sparkContext
+    def checkpointed() = TestSpark.spark.range(100).toDF().localCheckpoint()
+    val before = sc.getPersistentRDDs.keySet
+    assert(H.actThenFree(checkpointed())(_.count()) == 100)
+    val e = intercept[RuntimeException] {
+      H.actThenFree(checkpointed()) { df =>
+        df.count()
+        throw new RuntimeException("action failed after the checkpoint")
+      }
+    }
+    assert(e.getMessage == "action failed after the checkpoint")
+    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty)
   }
 
   test("a pool retries each failure once, alone, after the pool finishes") {

@@ -36,15 +36,13 @@ object QueryRuns {
   lazy val all: Map[String, scala.util.Try[RunInfo]] = {
     val session = TestSpark.spark // resolve OUTSIDE the pool (lazy-val lock)
     val sf = "/root/testdata/sf0.001"
-    def runOnce(name: String): RunInfo = {
-      val df = SparkEntry.queries(name)(session.newSession(), sf)
-      val qe = df.queryExecution
-      val info = RunInfo(-1L, qe.executedPlan.toString,
-        qe.optimizedPlan.toString, qe.analyzed)
-      val n = df.count()
-      H.freeLocalCheckpoint(df)
-      info.copy(rows = n)
-    }
+    def runOnce(name: String): RunInfo =
+      H.actThenFree(SparkEntry.queries(name)(session.newSession(), sf)) { df =>
+        val qe = df.queryExecution
+        val info = RunInfo(-1L, qe.executedPlan.toString,
+          qe.optimizedPlan.toString, qe.analyzed)
+        info.copy(rows = df.count())
+      }
     Verify.pooled(SparkEntry.queries.keys.toSeq, par = 6, 2.hours)(runOnce)
   }
 }
