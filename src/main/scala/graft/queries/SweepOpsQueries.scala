@@ -18,11 +18,13 @@ object SweepOpsQueries extends QueryModule {
     // (partkey < 60): B(v) = Σ_{s≠v≠t} σ(s,v)·σ(v,t) over pairs with
     // dist(s,v) + dist(v,t) = dist(s,t) — counts shortest paths THROUGH v
     // without Brandes' rational back-propagation, so every quantity is an
-    // exact BIGINT. Shortest paths come from min-length walk enumeration
-    // (a min-length walk cannot revisit a node, so walk counts at the
-    // minimum ARE path counts); the 4-hop bound is the scale contract —
-    // joins fan out degree-bounded, never all-pairs. The walk build is 3
-    // chained equi-joins over the checkpointed edge list.
+    // exact BIGINT. Shortest paths come from min-length walk counts (a
+    // min-length walk cannot revisit a node, so walk counts at the minimum
+    // ARE path counts); the 4-hop bound is the scale contract. Each hop
+    // carries a walk multiplicity c per (s, t, d) — join the edge list,
+    // drop returns to s, sum c per (s, t) — so the walk build stays one row
+    // per reachable pair and hop instead of one row per walk, which on a
+    // dense subgraph is orders of magnitude more.
     Q("graph_stress_centrality",
       Some(
         """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
@@ -69,9 +71,11 @@ object SweepOpsQueries extends QueryModule {
           w.join(ed.select(col("u").as("pu"), col("v").as("pv")),
             col("t") === col("pu"))
             .filter(col("pv") =!= col("s"))
-            .select(col("s"), col("pv").as("t"), lit(d).as("d"))
+            .groupBy(col("s"), col("pv").as("t"))
+            .agg(sum(col("c")).as("c"))
+            .select(col("s"), col("t"), lit(d).as("d"), col("c"))
         val w1 = ed.select(col("u").as("s"), col("v").as("t"),
-          lit(1).as("d"))
+          lit(1).as("d"), lit(1L).as("c"))
         val w2 = extend(w1, 2).localCheckpoint()
         val w3 = extend(w2, 3).localCheckpoint()
         val w4 = extend(w3, 4)
@@ -82,7 +86,7 @@ object SweepOpsQueries extends QueryModule {
             col("dist")), col("s") === col("ms") && col("t") === col("mt")
             && col("d") === col("dist"))
           .groupBy("s", "t", "dist")
-          .agg(count(lit(1)).cast("long").as("sigma"))
+          .agg(sum(col("c")).cast("long").as("sigma"))
           .localCheckpoint() // three-way self-join
         val a = sp.select(col("s").as("as_"), col("t").as("v"),
           col("dist").as("da"), col("sigma").as("sa"))

@@ -5,8 +5,9 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
 
+import com.fasterxml.jackson.core.{JsonEncoding, JsonGenerator}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.Row
@@ -16,7 +17,7 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountS
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -53,68 +54,53 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ODataJson {
 
-  /** schema-driven value → JSON (OData v4 literal shapes: ISO-8601
-    * timestamps, decimals as strings to keep exactness, binary as
-    * base64). */
-  def writeValue(mapper: ObjectMapper, node: ObjectNode, name: String,
-      dt: DataType, v: Any): Unit = {
-    if (v == null) { node.putNull(name); return }
-    dt match {
-      case LongType => node.put(name, v.asInstanceOf[Number].longValue)
-      case IntegerType | ShortType | ByteType =>
-        node.put(name, v.asInstanceOf[Number].intValue)
-      case DoubleType => node.put(name, v.asInstanceOf[Number].doubleValue)
-      case FloatType => node.put(name, v.asInstanceOf[Number].floatValue)
-      case BooleanType => node.put(name, v.asInstanceOf[java.lang.Boolean])
-      case StringType => node.put(name, v.toString)
-      case _: DecimalType =>
-        node.put(name, v.asInstanceOf[java.math.BigDecimal].toPlainString)
-      case TimestampType => v match {
-        case t: java.sql.Timestamp => node.put(name, t.toInstant.toString)
-        case i: java.time.Instant => node.put(name, i.toString)
-      }
+  /** One row as a JSON object, schema-driven, in OData v4 literal shapes:
+    * ISO-8601 timestamps, decimals as strings to keep exactness, binary as
+    * base64. Timestamps and dates print from the java.sql values
+    * `Dataset.collect` returns, so an instant or date before the 1582
+    * calendar switch reads as it always has on the wire. */
+  def writeRow(gen: JsonGenerator, schema: StructType, row: InternalRow): Unit = {
+    gen.writeStartObject()
+    var i = 0
+    while (i < schema.length) {
+      val f = schema(i)
+      gen.writeFieldName(f.name)
+      writeValue(gen, f.dataType, row, i)
+      i += 1
+    }
+    gen.writeEndObject()
+  }
+
+  private def writeValue(gen: JsonGenerator, dt: DataType,
+      v: SpecializedGetters, i: Int): Unit =
+    if (v.isNullAt(i)) gen.writeNull()
+    else dt match {
+      case LongType => gen.writeNumber(v.getLong(i))
+      case IntegerType => gen.writeNumber(v.getInt(i))
+      case ShortType => gen.writeNumber(v.getShort(i).toInt)
+      case ByteType => gen.writeNumber(v.getByte(i).toInt)
+      case DoubleType => gen.writeNumber(v.getDouble(i))
+      case FloatType => gen.writeNumber(v.getFloat(i))
+      case BooleanType => gen.writeBoolean(v.getBoolean(i))
+      case StringType => gen.writeString(v.getUTF8String(i).toString)
+      case d: DecimalType =>
+        gen.writeString(v.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString)
+      case TimestampType =>
+        gen.writeString(DateTimeUtils.toJavaTimestamp(v.getLong(i)).toInstant.toString)
       case TimestampNTZType =>
-        node.put(name, v.asInstanceOf[java.time.LocalDateTime].toString)
-      case DateType => v match {
-        case d: java.sql.Date => node.put(name, d.toLocalDate.toString)
-        case d: java.time.LocalDate => node.put(name, d.toString)
-      }
-      case BinaryType => node.put(name, v.asInstanceOf[Array[Byte]])
+        gen.writeString(DateTimeUtils.microsToLocalDateTime(v.getLong(i)).toString)
+      case DateType =>
+        gen.writeString(DateTimeUtils.toJavaDate(v.getInt(i)).toLocalDate.toString)
+      case BinaryType => gen.writeBinary(v.getBinary(i))
       case ArrayType(et, _) =>
-        val arr = node.putArray(name)
-        v.asInstanceOf[scala.collection.Seq[_]].foreach(e =>
-          writeElement(mapper, arr, et, e))
-      case st: StructType =>
-        node.set[JsonNode](name, rowToJson(mapper, st, v.asInstanceOf[Row]))
-        ()
+        val a = v.getArray(i)
+        gen.writeStartArray()
+        var k = 0
+        while (k < a.numElements()) { writeValue(gen, et, a, k); k += 1 }
+        gen.writeEndArray()
+      case st: StructType => writeRow(gen, st, v.getStruct(i, st.length))
       case other => sys.error(s"odata-http serde: unsupported type $other")
     }
-  }
-
-  private def writeElement(mapper: ObjectMapper, arr: ArrayNode,
-      dt: DataType, v: Any): Unit = {
-    // elements ride through a one-field wrapper to reuse writeValue
-    val tmp = mapper.createObjectNode()
-    writeValue(mapper, tmp, "e", dt, v)
-    arr.add(tmp.get("e"))
-  }
-
-  def rowToJson(mapper: ObjectMapper, schema: StructType, row: Row): ObjectNode = {
-    val node = mapper.createObjectNode()
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
-      writeValue(mapper, node, f.name, f.dataType, row.get(i))
-    }
-    node
-  }
-
-  /** Registry rows are plain Seq[Any]; same shape, no Row allocation. */
-  def seqToJson(mapper: ObjectMapper, schema: StructType, row: Seq[Any]): ObjectNode = {
-    val node = mapper.createObjectNode()
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
-      writeValue(mapper, node, f.name, f.dataType, row(i))
-    }
-    node
-  }
 
   /** JSON → external JVM value (the shapes [[ODataRowsReader]] converts
     * to Catalyst: java.sql types, BigDecimal, Seq, Row). */
@@ -520,12 +506,10 @@ object ODataHttpServer {
         val from = opt("$skip")(_.toLong).get
         val until = from + opt("$top")(_.toLong).getOrElse(1000L)
         val required = selected()
-        val body = mapper.createObjectNode()
-        body.put("@graft.rowcount", ODataTestServer.rowCount(entity))
-        val arr = body.putArray("value")
-        ODataTestServer.fetchRange(entity, required, from, until)
-          .foreach(r => arr.add(ODataJson.seqToJson(mapper, required, r)))
-        return mapper.writeValueAsBytes(body)
+        return jsonBody { body =>
+          body.writeNumberField("@graft.rowcount", ODataTestServer.rowCount(entity))
+          writeRows(body, required, ODataTestServer.fetchRange(entity, required, from, until))
+        }
       }
       val filters = opt("$filter")(ODataFilterSyntax.parse(_, full))
         .getOrElse(Array.empty[Filter])
@@ -536,14 +520,13 @@ object ODataHttpServer {
         val groups = opt("$applygroups")(_.split(',').toSeq.filter(_.nonEmpty))
           .getOrElse(Seq.empty)
         val schema = bad("$apply")(ODataFilterSyntax.aggSchema(full, specs, groups))
-        val body = mapper.createObjectNode()
-        body.put("@graft.generation", ODataTestServer.generationOf(entity))
-        if (!p.contains("$preflight")) {
-          val rows = ODataTestServer.aggregate(entity, filters, specs, groups)
-          val arr = body.putArray("value")
-          rows.foreach(r => arr.add(ODataJson.seqToJson(mapper, schema, r)))
+        val gen = ODataTestServer.generationOf(entity)
+        return jsonBody { body =>
+          body.writeNumberField("@graft.generation", gen)
+          if (!p.contains("$preflight"))
+            writeRows(body, schema,
+              ODataTestServer.aggregate(entity, filters, specs, groups).iterator)
         }
-        return mapper.writeValueAsBytes(body)
       }
       val required = selected()
       val top = opt("$top")(_.toInt)
@@ -556,37 +539,58 @@ object ODataHttpServer {
         t
       }.getOrElse(0L)
       val pageNo = (skiptoken / pageSize).toInt
-      val body = mapper.createObjectNode()
       if (p.contains("$preflight")) {
         // planner path: one O(rows) count to size the scan's partitions
         val (nPages, gen) = ODataTestServer.preflight(entity, filters, top, pageSize)
-        body.put("@graft.generation", gen)
-        body.put("@graft.pages", nPages)
-        body.put("@graft.rowcount", ODataTestServer.rowCount(entity))
+        jsonBody { body =>
+          body.writeNumberField("@graft.generation", gen)
+          body.writeNumberField("@graft.pages", nPages)
+          body.writeNumberField("@graft.rowcount", ODataTestServer.rowCount(entity))
+        }
       } else {
         // page path: serve the page WITHOUT re-counting the entity — the
         // planner already paid the preflight once; a full page implies a
         // nextLink (worst case one trailing empty page on an exact
         // multiple, which returns no link and ends the walk)
         val gen = planned.getOrElse(ODataTestServer.generationOf(entity))
-        body.put("@graft.rowcount", ODataTestServer.rowCount(entity))
-        val rows = ODataTestServer.fetchPage(
-          ODataPageRef(entity, required, filters, top, pageNo, pageSize, gen, orderBy))
-        val arr = body.putArray("value")
-        var served = 0
-        rows.foreach { r => arr.add(ODataJson.seqToJson(mapper, required, r)); served += 1 }
-        val limitExhausted = top.exists(n => (pageNo + 1).toLong * pageSize >= n)
-        if (served == pageSize && !limitExhausted) {
-          val nextQ = rawQuery.split('&')
-            .filter(_.nonEmpty)
-            .filterNot(_.startsWith("%24skiptoken="))
-            .filterNot(_.startsWith("$skiptoken=")) :+
-            s"%24skiptoken=${(pageNo + 1).toLong * pageSize}"
-          body.put("@odata.nextLink",
-            s"$endpoint/$entity?${nextQ.mkString("&")}")
+        jsonBody { body =>
+          body.writeNumberField("@graft.rowcount", ODataTestServer.rowCount(entity))
+          val served = writeRows(body, required, ODataTestServer.fetchPage(
+            ODataPageRef(entity, required, filters, top, pageNo, pageSize, gen, orderBy)))
+          val limitExhausted = top.exists(n => (pageNo + 1).toLong * pageSize >= n)
+          if (served == pageSize && !limitExhausted) {
+            val nextQ = rawQuery.split('&')
+              .filter(_.nonEmpty)
+              .filterNot(_.startsWith("%24skiptoken="))
+              .filterNot(_.startsWith("$skiptoken=")) :+
+              s"%24skiptoken=${(pageNo + 1).toLong * pageSize}"
+            body.writeStringField("@odata.nextLink",
+              s"$endpoint/$entity?${nextQ.mkString("&")}")
+          }
         }
       }
-      mapper.writeValueAsBytes(body)
+  }
+
+  /** A JSON object body whose fields `write` streams out. */
+  private def jsonBody(write: JsonGenerator => Unit): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val gen = mapper.createGenerator(out, JsonEncoding.UTF8)
+    try {
+      gen.writeStartObject()
+      write(gen)
+      gen.writeEndObject()
+    } finally gen.close()
+    out.toByteArray
+  }
+
+  /** The `value` array of rows; returns how many were written. */
+  private def writeRows(gen: JsonGenerator, schema: StructType,
+      rows: Iterator[InternalRow]): Int = {
+    gen.writeArrayFieldStart("value")
+    var n = 0
+    rows.foreach { r => ODataJson.writeRow(gen, schema, r); n += 1 }
+    gen.writeEndArray()
+    n
   }
 
   /** Spark type → EDM type, the reverse of the reference's datatype

@@ -2,7 +2,13 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, RebaseDateTime}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -50,7 +56,10 @@ final class ODataRequestError(val status: Int, message: String)
   * SIMULATION BOUNDARY: the registry holds the tenant's dataset in THIS
   * JVM's memory — it stands in for the remote ERP database, so its size is
   * bounded by the harness box exactly as a demo tenant is bounded by its
-  * DB. Registration is LAZY (nothing materializes until a scan's preflight,
+  * DB. Rows are held as Spark `UnsafeRow`s (one compact byte array per
+  * row, nested subforms included), and every reader — filters, `$orderby`,
+  * aggregates, the page writer — works on those internal values.
+  * Registration is LAZY (nothing materializes until a scan's preflight,
   * driver-side at plan time) and scan partitions carry only page URLs, so
   * the connector — plan, task binaries, readers — never ships the
   * dataset. */
@@ -58,16 +67,29 @@ object ODataTestServer {
 
   /** Lazily-materialized entity: schema is known at registration (logical
     * plan only); rows collect on first preflight — never at register time.
-    * `gen` identifies this registration: scans planned against one
-    * generation refuse to fetch pages from another (see [[fetchPage]]). */
+    * Once they have, the loader, and with it the source frame or the
+    * previous generation's row array, is dropped. `gen` identifies this
+    * registration: scans planned against one generation refuse to fetch
+    * pages from another (see [[fetchPage]]). */
   private final class Entry(val schema: StructType,
-      provider: () => IndexedSeq[Seq[Any]], val gen: Long) {
-    lazy val rows: IndexedSeq[Seq[Any]] = provider()
+      load: () => Array[UnsafeRow], val gen: Long) {
+    private var pending = load
+    lazy val rows: Array[UnsafeRow] = { val r = pending(); pending = null; r }
   }
 
-  private def collectRows(df: DataFrame): IndexedSeq[Seq[Any]] =
-    df.collect().iterator.map(r => (0 until r.length).map(r.get).toVector)
-      .toVector
+  /** The frame's rows as `UnsafeRow`s: its physical plan collected under
+    * an SQL execution id, as `Dataset.collect` runs it, without the
+    * conversion to external `Row`s. */
+  private def collectRows(df: DataFrame): Array[UnsafeRow] = {
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+    lazy val toUnsafe = UnsafeProjection.create(df.schema)
+    rows.map {
+      case u: UnsafeRow => u
+      case r => toUnsafe(r).copy()
+    }
+  }
 
   private val entities = new ConcurrentHashMap[String, Entry]()
   private val generation = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -101,16 +123,20 @@ object ODataTestServer {
     * rows [0, oldCount) mean the same thing before and after the append,
     * so a checkpointed cursor resumes exactly where it stopped. The schema
     * stays, so [[schemaVersion]] does too; the generation moves, because
-    * page boundaries do. */
+    * page boundaries do. The frame's column types must be the entity's:
+    * its rows are stored in the entity's binary layout. */
   def appendRows(entity: String, df: DataFrame): Unit = {
     val old = entry(entity)
+    require(DataType.equalsStructurally(df.schema, old.schema, ignoreNullability = true),
+      s"appendRows($entity): frame types ${df.schema.simpleString} differ from " +
+        s"the entity's ${old.schema.simpleString}")
     val oldRows = old.rows // force materialization NOW, then capture
     entities.put(entity, new Entry(old.schema,
       () => oldRows ++ collectRows(df), generation.incrementAndGet()))
   }
 
   /** Current row count (the streaming cursor's latest offset). */
-  def rowCount(entity: String): Long = entry(entity).rows.size.toLong
+  def rowCount(entity: String): Long = entry(entity).rows.length.toLong
 
   /** Serve a half-open row RANGE of the entity (streaming micro-batch
     * fetch — the `$skiptoken` position read of an incremental pull). */
@@ -118,11 +144,9 @@ object ODataTestServer {
       entity: String,
       required: StructType,
       from: Long,
-      until: Long): Iterator[Seq[Any]] = {
+      until: Long): Iterator[InternalRow] = {
     val e = entry(entity)
-    val idx = e.schema.fieldNames.zipWithIndex.toMap
-    val proj = required.fieldNames.map(idx).toSeq
-    e.rows.iterator.slice(from.toInt, until.toInt).map(r => proj.map(r))
+    e.rows.iterator.slice(from.toInt, until.toInt).map(projection(e.schema, required))
   }
 
   /** Register a parent entity WITH an expandable child subform — the
@@ -176,56 +200,180 @@ object ODataTestServer {
     case _ => false
   }
 
-  private def isIntegral(n: Number): Boolean = n match {
+  /** `required`'s columns of a row of `schema`, as a view (no copy). */
+  private def projection(schema: StructType,
+      required: StructType): InternalRow => InternalRow = {
+    val ordinals = required.fieldNames.map(schema.fieldIndex).toIndexedSeq
+    r => { val p = ProjectingInternalRow(required, ordinals); p.project(r); p }
+  }
+
+  // ---- comparisons on internal values ------------------------------------
+  //
+  // The rules are those of the external values the registry once held
+  // (java.sql.Timestamp/Date, BigDecimal, boxed numbers, String):
+  //   - two integral numbers compare exactly, as longs (past 2^53 too);
+  //   - a decimal and any other number compare as BigDecimals, the other
+  //     one read from its `toString` (so a NaN or infinite double fails);
+  //   - any other pair of numbers compares by `Double.compare` (-0.0 below
+  //     0.0, NaN above everything and equal to itself);
+  //   - strings compare in UTF-8 byte order, Spark's and DuckDB's order
+  //     (Java's UTF-16 order disagrees for non-BMP characters, which would
+  //     make a completely-pushed $orderby return a different top-N than
+  //     Spark's own sort);
+  //   - a TIMESTAMP compares as the java.sql.Timestamp `Dataset.collect`
+  //     returns, i.e. after Spark's rebase to the hybrid Julian calendar
+  //     (which moves only instants before 1582), a DATE as its
+  //     java.sql.Date, a TIMESTAMP_NTZ as its LocalDateTime;
+  //   - any other pair fails on the first non-null value it meets.
+
+  private def isIntegral(n: Any): Boolean = n match {
     case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
          _: java.lang.Byte => true
     case _ => false
   }
 
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
-    case (x: java.sql.Timestamp, y: java.time.Instant) =>
-      x.toInstant.compareTo(y)
-    case (x: java.time.LocalDateTime, y: java.time.LocalDateTime) =>
-      x.compareTo(y)
-    case (x: java.time.LocalDateTime, y: java.sql.Timestamp) =>
-      x.compareTo(y.toLocalDateTime)
-    case (x: java.sql.Date, y: java.sql.Date) => x.compareTo(y)
-    case (x: java.sql.Date, y: java.time.LocalDate) =>
-      x.toLocalDate.compareTo(y)
-    case (x: java.time.LocalDate, y: java.time.LocalDate) => x.compareTo(y)
-    case (x: java.lang.Boolean, y: java.lang.Boolean) => x.compareTo(y)
-    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-    case (x: Number, y: Number) if isIntegral(x) && isIntegral(y) =>
-      java.lang.Long.compare(x.longValue(), y.longValue()) // exact past 2^53
-    case (x: java.math.BigDecimal, y: Number) =>
-      x.compareTo(new java.math.BigDecimal(y.toString))
-    case (x: Number, y: java.math.BigDecimal) =>
-      new java.math.BigDecimal(x.toString).compareTo(y)
-    case (x: Number, y: Number) =>
-      java.lang.Double.compare(x.doubleValue(), y.doubleValue())
-    // UTF-8 binary order (what Spark's UTF8String and DuckDB use) — Java's
-    // UTF-16 compareTo disagrees for non-BMP characters, which would make a
-    // completely-pushed $orderby return a different top-N than Spark's own
-    // sort would
-    case (x: String, y: String) =>
-      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
-    case (x: UTF8String, y) => cmp(x.toString, y)
-    case (x, y: UTF8String) => cmp(x, y.toString)
-    case _ => sys.error(s"incomparable: $a vs $b")
+  private def isIntegralType(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType | ByteType => true
+    case _ => false
   }
 
-  private def evalFilter(f: Filter, row: Seq[Any], idx: Map[String, Int]): Boolean = {
-    def value(col: String): Any = row(idx(col))
+  private def longAt(dt: DataType, i: Int): InternalRow => Long = dt match {
+    case LongType => _.getLong(i)
+    case IntegerType => _.getInt(i).toLong
+    case ShortType => _.getShort(i).toLong
+    case ByteType => _.getByte(i).toLong
+  }
+
+  private def doubleAt(dt: DataType, i: Int): InternalRow => Double = dt match {
+    case DoubleType => _.getDouble(i)
+    case FloatType => _.getFloat(i).toDouble
+    case _ => longAt(dt, i).andThen(_.toDouble)
+  }
+
+  /** The boxed value's `toString`, which its BigDecimal reading starts from. */
+  private def numberTextAt(dt: DataType, i: Int): InternalRow => String = dt match {
+    case DoubleType => r => java.lang.Double.toString(r.getDouble(i))
+    case FloatType => r => java.lang.Float.toString(r.getFloat(i))
+    case _ => longAt(dt, i).andThen(java.lang.Long.toString)
+  }
+
+  private def decimalAt(d: DecimalType, i: Int): InternalRow => java.math.BigDecimal =
+    _.getDecimal(i, d.precision, d.scale).toJavaBigDecimal
+
+  /** A TIMESTAMP's micros as its java.sql.Timestamp counts them. */
+  private def collectedMicros(micros: Long): Long =
+    RebaseDateTime.rebaseGregorianToJulianMicros(micros)
+
+  /** An instant (epoch second + nano) against row micros: whole micros, and
+    * the sign of the sub-micro rest. Out of the micros range it lies
+    * beyond every row. */
+  private def microsCmp(sec: Long, nano: Int): Long => Int = {
+    val (whole, rest) =
+      try (Math.addExact(Math.multiplyExact(sec, 1000000L), (nano / 1000).toLong), nano % 1000)
+      catch { case _: ArithmeticException => if (sec > 0) (Long.MaxValue, 1) else (Long.MinValue, -1) }
+    m => {
+      val c = java.lang.Long.compare(m, whole)
+      if (c != 0) c else -Integer.signum(rest)
+    }
+  }
+
+  private def incomparable(dt: DataType, i: Int, lit: Any): InternalRow => Int = {
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    r => sys.error(s"incomparable: ${toScala(r.get(i, dt))} vs $lit")
+  }
+
+  /** Column `i` (of type `dt`, non-null) against a pushed literal, the
+    * literal converted once. */
+  private def compareTo(dt: DataType, i: Int, lit: Any): InternalRow => Int =
+    (dt, lit) match {
+      case (StringType, s @ (_: String | _: UTF8String)) =>
+        val u = UTF8String.fromString(s.toString)
+        _.getUTF8String(i).compareTo(u)
+      case (BooleanType, b: java.lang.Boolean) =>
+        val y = b.booleanValue
+        r => java.lang.Boolean.compare(r.getBoolean(i), y)
+      case (d: DecimalType, y: java.math.BigDecimal) =>
+        decimalAt(d, i).andThen(_.compareTo(y))
+      case (d: DecimalType, y: Number) =>
+        // lazy: a NaN or infinite literal fails on the first non-null value
+        lazy val yb = new java.math.BigDecimal(y.toString)
+        decimalAt(d, i).andThen(_.compareTo(yb))
+      case (_: NumericType, y: java.math.BigDecimal) =>
+        numberTextAt(dt, i).andThen(new java.math.BigDecimal(_).compareTo(y))
+      case (_, y: Number) if isIntegralType(dt) && isIntegral(y) =>
+        val (g, l) = (longAt(dt, i), y.longValue)
+        r => java.lang.Long.compare(g(r), l)
+      case (_: NumericType, y: Number) =>
+        val (g, d) = (doubleAt(dt, i), y.doubleValue)
+        r => java.lang.Double.compare(g(r), d)
+      case (TimestampType, y: java.sql.Timestamp) =>
+        val c = microsCmp(Math.floorDiv(y.getTime, 1000L), y.getNanos)
+        r => c(collectedMicros(r.getLong(i)))
+      case (TimestampType, y: java.time.Instant) =>
+        val c = microsCmp(y.getEpochSecond, y.getNano)
+        r => c(collectedMicros(r.getLong(i)))
+      case (TimestampNTZType, y @ (_: java.time.LocalDateTime | _: java.sql.Timestamp)) =>
+        val t = y match {
+          case ts: java.sql.Timestamp => ts.toLocalDateTime
+          case ldt: java.time.LocalDateTime => ldt
+        }
+        val c = microsCmp(t.toEpochSecond(java.time.ZoneOffset.UTC), t.getNano)
+        r => c(r.getLong(i))
+      case (DateType, y: java.sql.Date) =>
+        r => DateTimeUtils.toJavaDate(r.getInt(i)).compareTo(y)
+      case (DateType, y: java.time.LocalDate) =>
+        r => DateTimeUtils.toJavaDate(r.getInt(i)).toLocalDate.compareTo(y)
+      case _ => incomparable(dt, i, lit)
+    }
+
+  /** Two non-null values of column `i`, by the same rules. */
+  private def ordering(dt: DataType, i: Int): (InternalRow, InternalRow) => Int =
+    dt match {
+      case StringType => (a, b) => a.getUTF8String(i).compareTo(b.getUTF8String(i))
+      case BooleanType => (a, b) => java.lang.Boolean.compare(a.getBoolean(i), b.getBoolean(i))
+      case d: DecimalType =>
+        (a, b) => a.getDecimal(i, d.precision, d.scale).compare(b.getDecimal(i, d.precision, d.scale))
+      case _ if isIntegralType(dt) =>
+        val g = longAt(dt, i)
+        (a, b) => java.lang.Long.compare(g(a), g(b))
+      case FloatType | DoubleType =>
+        val g = doubleAt(dt, i)
+        (a, b) => java.lang.Double.compare(g(a), g(b))
+      case TimestampType => (a, b) =>
+        java.lang.Long.compare(collectedMicros(a.getLong(i)), collectedMicros(b.getLong(i)))
+      case TimestampNTZType => (a, b) => java.lang.Long.compare(a.getLong(i), b.getLong(i))
+      case DateType => (a, b) =>
+        DateTimeUtils.toJavaDate(a.getInt(i)).compareTo(DateTimeUtils.toJavaDate(b.getInt(i)))
+      case _ =>
+        val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+        (a, b) => sys.error(s"incomparable: ${toScala(a.get(i, dt))} vs ${toScala(b.get(i, dt))}")
+    }
+
+  /** A pushed filter compiled against a schema: column ordinal resolved,
+    * literal converted once. A null never passes a comparison. */
+  private def compile(f: Filter, schema: StructType): InternalRow => Boolean = {
+    def test(c: String, v: Any)(ok: Int => Boolean): InternalRow => Boolean = {
+      val i = schema.fieldIndex(c)
+      val cmp = compareTo(schema(i).dataType, i, v)
+      r => !r.isNullAt(i) && ok(cmp(r))
+    }
     f match {
-      case EqualTo(c, v) => value(c) != null && cmp(value(c), v) == 0
-      case GreaterThan(c, v) => value(c) != null && cmp(value(c), v) > 0
-      case GreaterThanOrEqual(c, v) => value(c) != null && cmp(value(c), v) >= 0
-      case LessThan(c, v) => value(c) != null && cmp(value(c), v) < 0
-      case LessThanOrEqual(c, v) => value(c) != null && cmp(value(c), v) <= 0
-      case IsNotNull(c) => value(c) != null
+      case EqualTo(c, v) => test(c, v)(_ == 0)
+      case GreaterThan(c, v) => test(c, v)(_ > 0)
+      case GreaterThanOrEqual(c, v) => test(c, v)(_ >= 0)
+      case LessThan(c, v) => test(c, v)(_ < 0)
+      case LessThanOrEqual(c, v) => test(c, v)(_ <= 0)
+      case IsNotNull(c) =>
+        val i = schema.fieldIndex(c)
+        !_.isNullAt(i)
       case other => sys.error(s"unsupported pushed filter: $other")
     }
+  }
+
+  /** The conjunction of pushed filters, compiled once per request. */
+  private def matcher(filters: Array[Filter], schema: StructType): InternalRow => Boolean = {
+    val tests = filters.map(compile(_, schema))
+    r => tests.forall(_(r))
   }
 
   def supportsFilter(f: Filter): Boolean = f match {
@@ -235,43 +383,75 @@ object ODataTestServer {
   }
 
   /** Evaluate a completely-pushed aggregation (OData `$apply=aggregate`,
-    * grouped via `$apply=groupby`). Returns one row per group — group key
-    * values first, aggregates after, matching ODataFilterSyntax.aggSchema.
+    * grouped via `$apply=groupby`). Returns one row per group, in the order
+    * each group first appears in the registry — group key values first,
+    * aggregates after, matching ODataFilterSyntax.aggSchema. Groups are
+    * keyed by the external values of their key columns (so every NaN is a
+    * group of its own and -0.0 joins 0.0, as boxed-value equality has it).
     * Long sums use Long machine addition and double sums add in stable
     * registry order, so repeated calls are bit-identical. */
   def aggregate(
       entity: String,
       filters: Array[Filter],
       specs: Seq[ODataAgg],
-      groupCols: Seq[String] = Nil): Seq[Seq[Any]] = {
+      groupCols: Seq[String] = Nil): Seq[InternalRow] = {
     val e = entry(entity)
-    val idx = e.schema.fieldNames.zipWithIndex.toMap
-    val kept = e.rows.filter(r => filters.forall(evalFilter(_, r, idx)))
-
-    def aggRow(rows: Seq[Seq[Any]]): Seq[Any] = specs.map {
-      case ODataAgg.CountAll => rows.size.toLong
-      case ODataAgg.MinOf(c) =>
-        val vs = rows.map(_(idx(c))).filter(_ != null)
-        if (vs.isEmpty) null else vs.reduce((a, b) => if (cmp(a, b) <= 0) a else b)
-      case ODataAgg.MaxOf(c) =>
-        val vs = rows.map(_(idx(c))).filter(_ != null)
-        if (vs.isEmpty) null else vs.reduce((a, b) => if (cmp(a, b) >= 0) a else b)
-      case ODataAgg.SumOf(c) =>
-        val vs = rows.map(_(idx(c))).filter(_ != null)
-        if (vs.isEmpty) null
-        else vs.head match {
-          case _: java.lang.Double =>
-            java.lang.Double.valueOf(
-              vs.foldLeft(0.0)((acc, v) => acc + v.asInstanceOf[Number].doubleValue))
-          case _ =>
-            java.lang.Long.valueOf(
-              vs.foldLeft(0L)((acc, v) => acc + v.asInstanceOf[Number].longValue))
-        }
+    val keep = matcher(filters, e.schema)
+    val kept = e.rows.filter(keep)
+    def col(c: String): (Int, DataType) = {
+      val i = e.schema.fieldIndex(c)
+      (i, e.schema(i).dataType)
     }
 
-    if (groupCols.isEmpty) Seq(aggRow(kept))
-    else kept.groupBy(r => groupCols.map(c => r(idx(c))))
-      .toSeq.map { case (key, rows) => key ++ aggRow(rows) }
+    /** The value of `c` in the row `better` prefers, or null. */
+    def pick(rows: Seq[InternalRow], c: String)(better: Int => Boolean): Any = {
+      val (i, dt) = col(c)
+      val ord = ordering(dt, i)
+      var best: InternalRow = null
+      rows.foreach { r =>
+        if (!r.isNullAt(i) && (best == null || better(ord(r, best)))) best = r
+      }
+      if (best == null) null else best.get(i, dt)
+    }
+
+    def sum(rows: Seq[InternalRow], c: String): Any = {
+      val (i, dt) = col(c)
+      val vs = rows.filterNot(_.isNullAt(i))
+      if (vs.isEmpty) null
+      else dt match {
+        case DoubleType => vs.foldLeft(0.0)((acc, r) => acc + r.getDouble(i))
+        case FloatType => vs.foldLeft(0L)((acc, r) => acc + r.getFloat(i).toLong)
+        case d: DecimalType =>
+          val g = decimalAt(d, i)
+          vs.foldLeft(0L)((acc, r) => acc + g(r).longValue)
+        case _ if isIntegralType(dt) =>
+          val g = longAt(dt, i)
+          vs.foldLeft(0L)((acc, r) => acc + g(r))
+        case other => sys.error(s"sum over $other column '$c'")
+      }
+    }
+
+    def aggRow(rows: Seq[InternalRow]): Seq[Any] = specs.map {
+      case ODataAgg.CountAll => rows.size.toLong
+      case ODataAgg.MinOf(c) => pick(rows, c)(_ < 0)
+      case ODataAgg.MaxOf(c) => pick(rows, c)(_ > 0)
+      case ODataAgg.SumOf(c) => sum(rows, c)
+    }
+
+    if (groupCols.isEmpty) Seq(new GenericInternalRow(aggRow(kept.toSeq).toArray))
+    else {
+      val keys = groupCols.map(col)
+      val external = keys.map { case (_, dt) => CatalystTypeConverters.createToScalaConverter(dt) }
+      val groups = mutable.LinkedHashMap.empty[Seq[Any], mutable.ArrayBuffer[InternalRow]]
+      kept.foreach { r =>
+        val key = keys.zip(external).map { case ((i, dt), toScala) => toScala(r.get(i, dt)) }
+        groups.getOrElseUpdate(key, mutable.ArrayBuffer.empty) += r
+      }
+      groups.values.map { rows =>
+        val keyValues = keys.map { case (i, dt) => rows.head.get(i, dt) }
+        new GenericInternalRow((keyValues ++ aggRow(rows.toSeq)).toArray): InternalRow
+      }.toSeq
+    }
   }
 
   /** Count the pages answering a pushed query (driver-side, at plan time —
@@ -285,8 +465,7 @@ object ODataTestServer {
       limit: Option[Int],
       pageSize: Int): (Int, Long) = {
     val e = entry(entity)
-    val idx = e.schema.fieldNames.zipWithIndex.toMap
-    val matched = e.rows.count(r => filters.forall(evalFilter(_, r, idx)))
+    val matched = e.rows.count(matcher(filters, e.schema))
     val n = limit.fold(matched)(math.min(_, matched))
     (((n + pageSize - 1) / pageSize).max(0), e.gen)
   }
@@ -304,43 +483,50 @@ object ODataTestServer {
         s"(generation ${e.gen}) after this scan was planned (generation " +
         s"$planned); page boundaries are stale — re-plan the scan")
 
-  /** Serve ONE page of a pushed query (the server's page GET). The
-    * generation is checked against the same registry entry the rows come
-    * from, so a concurrent re-registration cannot slip between the two. */
-  def fetchPage(ref: ODataPageRef): Iterator[Seq[Any]] = {
+  /** Serve ONE page of a pushed query (the server's page GET), as rows of
+    * `ref.required`. The generation is checked against the same registry
+    * entry the rows come from, so a concurrent re-registration cannot slip
+    * between the two. */
+  def fetchPage(ref: ODataPageRef): Iterator[InternalRow] = {
     val e = entry(ref.entity)
     checkGeneration(ref.entity, e, ref.generation)
-    val idx = e.schema.fieldNames.zipWithIndex.toMap
-    val proj = ref.required.fieldNames.map(idx).toSeq
-    val matched = e.rows.iterator
-      .filter(r => ref.filters.forall(evalFilter(_, r, idx)))
+    val matched: Iterator[InternalRow] =
+      e.rows.iterator.filter(matcher(ref.filters, e.schema))
     // $orderby: sort BEFORE $top/$skiptoken — OData applies ordering to the
     // result set, then pages it
     val ordered =
       if (ref.orderBy.isEmpty) matched
-      else matched.toVector.sorted(rowOrdering(ref.orderBy, idx)).iterator
+      else matched.toVector.sorted(rowOrdering(ref.orderBy, e.schema)).iterator
     val limited = ref.limit.map(n => ordered.take(n)).getOrElse(ordered)
     limited.slice(ref.pageNo * ref.pageSize, (ref.pageNo + 1) * ref.pageSize)
-      .map(r => proj.map(r))
+      .map(projection(e.schema, ref.required))
   }
 
   /** Multi-key row ordering with Spark's null-ordering semantics (nulls
-    * placed per key BEFORE direction is considered). */
+    * placed per key BEFORE direction is considered); a stable sort keeps
+    * ties in registry order. */
   private def rowOrdering(
-      keys: Seq[ODataSortKey], idx: Map[String, Int]): Ordering[Seq[Any]] =
-    new Ordering[Seq[Any]] {
-      override def compare(a: Seq[Any], b: Seq[Any]): Int = {
-        keys.foreach { k =>
-          val (x, y) = (a(idx(k.col)), b(idx(k.col)))
-          val c = (x, y) match {
-            case (null, null) => 0
-            case (null, _) => if (k.nullsFirst) -1 else 1
-            case (_, null) => if (k.nullsFirst) 1 else -1
-            case _ => if (k.asc) cmp(x, y) else -cmp(x, y)
-          }
-          if (c != 0) return c
+      keys: Seq[ODataSortKey], schema: StructType): Ordering[InternalRow] = {
+    val ks = keys.toIndexedSeq
+    val cols = ks.map(k => schema.fieldIndex(k.col)).toArray
+    val ords = cols.map(i => ordering(schema(i).dataType, i))
+    new Ordering[InternalRow] {
+      override def compare(a: InternalRow, b: InternalRow): Int = {
+        var c = 0
+        var k = 0
+        while (c == 0 && k < cols.length) {
+          val key = ks(k)
+          val aNull = a.isNullAt(cols(k))
+          val bNull = b.isNullAt(cols(k))
+          c =
+            if (aNull && bNull) 0
+            else if (aNull) { if (key.nullsFirst) -1 else 1 }
+            else if (bNull) { if (key.nullsFirst) 1 else -1 }
+            else if (key.asc) ords(k)(a, b) else -ords(k)(a, b)
+          k += 1
         }
-        0
+        c
       }
     }
+  }
 }

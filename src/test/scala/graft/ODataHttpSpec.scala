@@ -251,12 +251,16 @@ class ODataHttpSpec extends AnyFunSuite {
       Array(GreaterThanOrEqual("n_nationkey", 3L))
     val orderBy = Seq(ODataSortKey("n_name", asc = true, nullsFirst = true))
     val pageSize = 7 // 22 matching rows -> pages of 7,7,7,1
-    // transport 1: the in-memory registry, called directly
+    // transport 1: the in-memory registry, called directly; its internal
+    // rows read back as the external values the wire decode yields
     val (nPages, gen) = ODataTestServer.preflight(
       "nation_parity", filters, None, pageSize)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(required)
     val direct = (0 until nPages).map { pn =>
       ODataTestServer.fetchPage(ODataPageRef("nation_parity", required,
-        filters, None, pn, pageSize, gen, orderBy)).toVector
+        filters, None, pn, pageSize, gen, orderBy))
+        .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row].toSeq).toVector
     }
     // transport 2: the HTTP endpoint, following @odata.nextLink
     import ODataHttpServer.enc
