@@ -56,9 +56,9 @@ object ODataJson {
 
   /** One row as a JSON object, schema-driven, in OData v4 literal shapes:
     * ISO-8601 timestamps, decimals as strings to keep exactness, binary as
-    * base64. Timestamps and dates print from the java.sql values
-    * `Dataset.collect` returns, so an instant or date before the 1582
-    * calendar switch reads as it always has on the wire. */
+    * base64. A timestamp prints the proleptic-Gregorian instant of
+    * Spark's internal micros, the instant any OData client reads; a date
+    * prints its own year-month-day. */
   def writeRow(gen: JsonGenerator, schema: StructType, row: InternalRow): Unit = {
     gen.writeStartObject()
     var i = 0
@@ -86,7 +86,7 @@ object ODataJson {
       case d: DecimalType =>
         gen.writeString(v.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString)
       case TimestampType =>
-        gen.writeString(DateTimeUtils.toJavaTimestamp(v.getLong(i)).toInstant.toString)
+        gen.writeString(DateTimeUtils.microsToInstant(v.getLong(i)).toString)
       case TimestampNTZType =>
         gen.writeString(DateTimeUtils.microsToLocalDateTime(v.getLong(i)).toString)
       case DateType =>
@@ -103,7 +103,7 @@ object ODataJson {
     }
 
   /** JSON → external JVM value (the shapes [[ODataRowsReader]] converts
-    * to Catalyst: java.sql types, BigDecimal, Seq, Row). */
+    * to Catalyst: `Instant`, java.sql.Date, BigDecimal, Seq, Row). */
   def readValue(dt: DataType, n: JsonNode): Any = {
     if (n == null || n.isNull) return null
     dt match {
@@ -112,12 +112,13 @@ object ODataJson {
       case ShortType => java.lang.Short.valueOf(n.asInt.toShort)
       case ByteType => java.lang.Byte.valueOf(n.asInt.toByte)
       case DoubleType => java.lang.Double.valueOf(n.asDouble)
-      case FloatType => java.lang.Float.valueOf(n.floatValue)
+      // a non-finite float arrives quoted ("NaN"), which `floatValue` reads as 0
+      case FloatType =>
+        if (n.isTextual) java.lang.Float.valueOf(n.asText) else java.lang.Float.valueOf(n.floatValue)
       case BooleanType => java.lang.Boolean.valueOf(n.asBoolean)
       case StringType => n.asText
       case _: DecimalType => new java.math.BigDecimal(n.asText)
-      case TimestampType =>
-        java.sql.Timestamp.from(java.time.Instant.parse(n.asText))
+      case TimestampType => java.time.Instant.parse(n.asText)
       case TimestampNTZType => java.time.LocalDateTime.parse(n.asText)
       case DateType => java.sql.Date.valueOf(java.time.LocalDate.parse(n.asText))
       case BinaryType => n.binaryValue
@@ -157,7 +158,7 @@ object ODataFilterSyntax {
     case s: String => "'" + s.replace("'", "''") + "'"
     case s: UTF8String =>
       "'" + s.toString.replace("'", "''") + "'"
-    case t: java.sql.Timestamp => s"datetime'${t.toInstant}'"
+    case t: java.sql.Timestamp => s"datetime'${sparkInstant(t)}'"
     case i: java.time.Instant => s"datetime'$i'"
     case d: java.time.LocalDateTime => s"datetime'$d'" // TIMESTAMP_NTZ literal
     case d: java.sql.Date => s"date'${d.toLocalDate}'"
@@ -167,6 +168,14 @@ object ODataFilterSyntax {
     case n: Number => n.toString
     case other => sys.error(s"odata-http: unrenderable literal $other")
   }
+
+  /** The instant Spark means by a java.sql.Timestamp: the proleptic-
+    * Gregorian instant of the micros `fromJavaTimestamp` gives it (which
+    * undoes the hybrid-calendar rebase of instants before 1582), sub-micro
+    * nanos kept. */
+  def sparkInstant(t: java.sql.Timestamp): java.time.Instant =
+    DateTimeUtils.microsToInstant(DateTimeUtils.fromJavaTimestamp(t))
+      .plusNanos(t.getNanos % 1000)
 
   /** Split on top-level " and " (string literals may contain the word). */
   private def splitConjuncts(s: String): Seq[String] = {
@@ -232,11 +241,19 @@ object ODataFilterSyntax {
       case (ODataAgg.CountAll, i) => StructField(s"agg_$i", LongType, nullable = false)
       case (ODataAgg.MinOf(c), i) => StructField(s"agg_$i", full(c).dataType)
       case (ODataAgg.MaxOf(c), i) => StructField(s"agg_$i", full(c).dataType)
-      case (ODataAgg.SumOf(c), i) => StructField(s"agg_$i", full(c).dataType match {
-        case DoubleType => DoubleType
-        case _ => LongType
-      })
+      case (ODataAgg.SumOf(c), i) => StructField(s"agg_$i",
+        sumType(full(c).dataType).getOrElse(
+          sys.error(s"sum over ${full(c).dataType.simpleString} column '$c'")))
     })
+
+  /** The type a pushed `sum` adds in and answers: Long machine addition
+    * over integral columns, Double over DOUBLE. Any other sum (FLOAT and
+    * DECIMAL among them, which Spark widens) is refused. */
+  def sumType(dt: DataType): Option[DataType] = dt match {
+    case LongType | IntegerType | ShortType | ByteType => Some(LongType)
+    case DoubleType => Some(DoubleType)
+    case _ => None
+  }
 
   /** `$orderby` wire form: "col asc|desc nullsfirst|nullslast" keys,
     * comma-joined — null placement is explicit so the service's sort is
@@ -260,8 +277,7 @@ object ODataFilterSyntax {
       s.substring(1, s.length - 1).replace("''", "'")
     case TimestampType =>
       require(s.startsWith("datetime'") && s.endsWith("'"), s)
-      java.sql.Timestamp.from(
-        java.time.Instant.parse(s.substring(9, s.length - 1)))
+      java.time.Instant.parse(s.substring(9, s.length - 1))
     case TimestampNTZType =>
       require(s.startsWith("datetime'") && s.endsWith("'"), s)
       java.time.LocalDateTime.parse(s.substring(9, s.length - 1))
@@ -342,13 +358,31 @@ object ODataHttpServer {
   def tenantOptions: Map[String, String] =
     Map("endpoint" -> endpoint, "user" -> user, "pass" -> pass)
 
+  /** The most bytes one write hands the exchange's stream. JDK 17's
+    * `sun.net.httpserver` grows a connection's write buffer to twice the
+    * largest single write and keeps it while the connection idles in
+    * keep-alive, and NIO caches a per-thread direct buffer as large as the
+    * largest write: one whole-body write would pin twice the largest
+    * response per idle connection. */
+  private[graft] val WriteWindow = 64 * 1024
+
+  /** `body` to `os` in slices of at most [[WriteWindow]] bytes. */
+  private[graft] def writeWindowed(os: java.io.OutputStream, body: Array[Byte]): Unit = {
+    var off = 0
+    while (off < body.length) {
+      val n = math.min(WriteWindow, body.length - off)
+      os.write(body, off, n)
+      off += n
+    }
+  }
+
   private def respond(x: HttpExchange, code: Int, body: Array[Byte],
       headers: (String, String)*): Unit = {
     headers.foreach { case (k, v) => x.getResponseHeaders.set(k, v) }
     // a 304 carries no body: length -1 tells the exchange so
     x.sendResponseHeaders(code, if (code == 304) -1 else body.length)
     val os = x.getResponseBody
-    try os.write(body) finally os.close()
+    try writeWindowed(os, body) finally os.close()
   }
 
   private def authorized(x: HttpExchange): Boolean = {
@@ -889,10 +923,7 @@ final class ODataHttpScanBuilder(endpoint: String, entity: String,
   }
 
   private def sumType(col: String): Option[DataType] =
-    full.fields.find(_.name == col).map(_.dataType).collect {
-      case LongType | IntegerType | ShortType | ByteType => LongType
-      case DoubleType => DoubleType
-    }
+    full.fields.find(_.name == col).flatMap(f => ODataFilterSyntax.sumType(f.dataType))
 
   private def translateAggs(agg: Aggregation): Option[Seq[ODataAgg]] = {
     val specs = agg.aggregateExpressions.toSeq.map {
@@ -1208,8 +1239,6 @@ final class ODataRowsReader(it: Iterator[Seq[Any]], schema: StructType)
   private def convert(dt: DataType, v: Any): Any = (dt, v) match {
     case (_, null) => null
     case (StringType, v) => UTF8String.fromString(v.toString)
-    case (TimestampType, v: java.sql.Timestamp) =>
-      DateTimeUtils.fromJavaTimestamp(v)
     case (TimestampType, v: java.time.Instant) =>
       DateTimeUtils.instantToMicros(v)
     case (TimestampNTZType, v: java.time.LocalDateTime) =>

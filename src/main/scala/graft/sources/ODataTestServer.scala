@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.util.{DateTimeUtils, RebaseDateTime}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -20,7 +20,8 @@ object ODataAgg {
   final case class MinOf(col: String) extends ODataAgg
   final case class MaxOf(col: String) extends ODataAgg
   /** Sum over integral/double columns (server adds in Long resp. Double —
-    * the same machine arithmetic Spark's own partial sum would use). */
+    * the same machine arithmetic Spark's own partial sum would use); a sum
+    * over any other column is refused ([[ODataFilterSyntax.sumType]]). */
   final case class SumOf(col: String) extends ODataAgg
 }
 
@@ -220,10 +221,10 @@ object ODataTestServer {
   //     (Java's UTF-16 order disagrees for non-BMP characters, which would
   //     make a completely-pushed $orderby return a different top-N than
   //     Spark's own sort);
-  //   - a TIMESTAMP compares as the java.sql.Timestamp `Dataset.collect`
-  //     returns, i.e. after Spark's rebase to the hybrid Julian calendar
-  //     (which moves only instants before 1582), a DATE as its
-  //     java.sql.Date, a TIMESTAMP_NTZ as its LocalDateTime;
+  //   - a TIMESTAMP compares as its stored micros, the proleptic-Gregorian
+  //     instant, against the instant Spark means by a java.sql.Timestamp
+  //     literal ([[ODataFilterSyntax.sparkInstant]]); a DATE compares as
+  //     its java.sql.Date, a TIMESTAMP_NTZ as its LocalDateTime;
   //   - any other pair fails on the first non-null value it meets.
 
   private def isIntegral(n: Any): Boolean = n match {
@@ -259,10 +260,6 @@ object ODataTestServer {
 
   private def decimalAt(d: DecimalType, i: Int): InternalRow => java.math.BigDecimal =
     _.getDecimal(i, d.precision, d.scale).toJavaBigDecimal
-
-  /** A TIMESTAMP's micros as its java.sql.Timestamp counts them. */
-  private def collectedMicros(micros: Long): Long =
-    RebaseDateTime.rebaseGregorianToJulianMicros(micros)
 
   /** An instant (epoch second + nano) against row micros: whole micros, and
     * the sign of the sub-micro rest. Out of the micros range it lies
@@ -306,12 +303,13 @@ object ODataTestServer {
       case (_: NumericType, y: Number) =>
         val (g, d) = (doubleAt(dt, i), y.doubleValue)
         r => java.lang.Double.compare(g(r), d)
-      case (TimestampType, y: java.sql.Timestamp) =>
-        val c = microsCmp(Math.floorDiv(y.getTime, 1000L), y.getNanos)
-        r => c(collectedMicros(r.getLong(i)))
-      case (TimestampType, y: java.time.Instant) =>
-        val c = microsCmp(y.getEpochSecond, y.getNano)
-        r => c(collectedMicros(r.getLong(i)))
+      case (TimestampType, y @ (_: java.sql.Timestamp | _: java.time.Instant)) =>
+        val t = y match {
+          case ts: java.sql.Timestamp => ODataFilterSyntax.sparkInstant(ts)
+          case in: java.time.Instant => in
+        }
+        val c = microsCmp(t.getEpochSecond, t.getNano)
+        r => c(r.getLong(i))
       case (TimestampNTZType, y @ (_: java.time.LocalDateTime | _: java.sql.Timestamp)) =>
         val t = y match {
           case ts: java.sql.Timestamp => ts.toLocalDateTime
@@ -339,9 +337,8 @@ object ODataTestServer {
       case FloatType | DoubleType =>
         val g = doubleAt(dt, i)
         (a, b) => java.lang.Double.compare(g(a), g(b))
-      case TimestampType => (a, b) =>
-        java.lang.Long.compare(collectedMicros(a.getLong(i)), collectedMicros(b.getLong(i)))
-      case TimestampNTZType => (a, b) => java.lang.Long.compare(a.getLong(i), b.getLong(i))
+      case TimestampType | TimestampNTZType =>
+        (a, b) => java.lang.Long.compare(a.getLong(i), b.getLong(i))
       case DateType => (a, b) =>
         DateTimeUtils.toJavaDate(a.getInt(i)).compareTo(DateTimeUtils.toJavaDate(b.getInt(i)))
       case _ =>
@@ -386,10 +383,10 @@ object ODataTestServer {
     * grouped via `$apply=groupby`). Returns one row per group, in the order
     * each group first appears in the registry — group key values first,
     * aggregates after, matching ODataFilterSyntax.aggSchema. Groups are
-    * keyed by the external values of their key columns (so every NaN is a
-    * group of its own and -0.0 joins 0.0, as boxed-value equality has it).
-    * Long sums use Long machine addition and double sums add in stable
-    * registry order, so repeated calls are bit-identical. */
+    * keyed as Spark's `NormalizeFloatingNumbers` keys them: every NaN in
+    * one group, -0.0 with 0.0 in one group reported as 0.0. Long sums use
+    * Long machine addition and double sums add in stable registry order,
+    * so repeated calls are bit-identical. */
   def aggregate(
       entity: String,
       filters: Array[Filter],
@@ -420,10 +417,6 @@ object ODataTestServer {
       if (vs.isEmpty) null
       else dt match {
         case DoubleType => vs.foldLeft(0.0)((acc, r) => acc + r.getDouble(i))
-        case FloatType => vs.foldLeft(0L)((acc, r) => acc + r.getFloat(i).toLong)
-        case d: DecimalType =>
-          val g = decimalAt(d, i)
-          vs.foldLeft(0L)((acc, r) => acc + g(r).longValue)
         case _ if isIntegralType(dt) =>
           val g = longAt(dt, i)
           vs.foldLeft(0L)((acc, r) => acc + g(r))
@@ -440,18 +433,36 @@ object ODataTestServer {
 
     if (groupCols.isEmpty) Seq(new GenericInternalRow(aggRow(kept.toSeq).toArray))
     else {
-      val keys = groupCols.map(col)
-      val external = keys.map { case (_, dt) => CatalystTypeConverters.createToScalaConverter(dt) }
+      val keys = groupCols.map { c => val (i, dt) = col(c); groupValueAt(dt, i) }
       val groups = mutable.LinkedHashMap.empty[Seq[Any], mutable.ArrayBuffer[InternalRow]]
       kept.foreach { r =>
-        val key = keys.zip(external).map { case ((i, dt), toScala) => toScala(r.get(i, dt)) }
-        groups.getOrElseUpdate(key, mutable.ArrayBuffer.empty) += r
+        groups.getOrElseUpdate(keys.map(k => groupKey(k(r))), mutable.ArrayBuffer.empty) += r
       }
       groups.values.map { rows =>
-        val keyValues = keys.map { case (i, dt) => rows.head.get(i, dt) }
+        val keyValues = keys.map(_(rows.head))
         new GenericInternalRow((keyValues ++ aggRow(rows.toSeq)).toArray): InternalRow
       }.toSeq
     }
+  }
+
+  /** A group key column's internal value, -0.0 read as 0.0, as Spark's
+    * `NormalizeFloatingNumbers` reads grouping keys. */
+  private def groupValueAt(dt: DataType, i: Int): InternalRow => Any = {
+    val get: InternalRow => Any = dt match {
+      case DoubleType => r => { val v = r.getDouble(i); if (v == 0.0) 0.0 else v }
+      case FloatType => r => { val v = r.getFloat(i); if (v == 0.0f) 0.0f else v }
+      case _ => _.get(i, dt)
+    }
+    r => if (r.isNullAt(i)) null else get(r)
+  }
+
+  /** A group value as a hash key: floating point by its bits, one
+    * canonical pattern for every NaN (boxed equality never matches a
+    * NaN). */
+  private def groupKey(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case f: Float => java.lang.Float.floatToIntBits(f)
+    case other => other
   }
 
   /** Count the pages answering a pushed query (driver-side, at plan time —
