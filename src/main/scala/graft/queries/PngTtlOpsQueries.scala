@@ -125,10 +125,18 @@ object PngTtlOpsQueries extends QueryModule {
         val counts = src.groupByKey(_.user_id)
           .transformWithState(new TtlCountsProcessor,
             TimeMode.ProcessingTime(), OutputMode.Update())
+        // Σ cum_n of the sink as each upsert left it, read on the stream's
+        // own thread after the swap, so the poll below never reads the
+        // sink while an upsert renames it
+        val sinkMass = new java.util.concurrent.atomic.AtomicLong(-1L)
+        def upsertAndWeigh(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+          StreamingRefresh.upsertBatch(Seq("user_id"), "cum_n", sink)(batch, id)
+          val r = batch.sparkSession.read.parquet(sink).agg(sum("cum_n")).collect()(0)
+          sinkMass.set(if (r.isNullAt(0)) 0L else r.getLong(0))
+        }
         val q = counts.toDF().writeStream
           .outputMode("update")
-          .foreachBatch(
-            StreamingRefresh.upsertBatch(Seq("user_id"), "cum_n", sink) _)
+          .foreachBatch(upsertAndWeigh _)
           .option("checkpointLocation", ckpt)
           .start()
         // engine-driven sync: a fed file is "reflected" once the keyed
@@ -140,21 +148,16 @@ object PngTtlOpsQueries extends QueryModule {
         // users — at sf0.001 both halves cover the same user set, so the
         // stream was stopped before batch B processed; sf0.01 only passed
         // by stop-latency luck. The targets are computed from the INPUT
-        // frames, never from the oracle; an upsert mid-swap can make the
-        // sink transiently unreadable, so reads retry inside the poll.
-        // The checkpoint's source/commit logs are NOT a sufficient
-        // barrier either: the admitting batch can commit with zero input
-        // rows and the data materializes a batch later — observed at 4
-        // cores.)
+        // frames, never from the oracle. The checkpoint's source/commit
+        // logs are NOT a sufficient barrier either: the admitting batch
+        // can commit with zero input rows and the data materializes a
+        // batch later — observed at 4 cores.)
         def waitSinkMass(expect: Long): Unit = {
           val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          var seen = -1L
-          while (seen < expect && System.nanoTime() < deadline) {
-            seen = try s.read.parquet(sink)
-              .agg(sum("cum_n")).collect()(0).getLong(0)
-            catch { case _: Throwable => -1L }
-            if (seen < expect) Thread.sleep(200)
-          }
+          while (sinkMass.get < expect && q.isActive && System.nanoTime() < deadline)
+            Thread.sleep(200)
+          q.exception.foreach(e => throw e)
+          val seen = sinkMass.get
           require(seen >= expect, s"sink carries $seen rows, expected $expect")
         }
         val mass0 = halves(0).count()
