@@ -7,7 +7,7 @@ import java.nio.file.attribute.{PosixFileAttributeView, PosixFilePermission}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{AbstractFileSystem, ChecksumFs, DelegateToFileSystem,
-  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+  FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -16,6 +16,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * the `chmod` command. Hadoop forks whenever libhadoop (`NativeIO`) is
   * absent, and every directory and file it creates gets a `setPermission`
   * call: ~3 ms per staged file, checksum sidecar and checkpoint log entry.
+  * Likewise [[getFileLinkStatus]], which `FileContext` renames (streaming
+  * checkpoint commits) ask of source and target, forks no `readlink`.
   *
   * The parent's fork path stays for what `java.nio` cannot express: a mode
   * with bits above `0777` (sticky, setuid, setgid), or a path whose file
@@ -35,6 +37,13 @@ class PosixRawLocalFileSystem extends RawLocalFileSystem {
         throw new FileNotFoundException(s"$p: ${e.getMessage}")
     }
   }
+
+  /** A path that is not a symbolic link gets its `getFileStatus`, which is
+    * what the parent answers once `readlink` prints nothing; a link keeps
+    * the parent's path. */
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }
 
 object PosixRawLocalFileSystem {

@@ -28,19 +28,6 @@ object ODataAgg {
 /** One `$orderby` key: column, ascending?, nulls-first? */
 final case class ODataSortKey(col: String, asc: Boolean, nullsFirst: Boolean)
 
-/** One page of a pushed query as a page GET asks for it
-  * (`$skiptoken=pageNo*pageSize`), with the registry generation its scan
-  * was planned against. */
-final case class ODataPageRef(
-    entity: String,
-    required: StructType,
-    filters: Array[Filter],
-    limit: Option[Int],
-    pageNo: Int,
-    pageSize: Int,
-    generation: Long,
-    orderBy: Seq[ODataSortKey] = Nil)
-
 /** A request the service refuses: answered with `status` (404 unknown
   * entity, 400 bad query option, 405 wrong method, 409 stale generation),
   * never retried. */
@@ -49,10 +36,11 @@ final class ODataRequestError(val status: Int, message: String)
 
 /** The simulated Priority OData service behind [[ODataHttpServer]]: the
   * entity registry and the query evaluator the server answers every
-  * `$select/$filter/$orderby/$top/$skiptoken/$apply` request from.
-  * Entities are read over the socket only ([[ODataHttpSource]] scans and
-  * streams, [[ODataBatchClient]] pulls); the server's `requestLog` is the
-  * record of what was asked.
+  * `$select/$filter/$orderby/$skip/$top/$skiptoken/$apply` request from:
+  * one [[select]] picks the rows of every page, preflight and stream
+  * range. Entities are read over the socket only ([[ODataHttpSource]]
+  * scans and streams, [[ODataBatchClient]] pulls); the server's
+  * `requestLog` is the record of what was asked.
   *
   * SIMULATION BOUNDARY: the registry holds the tenant's dataset in THIS
   * JVM's memory — it stands in for the remote ERP database, so its size is
@@ -71,7 +59,7 @@ object ODataTestServer {
     * Once they have, the loader, and with it the source frame or the
     * previous generation's row array, is dropped. `gen` identifies this
     * registration: scans planned against one generation refuse to fetch
-    * pages from another (see [[fetchPage]]). */
+    * pages from another (see [[page]]). */
   private final class Entry(val schema: StructType,
       load: () => Array[UnsafeRow], val gen: Long) {
     private var pending = load
@@ -139,17 +127,6 @@ object ODataTestServer {
   /** Current row count (the streaming cursor's latest offset). */
   def rowCount(entity: String): Long = entry(entity).rows.length.toLong
 
-  /** Serve a half-open row RANGE of the entity (streaming micro-batch
-    * fetch — the `$skiptoken` position read of an incremental pull). */
-  def fetchRange(
-      entity: String,
-      required: StructType,
-      from: Long,
-      until: Long): Iterator[InternalRow] = {
-    val e = entry(entity)
-    e.rows.iterator.slice(from.toInt, until.toInt).map(projection(e.schema, required))
-  }
-
   /** Register a parent entity WITH an expandable child subform — the
     * reference's `$expand` navigation property
     * (resources/priorityDataSource.py:697-703): child rows arrive nested
@@ -175,8 +152,7 @@ object ODataTestServer {
       .getOrElse(throw new ODataRequestError(404, s"entity not registered: $entity"))
 
   /** Current registration generation of an entity — cheap (no row
-    * materialization), for stamping `$apply` responses and serving pages
-    * requested without a planned generation. */
+    * materialization), for stamping `$apply` responses. */
   def generationOf(entity: String): Long = entry(entity).gen
 
   /** Names of all registered entities (the `$metadata` document scope). */
@@ -474,11 +450,11 @@ object ODataTestServer {
       entity: String,
       filters: Array[Filter],
       limit: Option[Int],
-      pageSize: Int): (Int, Long) = {
+      pageSize: Int,
+      skip: Int = 0): (Int, Long) = {
     val e = entry(entity)
-    val matched = e.rows.count(matcher(filters, e.schema))
-    val n = limit.fold(matched)(math.min(_, matched))
-    (((n + pageSize - 1) / pageSize).max(0), e.gen)
+    val n = select(e, filters, Nil, skip, limit).size
+    ((n + pageSize - 1) / pageSize, e.gen)
   }
 
   /** Fails with 409 if the entity was re-registered after a scan planned
@@ -494,23 +470,40 @@ object ODataTestServer {
         s"(generation ${e.gen}) after this scan was planned (generation " +
         s"$planned); page boundaries are stale — re-plan the scan")
 
-  /** Serve ONE page of a pushed query (the server's page GET), as rows of
-    * `ref.required`. The generation is checked against the same registry
-    * entry the rows come from, so a concurrent re-registration cannot slip
-    * between the two. */
-  def fetchPage(ref: ODataPageRef): Iterator[InternalRow] = {
-    val e = entry(ref.entity)
-    checkGeneration(ref.entity, e, ref.generation)
+  /** The rows a request selects, in the order it answers them: filter →
+    * `$orderby` → `$skip` → `$top`. OData orders the result set before it
+    * skips, limits and pages it. */
+  private def select(e: Entry, filters: Array[Filter], orderBy: Seq[ODataSortKey],
+      skip: Int, top: Option[Int]): Iterator[InternalRow] = {
     val matched: Iterator[InternalRow] =
-      e.rows.iterator.filter(matcher(ref.filters, e.schema))
-    // $orderby: sort BEFORE $top/$skiptoken — OData applies ordering to the
-    // result set, then pages it
+      e.rows.iterator.filter(matcher(filters, e.schema))
     val ordered =
-      if (ref.orderBy.isEmpty) matched
-      else matched.toVector.sorted(rowOrdering(ref.orderBy, e.schema)).iterator
-    val limited = ref.limit.map(n => ordered.take(n)).getOrElse(ordered)
-    limited.slice(ref.pageNo * ref.pageSize, (ref.pageNo + 1) * ref.pageSize)
-      .map(projection(e.schema, ref.required))
+      if (orderBy.isEmpty) matched
+      else matched.toVector.sorted(rowOrdering(orderBy, e.schema)).iterator
+    val skipped = ordered.drop(skip)
+    top.fold(skipped)(skipped.take)
+  }
+
+  /** Serve ONE page of a request (the server's page GET): the page window
+    * `[pageNo * pageSize, (pageNo + 1) * pageSize)` of its [[select]]ed
+    * rows, as rows of `required`. A planned `generation` is checked
+    * against the same registry entry the rows come from, so a concurrent
+    * re-registration cannot slip between the two. */
+  def page(
+      entity: String,
+      required: StructType,
+      filters: Array[Filter],
+      orderBy: Seq[ODataSortKey],
+      skip: Int,
+      top: Option[Int],
+      pageNo: Int,
+      pageSize: Int,
+      generation: Option[Long]): Iterator[InternalRow] = {
+    val e = entry(entity)
+    generation.foreach(checkGeneration(entity, e, _))
+    select(e, filters, orderBy, skip, top)
+      .slice(pageNo * pageSize, (pageNo + 1) * pageSize)
+      .map(projection(e.schema, required))
   }
 
   /** Multi-key row ordering with Spark's null-ordering semantics (nulls

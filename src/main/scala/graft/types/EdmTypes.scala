@@ -29,13 +29,14 @@ object EdmTypes {
     ("SBO", "SBO_text") -> Target("VARCHAR", StringType),
     ("SBO", "SBO_num") -> Target("NUMERIC", DecimalType(38, 3)))
 
-  /** Edm → NATIVE Spark type, the DSv2 connector's schema channel — the
-    * inverse of the transport's Spark→Edm render, lossless over every
-    * scalar the wire serves. Deliberately distinct from `mapping`, which is
-    * the reference's WAREHOUSE dictionary (keys→VARCHAR(255), every number
-    * →NUMERIC): a connector schema must reproduce the source table exactly,
-    * not its DWH landing shape. Edm.Decimal carries Precision/Scale
-    * attributes on the wire, resolved by the caller. */
+  /** Edm → NATIVE Spark type, the DSv2 connector's schema channel, and read
+    * backwards its `$metadata` render ([[edmOf]]): one table for both
+    * sides, lossless over every scalar the wire serves. Deliberately
+    * distinct from `mapping`, which is the reference's WAREHOUSE dictionary
+    * (keys→VARCHAR(255), every number →NUMERIC): a connector schema must
+    * reproduce the source table exactly, not its DWH landing shape.
+    * Edm.Decimal is not in the table: its bounds ride as Precision/Scale
+    * facets ([[nativeSparkOf]]). */
   val nativeSpark: Map[String, DataType] = Map(
     "Edm.String" -> StringType,
     "Edm.Int64" -> LongType,
@@ -45,10 +46,32 @@ object EdmTypes {
     "Edm.Double" -> DoubleType,
     "Edm.Single" -> FloatType,
     "Edm.DateTimeOffset" -> TimestampType,
-    "Edm.DateTime" -> TimestampNTZType, // OData v2 naive datetime
+    // OData v4 has no naive-datetime scalar; v2's Edm.DateTime is the
+    // established wire name for one (still emitted by legacy producers),
+    // and collapsing NTZ into DateTimeOffset would silently shift values
+    "Edm.DateTime" -> TimestampNTZType,
     "Edm.Date" -> DateType,
     "Edm.Boolean" -> BooleanType,
     "Edm.Binary" -> BinaryType)
+
+  private val edmNames: Map[DataType, String] = nativeSpark.map(_.swap)
+
+  /** The Edm type a native Spark type is served as. A type outside the
+    * table goes out as Edm.String, which the parse side reads as text, as
+    * the reference degrades unknown types ([[targetFor]]). */
+  def edmOf(dt: DataType): String = dt match {
+    case _: DecimalType => "Edm.Decimal"
+    case _ => edmNames.getOrElse(dt, "Edm.String")
+  }
+
+  /** The native Spark type of an Edm type and its Decimal facets: a
+    * facet-less Edm.Decimal is DECIMAL(38,18), an unknown type text. */
+  def nativeSparkOf(edm: String, precision: Option[Int], scale: Option[Int]): DataType =
+    (edm, precision, scale) match {
+      case ("Edm.Decimal", Some(p), Some(s)) => DecimalType(p, s)
+      case ("Edm.Decimal", _, _) => DecimalType(38, 18)
+      case _ => nativeSpark.getOrElse(edm, StringType)
+    }
 
   /** PK columns are uniformly stringly-typed, length 255
     * (reference rule, sqlDwh.py:368-370). */

@@ -167,9 +167,34 @@ class LocalFsSpec extends AnyFunSuite {
         Thread.sleep(100)
       assert(commands.asScala.exists(_.contains(marker)), "JFR delivered no marker event")
     } finally rs.close()
-    val chmods = commands.asScala.toSeq
-      .filter(c => Paths.get(c.split(" ")(0)).getFileName.toString == "chmod")
+    def started(cmd: String) = commands.asScala.toSeq
+      .filter(c => Paths.get(c.split(" ")(0)).getFileName.toString == cmd)
+    val chmods = started("chmod")
     assert(chmods.size == 1 && chmods.head.contains(new File(root, "probe").getCanonicalPath),
       chmods.mkString("\n"))
+    // the micro-batch's checkpoint commits rename through FileContext
+    assert(started("readlink").isEmpty, started("readlink").mkString("\n"))
+  }
+
+  test("link status and link target match the stock RawLocalFileSystem's") {
+    val stock = rawFs(new RawLocalFileSystem)
+    val posix = rawFs(new PosixRawLocalFileSystem)
+    val root = newRoot()
+    val target = new File(root, "target.txt")
+    Files.write(target.toPath, "abc".getBytes("UTF-8"))
+    val link = new File(root, "link.txt")
+    Files.createSymbolicLink(link.toPath, target.toPath)
+    def status(fs: RawLocalFileSystem, p: Path) = {
+      val st = fs.getFileLinkStatus(p)
+      (st.getPath, st.isSymlink, if (st.isSymlink) st.getSymlink else null,
+        st.isDirectory, st.getLen, st.getModificationTime)
+    }
+    for (f <- Seq(link, target, root); p <- Seq(new Path(f.getPath), new Path(f.toURI)))
+      assert(status(posix, p) == status(stock, p), p)
+    assert(status(posix, new Path(link.getPath))._2)
+    assert(posix.getLinkTarget(new Path(link.getPath)) ==
+      stock.getLinkTarget(new Path(link.getPath)))
+    intercept[java.io.FileNotFoundException](
+      posix.getFileLinkStatus(new Path(new File(root, "absent").getPath)))
   }
 }

@@ -236,11 +236,11 @@ class ODataHttpSpec extends AnyFunSuite {
   test("paging parity: HTTP transport and in-memory registry serve identical pages for one $skiptoken walk") {
     // Pins the simulation boundary (the ODataTestServer scaladoc): the
     // server answers every page GET from the registry's preflight/
-    // fetchPage, so the HTTP walk and the registry's own pages must agree
+    // page, so the HTTP walk and the registry's own pages must agree
     // page-BY-page — same page count, same rows per page, same in-page
     // order — not merely row-set-wise, under a walk that exercises
     // projection + filter + $orderby + a partial final page.
-    import graft.sources.{ODataFilterSyntax, ODataJson, ODataPageRef, ODataSortKey}
+    import graft.sources.{ODataFilterSyntax, ODataJson, ODataSortKey}
     import org.apache.spark.sql.sources.GreaterThanOrEqual
     import org.apache.spark.sql.types.StructType
     ODataTestServer.register(spark, "nation_parity", s"$sf/nation.parquet")
@@ -252,14 +252,14 @@ class ODataHttpSpec extends AnyFunSuite {
     val orderBy = Seq(ODataSortKey("n_name", asc = true, nullsFirst = true))
     val pageSize = 7 // 22 matching rows -> pages of 7,7,7,1
     // transport 1: the in-memory registry, called directly; its internal
-    // rows read back as the external values the wire decode yields
+    // rows, like the wire's decoded rows, read back as external values
     val (nPages, gen) = ODataTestServer.preflight(
       "nation_parity", filters, None, pageSize)
     val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(required)
     val direct = (0 until nPages).map { pn =>
-      ODataTestServer.fetchPage(ODataPageRef("nation_parity", required,
-        filters, None, pn, pageSize, gen, orderBy))
+      ODataTestServer.page("nation_parity", required,
+        filters, orderBy, 0, None, pn, pageSize, Some(gen))
         .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row].toSeq).toVector
     }
     // transport 2: the HTTP endpoint, following @odata.nextLink
@@ -275,7 +275,8 @@ class ODataHttpSpec extends AnyFunSuite {
         ODataHttpServer.user, ODataHttpServer.pass)
       import scala.jdk.CollectionConverters._
       viaHttp += node.get("value").elements().asScala
-        .map(ODataJson.jsonToSeq(required, _)).toVector
+        .map(n => toRow(ODataJson.readRow(required, n))
+          .asInstanceOf[org.apache.spark.sql.Row].toSeq).toVector
       next = Option(node.get("@odata.nextLink")).map(_.asText)
     }
     // the HTTP walk may end with one empty trailing page on an exact

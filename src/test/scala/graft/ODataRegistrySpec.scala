@@ -19,8 +19,9 @@ class ODataRegistrySpec extends AnyFunSuite {
       spark.range(from, until).select(counted(col("id")).as("id"), (col("id") * 2).as("v"))
     ODataTestServer.registerDf("registry_lazy", frame(0, 3))
     assert(collected.value == 0)
-    val rows = () => ODataTestServer.fetchRange("registry_lazy",
-      ODataTestServer.schemaOf("registry_lazy"), 0, 10).map(r => (r.getLong(0), r.getLong(1))).toList
+    val rows = () => ODataTestServer.page("registry_lazy",
+      ODataTestServer.schemaOf("registry_lazy"), Array.empty, Nil, 0, None, 0, 10, None)
+      .map(r => (r.getLong(0), r.getLong(1))).toList
     assert(rows() == List((0L, 0L), (1L, 2L), (2L, 4L)))
     assert(collected.value == 3)
     // the append materializes the rows it extends, but not its own frame

@@ -81,4 +81,23 @@ class ODataStreamSpec extends AnyFunSuite {
       .filter(f => f.toString.endsWith(".parquet")).count()
     assert(n >= 3, s"expected >=3 part files, got $n")
   }
+
+  test("a range longer than the server's default 1000-row page arrives in one body") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_odstream3").toString
+    ODataTestServer.registerDf("stream_wide", spark.range(0L, 5003L).select($"id"))
+    ODataHttpServer.requestLog.clear()
+    val q = spark.readStream.format("graft.sources.ODataHttpSource")
+      .options(ODataHttpServer.tenantOptions)
+      .option("entity", "stream_wide").option("pageSize", "2500").load()
+      .writeStream.format("parquet")
+      .option("path", s"$tmp/sink").option("checkpointLocation", s"$tmp/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(ranges("stream_wide").sorted == List(
+      "%24skip=0&%24top=2500", "%24skip=2500&%24top=2500", "%24skip=5000&%24top=3"),
+      ranges("stream_wide"))
+    val rows = spark.read.parquet(s"$tmp/sink")
+    assert(rows.count() === 5003L)
+    assert(rows.select("id").distinct().count() === 5003L)
+  }
 }

@@ -387,6 +387,49 @@ class ODataWireSpec extends AnyFunSuite {
     }
   }
 
+  test("$skip applies after $filter and $orderby, before $top and the page window") {
+    registered
+    import ODataHttpServer.enc
+    assert(wireIds(s"%24filter=${enc("i ge 0")}&%24skip=2") == Seq(5, 7))
+    assert(wireIds(s"%24orderby=${orderQuery("i", asc = true, nullsFirst = false)}" +
+      "&%24skip=2&%24top=3") == Seq(8, 5, 1))
+    assert(wireIds(s"%24filter=${enc("i ge 0")}" +
+      s"&%24orderby=${orderQuery("i", asc = false, nullsFirst = false)}&%24skip=1") == Seq(7, 1, 5))
+    // server-driven paging walks the rows past $skip
+    assert(body("%24select=id&%24skip=1&%24pagesize=3") ==
+      "{\"@graft.rowcount\":8,\"value\":[{\"id\":2},{\"id\":3},{\"id\":4}]," +
+      "\"@odata.nextLink\":\"ENDPOINT/typed_wire?%24select=id&%24skip=1&%24pagesize=3&%24skiptoken=3\"}")
+    assert(body("%24select=id&%24skip=1&%24pagesize=3&%24skiptoken=6") ==
+      "{\"@graft.rowcount\":8,\"value\":[{\"id\":8}]}")
+  }
+
+  test("every type decodes back to the registered value, through a scan and through $batch") {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import graft.sources.ODataBatchClient
+    registered
+    // internal values, class-tagged: -0.0, NaN, a decimal's scale, micros
+    // and days are told apart where external equality would merge them
+    def canon(dt: DataType, v: Any): String = (dt, v) match {
+      case (_, null) => "null"
+      case (st: StructType, r: InternalRow) =>
+        st.fields.indices.map(i => canon(st(i).dataType, r.get(i, st(i).dataType)))
+          .mkString("{", ",", "}")
+      case (ArrayType(et, _), a: ArrayData) =>
+        a.toSeq[Any](et).map(canon(et, _)).mkString("[", ",", "]")
+      case (_, b: Array[Byte]) => b.map(x => f"$x%02x").mkString("0x", "", "")
+      case (_, x) => s"${x.getClass.getSimpleName}:$x"
+    }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    def rowsOf(rs: Seq[Row]): Seq[String] = rs.map(r => canon(schema, toCatalyst(r)))
+    val want = rowsOf(frame().collect().toSeq)
+    assert(want.size == rows.size)
+    assert(rowsOf(load().collect().toSeq) == want)
+    val resp = ODataBatchClient.pull(ODataHttpServer.endpoint, ODataHttpServer.user,
+      ODataHttpServer.pass, Seq(ODataBatchClient.SubRequest("t", entity)))
+    assert(rowsOf(ODataBatchClient.rows(schema, resp("t"))) == want)
+  }
+
   test("a TIMESTAMP before 1582 goes out as the stored instant and round-trips a pushed filter") {
     registered
     // a plain HTTP GET, as any OData client makes it

@@ -32,9 +32,8 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+def connect(sf_dir: str):
+    """A DuckDB connection with one view per sf table."""
     con = duckdb.connect()
     # Bounded footprint for the long-lived comparator connection: with the
     # default (80% of RAM) limit and 32 threads, the heavy unrolled-vector
@@ -48,6 +47,13 @@ def main():
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def main():
+    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
+    con = connect(sf_dir)
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
 
@@ -70,6 +76,11 @@ def main():
             ref = con.execute(oracles[name]).df()
         except Exception as e:
             results[name] = f"ORACLE-ERROR: {e}"
+            # a failed query can leave the connection unusable (an aborted
+            # transaction, an exhausted allocator): the next oracle starts
+            # on a fresh one
+            con.close()
+            con = connect(sf_dir)
             continue
         a, b = canon(mine), canon(ref)
         if list(a.columns) != list(b.columns):
