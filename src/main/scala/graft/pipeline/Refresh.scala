@@ -233,7 +233,8 @@ object Refresh {
           result.reports
         case Failure(ex) =>
           Seq(EntityReport(e.entityId.toLowerCase,
-            s"stg_${e.entityId.toLowerCase}", 0L, s"error: ${ex.getMessage}"))
+            s"stg_${e.entityId.toLowerCase}", 0L,
+            s"error: ${ex.getClass.getSimpleName}: ${ex.getMessage}"))
       }
     }
 }

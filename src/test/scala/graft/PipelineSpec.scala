@@ -240,7 +240,9 @@ class PipelineSpec extends AnyFunSuite {
       runId = "RUNF", runTs = "2026-01-01 00:00:00")
     // the shared extraction is released whatever failed
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(persisted).isEmpty)
-    assert(reports.size == 1 && reports.head.status.startsWith("error:"),
+    // the status names the failure's class, then its message
+    assert(reports.size == 1 &&
+      reports.head.status.startsWith("error: ParentNotDirectoryException: "),
       reports.toString)
     (dir, st)
   }

@@ -1,8 +1,23 @@
 #!/bin/bash
 # Direct JVM launcher for graft mains (bypasses sbt startup/lock).
 # usage: run_graft.sh <MainClass> [args...]   env: SPARK_DRIVER_MEM, SPARK_GRAFT_*
+# The classpath holds the same Spark jars as the sbt build: those whose name
+# without its version (build.sbt's pattern) is on project/spark-jars.txt.
 MAIN=$1; shift
-CP=/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+declare -A KEEP
+while read -r name _; do
+  [ -n "$name" ] && KEEP[$name]=1
+done < <(sed 's/#.*//' "$ROOT/project/spark-jars.txt")
+CP=$ROOT/target/scala-2.13/classes
+VERSIONED='^(.+)-([0-9]+\.[A-Za-z0-9_.]*(-[0-9]+)?)(-([A-Za-z].*))?\.jar$'
+for jar in /opt/spark/jars/*.jar; do
+  f=${jar##*/}; key=${f%.jar}
+  if [[ $f =~ $VERSIONED ]]; then
+    key=${BASH_REMATCH[1]}${BASH_REMATCH[5]:+-${BASH_REMATCH[5]}}
+  fi
+  [ -n "${KEEP[$key]}" ] && CP=$CP:$jar
+done
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
   java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
